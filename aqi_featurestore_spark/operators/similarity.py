@@ -194,12 +194,14 @@ def _struct_mats(struct_arr, normalize: bool, has_ex: bool):
     import numpy as np
 
     ids = np.asarray(struct_arr.field("id"), dtype=np.int64)
+    ex = np.asarray(struct_arr.field("ex")) if has_ex else None
+    if not len(ids):  # reshape(0, -1) raises; there is no dim to infer
+        return ids, np.empty((0, 0)), ex
     vecs = struct_arr.field("vec")
     mat = np.asarray(vecs.flatten(), dtype=np.float64).reshape(len(ids), -1)
-    if normalize and len(ids):
+    if normalize:
         nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
         mat = mat / nrm[:, None]
-    ex = np.asarray(struct_arr.field("ex")) if has_ex else None
     return ids, mat, ex
 
 

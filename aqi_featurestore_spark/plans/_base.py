@@ -19,8 +19,13 @@ Semantics pinned here (SURVEY.md §7 hard parts):
 
 from __future__ import annotations
 
+import atexit
+import os
+import shutil
+import tempfile
+import threading
 from datetime import timedelta
-from typing import Callable
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -56,6 +61,7 @@ from aqi_featurestore_spark.operators.snapshot import latest_per_key, online_loo
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
+T = TypeVar("T")
 
 
 def _q(name: str, sql: str | None = None):
@@ -75,49 +81,27 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_table(spark, sf_dir, name)
 
 
-#: Session-shared connected-components labels over the exact n-gram
-#: Jaccard near-dup graph (k=3, threshold 0.2) — round-12: three registry
-#: queries (dedup_resolve_docs, dedup_cluster_sizes, dedup_keep_best)
-#: each re-ran the identical detector + label-propagation loop
-#: (~15-18 Spark jobs) on every construction; the labels are
-#: deterministic and every consumer's oracle re-derives them with a
-#: recursive CTE from the raw corpus, so sharing changes nothing but the
-#: job count (the `_serving_fits` session-cache discipline applied to
-#: the dedup-resolution family).
-_NGRAM_CC: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def ngram_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, group_id) for every document in the k=3/0.2 n-gram
-    Jaccard near-dup graph — localCheckpoint-backed, built once per
-    (app, corpus path, content fingerprint)."""
-    import os
-
+    Jaccard near-dup graph — localCheckpoint-backed, shared by
+    dedup_resolve_docs, dedup_cluster_sizes and dedup_keep_best."""
     from aqi_featurestore_spark.operators.dedup_groups import (
         connected_components,
     )
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(spark, sf_dir),
-    )
-    if key not in _NGRAM_CC:
+    def build():
         d = _read(spark, sf_dir, "documents")
         pairs = ngram_jaccard_pairs(d, k=3, threshold=0.2, broadcast=True)
-        _NGRAM_CC[key] = connected_components(pairs.select("d1", "d2"))
-    return _NGRAM_CC[key]
+        return connected_components(pairs.select("d1", "d2"))
+
+    return session_artifact(spark, "ngram_cc", sf_dir, build)
 
 
 def corpus_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     """Cheap content snapshot of a corpus directory: md5 over the
     sorted (path, size, mtime) data-file listing — driver-side metadata
-    RPCs only, never row data. Every session fit cache folds this into
-    its key (round-7 ADVICE/verdict ask: keys were (applicationId,
-    path) only, so data rewritten at the same path within one session —
-    exactly what the engine's own streaming ingest jobs do — would
-    silently serve a stale fit). A changed file set, size, or mtime is
-    a cache MISS; an unchanged immutable test corpus still hits."""
+    RPCs only, never row data. A changed file set, size, or mtime gives
+    a new fingerprint; an unchanged corpus keeps its fingerprint."""
     import hashlib
 
     from aqi_featurestore_spark.sources import fs
@@ -126,6 +110,56 @@ def corpus_fingerprint(spark: SparkSession, sf_dir: str) -> str:
     for p, sz, mt in sorted(fs.list_file_stats(spark, sf_dir)):
         h.update(f"{p}|{sz}|{mt}\n".encode())
     return h.hexdigest()[:16]
+
+
+_ARTIFACTS: dict[tuple, object] = {}
+_ARTIFACT_LOCKS: dict[tuple, threading.Lock] = {}
+_ARTIFACT_LOCKS_GUARD = threading.Lock()
+
+
+def session_artifact(
+    spark: SparkSession, kind: str, sf_dir: str, build: Callable[[], T], *extra
+) -> T:
+    """``build()``'s result, built once per Spark application and corpus
+    content and shared by every later caller.
+
+    The registry queries of one family share deterministic work: k-means
+    and PQ fits, the model trajectory, the persisted ANN / impact / model
+    stores, checkpointed audit legs. Results are bit-identical to a
+    per-query rebuild (each oracle re-derives them from the raw corpus),
+    so sharing changes only how often the work is paid.
+
+    The key is (applicationId, absolute ``sf_dir``,
+    :func:`corpus_fingerprint`, ``kind``, ``*extra``). The fingerprint
+    makes a corpus rewritten in place a miss instead of a stale hit; a
+    hit lists the corpus once and runs no Spark job.
+
+    Each key has its own lock, held across the build, so concurrent
+    callers on one key build once. A build may ask for an artifact on
+    another key (the ANN store builds over the serving fits) without
+    deadlock. A build that raises caches nothing; the next call retries.
+    """
+    key = (
+        spark.sparkContext.applicationId,
+        os.path.abspath(sf_dir),
+        corpus_fingerprint(spark, sf_dir),
+        kind,
+        *extra,
+    )
+    with _ARTIFACT_LOCKS_GUARD:
+        lock = _ARTIFACT_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        if key not in _ARTIFACTS:
+            _ARTIFACTS[key] = build()
+        return _ARTIFACTS[key]
+
+
+def session_dir(prefix: str) -> str:
+    """A fresh temp directory, removed when the interpreter exits (the
+    stores in it are rebuildable caches, never the source of truth)."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
 
 # ---------------------------------------------------------------------------

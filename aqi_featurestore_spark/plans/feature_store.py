@@ -53,6 +53,7 @@ from aqi_featurestore_spark.plans._base import (  # noqa: F401
     _TOKENS,
     _q,
     _read,
+    session_dir,
 )
 
 
@@ -1030,14 +1031,12 @@ def q_versioned_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pins (a) per-view TTL masking — v2's short TTL NULLs rows v1 still
     fills — and (b) the first-view-wins collision rule: the requested
     v2:aqi must NOT override v1's values (oracle emits v1 aqi only)."""
-    import tempfile
-
     from aqi_featurestore_spark.registry import FeatureView
     from aqi_featurestore_spark.store import FeatureStore
 
     events = _read(spark, sf_dir, "events")
     feat = pipeline.derive_features(events)
-    store = FeatureStore(spark, tempfile.mkdtemp(prefix="aqi_fs_q_"))
+    store = FeatureStore(spark, session_dir("aqi_fs_q_"))
     store.apply(
         FeatureView(
             name="aqi_v1",

@@ -65,6 +65,8 @@ from aqi_featurestore_spark.plans._base import (  # noqa: F401
     _TOKENS,
     _q,
     _read,
+    session_artifact,
+    session_dir,
 )
 
 
@@ -72,32 +74,14 @@ from aqi_featurestore_spark.plans._base import (  # noqa: F401
 # ---------------------------------------------------------------------------
 
 
-#: Serving-fit session cache (the model-curation trajectory-cache
-#: discipline applied to the ANN serving family): every serving-snapshot
-#: query of a session — serve, filtered, probe sweep, balance audit, and
-#: the recall table's ivfpq_km leg — shares ONE k-means coarse fit
-#: (k=16, 3 Lloyd rounds) and ONE set of PQ codebooks (4x16, 1 round)
-#: over the same corpus. The fits are deterministic, so results are
-#: bit-identical to per-query refits (the oracles re-derive them from
-#: scratch either way); what changes is that a session stops paying the
-#: identical fit aggregates once per query. Keyed by corpus fingerprint
-#: (listing + sizes + mtimes) so a mid-session data rewrite misses the
-#: cache instead of serving a stale fit (round-7 ADVICE).
-_SERVING_FITS: dict[tuple[str, str, str], tuple[list, list]] = {}
-
-
 def _serving_fits(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
-    import os
-
+    """(coarse centroids, PQ books) shared by every serving-snapshot
+    query — serve, filtered, probe sweep, balance audit, and the recall
+    table's ivfpq_km leg: ONE k-means coarse fit (k=16, 3 Lloyd rounds)
+    and ONE set of PQ codebooks (4x16, 1 round) per session."""
     from aqi_featurestore_spark.operators.clustering import kmeans_fit
-    from aqi_featurestore_spark.plans._base import corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(spark, sf_dir),
-    )
-    if key not in _SERVING_FITS:
+    def build():
         e = _read(spark, sf_dir, "embeddings")
         cents = kmeans_fit(
             e, k=16, iters=3, id_col="vec_id", vec_col="embedding"
@@ -106,8 +90,9 @@ def _serving_fits(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
             e, id_col="vec_id", vec_col="embedding",
             n_subspaces=4, n_codes=16, iters=1, dim=64,
         )
-        _SERVING_FITS[key] = (cents, books)
-    return _SERVING_FITS[key]
+        return cents, books
+
+    return session_artifact(spark, "serving_fits", sf_dir, build)
 
 
 @_q(
@@ -2258,32 +2243,21 @@ _HY_CODES = 16
 _HY_PROBE = 8
 _HY_RESCORE = 200
 
-#: session cache of the hybrid dense leg's PQ books (8 subspaces —
-#: the coarse centroids are shared with `_serving_fits`)
-_SERVING_FITS8: dict[tuple[str, str, str], list] = {}
-
 
 def _serving_fits8(spark: SparkSession, sf_dir: str) -> tuple[list, list]:
     """(coarse centroids, 8-subspace PQ books) for the hybrid serve
     queries — one extra books fit per session, reusing the session's
-    k-means coarse fit (same build-once discipline as `_serving_fits`)."""
-    import os
+    k-means coarse fit."""
 
-    from aqi_featurestore_spark.plans._base import corpus_fingerprint
-
-    cents, _books4 = _serving_fits(spark, sf_dir)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(spark, sf_dir),
-    )
-    if key not in _SERVING_FITS8:
+    def build():
+        cents, _books4 = _serving_fits(spark, sf_dir)
         e = _read(spark, sf_dir, "embeddings")
-        _SERVING_FITS8[key] = pq_fit_books(
+        return cents, pq_fit_books(
             e, id_col="vec_id", vec_col="embedding",
             n_subspaces=_HY_SUB, n_codes=_HY_CODES, iters=1, dim=64,
         )
-    return cents, _SERVING_FITS8[key]
+
+    return session_artifact(spark, "serving_fits8", sf_dir, build)
 
 
 def _sparse_leg_ctes(k: int = _RRF_LEG_K) -> str:
@@ -2326,155 +2300,72 @@ sl_tk AS (
     FROM sl_sc) t WHERE rk <= {k})"""
 
 
-#: Session registry of persisted ANN index stores (round-11
-#: optimization — the `_impact_store` / round-9-ask-#1 discipline
-#: applied to the DENSE leg): the round-10 verdict already named the
-#: in-query IVFADC build an audit fixture ("the production serving
-#: path for the dense leg has been ann_index_serve (persisted index)
-#: since round 6"), yet every serve/sweep query still re-encoded the
-#: corpus per construction. Now each (corpus, config) builds ONCE per
-#: session through the REAL `write_ann_index` lifecycle (partitioned
-#: parquet + model tables, the same store the pytest suite pins for
-#: partition pruning and round-trip exactness) and every serving query
-#: READS it back — `ann_index_topk` over the store is hash-proven
-#: bit-identical to the inline `cosine_topk_ivfpq` chain by the
-#: ann_index_serve oracle, so results are unchanged while the
-#: per-query corpus re-encode disappears (guide §1.2: don't recompute
-#: what a store already holds). Two flavors:
-#:
-#: - ``"serve4"``: the serving default (4x16 codes, n_probe 4,
-#:   ``label`` attr column for filtered ANN) — ann_index_serve,
-#:   ann_filtered_topk, ann_probe_sweep, hybrid_fusion_sweep (pinned
-#:   round-10 config), the 4x16 legs of hybrid_codebook_sweep, and
-#:   ann_recall_methods' ivfpq_km row.
-#: - ``"hy8"``: the round-11 ADOPTED hybrid operating point (8x16,
-#:   n_probe 8) — `_hy_dense_leg` (all three hybrid serve queries) and
-#:   the 8x16 legs of hybrid_codebook_sweep.
-#:
-#: Keyed like every session store (app, corpus path, content
-#: fingerprint): a mid-session corpus rewrite misses the cache.
-_ANN_STORES: dict[tuple[str, str, str, str], str] = {}
-
-#: Build lock for the check-then-build above (round-11 ADVICE).
-import threading as _threading  # noqa: E402
-
-_ANN_STORES_LOCK = _threading.Lock()
-
-
 def _ann_store(spark: SparkSession, sf_dir: str, flavor: str) -> str:
-    import os
-    import tempfile
+    """Path of the session's persisted ANN index store, built through
+    the real `write_ann_index` lifecycle so every serving query READS
+    the store instead of re-encoding the corpus (`ann_index_topk` over
+    the store is hash-proven bit-identical to the inline
+    `cosine_topk_ivfpq` chain by the ann_index_serve oracle). Flavors:
 
+    - ``"serve4"``: the serving default (4x16 codes, n_probe 4,
+      ``label`` attr column for filtered ANN) — ann_index_serve,
+      ann_filtered_topk, ann_probe_sweep, hybrid_fusion_sweep, the 4x16
+      legs of hybrid_codebook_sweep, and ann_recall_methods' ivfpq_km row.
+    - ``"hy8"``: the hybrid operating point (8x16, n_probe 8) —
+      `_hy_dense_leg` and the 8x16 legs of hybrid_codebook_sweep.
+    """
     from aqi_featurestore_spark.operators.ann_index import (
         build_ann_index,
         write_ann_index,
     )
-    from aqi_featurestore_spark.plans._base import corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(spark, sf_dir),
-        flavor,
-    )
-    # Round-11 ADVICE: guard the check-then-build with a lock so two
-    # threads constructing serving queries concurrently cannot
-    # double-build (and leak a tempdir); one tempdir per (corpus
-    # fingerprint, flavor) still accumulates until process exit under
-    # repeated mid-session corpus rewrites — acceptable for a session
-    # cache whose dirs are atexit-reclaimed.
-    with _ANN_STORES_LOCK:
-        if key not in _ANN_STORES:
-            import atexit
-            import shutil
+    def build():
+        e = _read(spark, sf_dir, "embeddings")
+        if flavor == "serve4":
+            cents, books = _serving_fits(spark, sf_dir)
+            index, model = build_ann_index(
+                e, n_lists=16, n_probe=4, n_subspaces=4, n_codes=16,
+                attr_cols=("label",), coarse="kmeans", coarse_iters=3,
+                coarse_cents=cents, books=books,
+            )
+        elif flavor == "hy8":
+            cents, books8 = _serving_fits8(spark, sf_dir)
+            index, model = build_ann_index(
+                e, n_lists=16, n_probe=_HY_PROBE, n_subspaces=_HY_SUB,
+                n_codes=_HY_CODES, coarse="kmeans", coarse_iters=3,
+                coarse_cents=cents, books=books8,
+            )
+        else:
+            raise ValueError(f"unknown ANN store flavor {flavor!r}")
+        root = session_dir(f"ann-index-{flavor}-")
+        write_ann_index(index, model, root, mode="create")
+        return root
 
-            root = tempfile.mkdtemp(prefix=f"ann-index-{flavor}-")
-            atexit.register(shutil.rmtree, root, ignore_errors=True)
-            e = _read(spark, sf_dir, "embeddings")
-            if flavor == "serve4":
-                cents, books = _serving_fits(spark, sf_dir)
-                index, model = build_ann_index(
-                    e, n_lists=16, n_probe=4, n_subspaces=4, n_codes=16,
-                    attr_cols=("label",), coarse="kmeans", coarse_iters=3,
-                    coarse_cents=cents, books=books,
-                )
-            elif flavor == "hy8":
-                cents, books8 = _serving_fits8(spark, sf_dir)
-                index, model = build_ann_index(
-                    e, n_lists=16, n_probe=_HY_PROBE, n_subspaces=_HY_SUB,
-                    n_codes=_HY_CODES, coarse="kmeans", coarse_iters=3,
-                    coarse_cents=cents, books=books8,
-                )
-            else:
-                raise ValueError(f"unknown ANN store flavor {flavor!r}")
-            write_ann_index(index, model, root, mode="create")
-            _ANN_STORES[key] = root
-    return _ANN_STORES[key]
-
-
-#: (appId, store path) -> (index_df, model): `read_ann_index` collects
-#: the two model tables (n_lists + S x n_codes rows) — round-12: cache
-#: the read per session store so each serve-query CONSTRUCTION stops
-#: re-running the same two collect jobs (the store path already encodes
-#: app/corpus-fingerprint/flavor, so staleness is governed by the same
-#: key as the store itself).
-_ANN_STORE_READS: dict[tuple[str, str], tuple] = {}
+    return session_artifact(spark, "ann_store", sf_dir, build, flavor)
 
 
 def _ann_store_read(spark: SparkSession, sf_dir: str, flavor: str):
     """(index_df, model) served from the session ANN store — the dense
-    twin of `_sparse_query_topk`'s weights read."""
+    twin of `_sparse_query_topk`'s weights read. `read_ann_index`
+    collects the two model tables, so each serve-query construction
+    shares one read instead of re-running those two collect jobs."""
     from aqi_featurestore_spark.operators.ann_index import read_ann_index
 
-    path = _ann_store(spark, sf_dir, flavor)
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _ANN_STORE_READS:
-        _ANN_STORE_READS[key] = read_ann_index(spark, path)
-    return _ANN_STORE_READS[key]
-
-
-#: Session registry of persisted impact-index stores, keyed like the
-#: serving-fit cache (app, corpus path, content fingerprint) so a
-#: mid-session corpus rewrite builds a fresh index instead of serving a
-#: stale one. The value is the store PATH — the index lives on disk
-#: (written once by write_impact_partial + refresh_impact_weights into
-#: a session temp dir), and every sparse-leg query READS the published
-#: weights snapshot back: a real write/read lifecycle, not an
-#: in-session localCheckpoint stand-in.
-_IMPACT_STORES: dict[tuple[str, str, str], str] = {}
-
-#: Session-shared AUDIT legs (round-12, round-11 verdict asks #3/#6):
-#: the sweep/recall family's ground-truth inputs — the sparse lexical
-#: top-k, the exact fused top-5, and the brute-force exact top-10 — are
-#: bit-identical deterministic computations that hybrid_fusion_recall,
-#: hybrid_fusion_sweep, hybrid_codebook_sweep, ann_probe_sweep and
-#: ann_recall_methods each rebuilt into their own localCheckpoint on
-#: EVERY construction. They now materialize once per (app, corpus path,
-#: content fingerprint) — the `_serving_fits`/`_ann_store` session-cache
-#: discipline applied to the audit legs the verdict named. Results are
-#: unchanged (the oracles re-derive every leg from the raw corpus, so
-#: each hash MATCH proves shared == per-query); what changes is that a
-#: session stops paying the identical audit jobs once per construction.
-#: The PRODUCTION serve plans (hybrid_rrf_fusion_ann, sparse_topk_serve,
-#: hybrid_rerank_serve) deliberately do NOT read these — their plans
-#: stay the real store-served lookup paths, plan-pinned.
-_AUDIT_LEGS: dict[tuple[str, str, str, str], DataFrame] = {}
-
-
-def _audit_leg(spark: SparkSession, sf_dir: str, tag: str, build) -> DataFrame:
-    import os
-
-    from aqi_featurestore_spark.plans._base import corpus_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(spark, sf_dir),
-        tag,
+    return session_artifact(
+        spark, "ann_store_read", sf_dir,
+        lambda: read_ann_index(spark, _ann_store(spark, sf_dir, flavor)),
+        flavor,
     )
-    if key not in _AUDIT_LEGS:
-        _AUDIT_LEGS[key] = build().localCheckpoint()
-    return _AUDIT_LEGS[key]
+
+
+# The sweep/recall family's ground-truth inputs (the sparse lexical
+# top-k, the exact fused top-5 and the brute-force exact top-10) are
+# checkpointed once per session and shared by hybrid_fusion_recall,
+# hybrid_fusion_sweep, hybrid_codebook_sweep, ann_probe_sweep and
+# ann_recall_methods. The PRODUCTION serve plans (hybrid_rrf_fusion_ann,
+# sparse_topk_serve, hybrid_rerank_serve) deliberately do NOT read
+# these — their plans stay the real store-served lookup paths,
+# plan-pinned.
 
 
 def _shared_sl5(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2482,8 +2373,9 @@ def _shared_sl5(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed once per session (it is already SERVED from the
     persisted impact store; this dedups the per-construction
     posting-join materialization)."""
-    return _audit_leg(
-        spark, sf_dir, "sl5", lambda: _sparse_query_topk(spark, sf_dir)
+    return session_artifact(
+        spark, "audit_sl5", sf_dir,
+        lambda: _sparse_query_topk(spark, sf_dir).localCheckpoint(),
     )
 
 
@@ -2498,11 +2390,10 @@ def _shared_fx5(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex = cosine_topk_bruteforce(q, e, k=_RRF_LEG_K).select(
             "q_id", "n_id", F.col("rk").cast("int").alias("rk_dense")
         )
-        return rrf_fuse(ex, _shared_sl5(spark, sf_dir), "rk_dense", "rk_lex").select(
-            "q_id", "n_id"
-        )
+        fused = rrf_fuse(ex, _shared_sl5(spark, sf_dir), "rk_dense", "rk_lex")
+        return fused.select("q_id", "n_id").localCheckpoint()
 
-    return _audit_leg(spark, sf_dir, "fx5", build)
+    return session_artifact(spark, "audit_fx5", sf_dir, build)
 
 
 def _shared_exact10(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2512,53 +2403,36 @@ def _shared_exact10(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         e = _read(spark, sf_dir, "embeddings")
         q = e.where(F.col("vec_id") % 50 == 0)
-        return cosine_topk_bruteforce(q, e, k=10).select("q_id", "n_id")
+        exact = cosine_topk_bruteforce(q, e, k=10).select("q_id", "n_id")
+        return exact.localCheckpoint()
 
-    return _audit_leg(spark, sf_dir, "exact10", build)
+    return session_artifact(spark, "audit_exact10", sf_dir, build)
 
 
 def _impact_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once path of the session's persisted sparse impact index
-    over the documents corpus (round-9 verdict ask #1: the sparse leg
-    gets the `ann_index_serve` persistence discipline the dense leg got
-    in round 6). First call per corpus pays the tokenize/tf/df build
-    and publishes the weights snapshot; every later sparse-leg query —
+    """Path of the session's persisted sparse impact index over the
+    documents corpus. The first call pays the tokenize/tf/df build and
+    publishes the weights snapshot; every later sparse-leg query —
     `sparse_topk_serve`, all hybrid fusions, the rerank serve — reads
     the snapshot from parquet, so their serve plans contain ZERO
-    tokenization/df jobs (plan-pinned) and the round-9 "rebuild paid
-    three times per session" cost is gone."""
-    import os
-    import tempfile
-
+    tokenization/df jobs (plan-pinned)."""
     from aqi_featurestore_spark.operators.impact_index import (
         refresh_impact_weights,
         write_impact_partial,
     )
-    from aqi_featurestore_spark.plans._base import corpus_fingerprint
 
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(sf_dir),
-        corpus_fingerprint(spark, sf_dir),
-    )
-    if key not in _IMPACT_STORES:
-        import atexit
-        import shutil
-
-        root = tempfile.mkdtemp(prefix="impact-index-")
-        # round-10 verdict nit: session temp stores must not accrete
-        # across a long-lived interpreter — reclaim at exit (best-effort;
-        # the store is a rebuildable cache, never the source of truth)
-        atexit.register(shutil.rmtree, root, ignore_errors=True)
+    def build():
+        root = session_dir("impact-index-")
         docs = _read(spark, sf_dir, "documents")
         write_impact_partial(docs, root, epoch=1)
         # count_weights=False: the build discards the stats dict, so the
-        # published-snapshot read-back count is a wasted job (round-12)
+        # published-snapshot read-back count is a wasted job
         refresh_impact_weights(
             spark, root, df_cap=_SL_DF_CAP, count_weights=False
         )
-        _IMPACT_STORES[key] = root
-    return _IMPACT_STORES[key]
+        return root
+
+    return session_artifact(spark, "impact_store", sf_dir, build)
 
 
 def _sparse_query_topk(

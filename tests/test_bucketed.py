@@ -9,7 +9,7 @@ from aqi_featurestore_spark.sources.bucketed import read_bucketed, write_buckete
 
 
 def test_bucketed_join_has_no_exchange(spark):
-    # tables land in the default warehouse dir (gitignored); dropped below
+    # tables land in the session fixture's per-run warehouse; dropped below
     left = spark.range(2000).select(
         (F.col("id") % 97).alias("entity_id"), F.col("id").alias("event_id"),
         (F.col("id") % 13).cast("double").alias("val"),

@@ -12,6 +12,7 @@ from __future__ import annotations
 import math
 import random
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -119,6 +120,30 @@ def test_semantic_dedup_drops_planted_duplicate(spark):
     for r in rows:
         if r["keep"] == 1:
             assert r["dup_of"] is None
+
+
+def test_semantic_dedup_zero_vectors_are_never_duplicates(spark, tmp_path):
+    """A zero-norm vector normalizes to NaN, so every cosine it takes
+    part in is NaN; NaN never reaches tau, so it neither is dropped nor
+    causes a drop."""
+    import pyarrow.parquet as pq
+
+    from aqi_featurestore_spark.plans.clustering import q_semantic_dedup
+
+    rng = random.Random(5)
+    vecs = [[rng.uniform(-1, 1) for _ in range(64)] for _ in range(200)]
+    vecs[10] = vecs[11] = [0.0] * 64
+    t = pa.table({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32())),
+    })
+    pq.write_table(t, tmp_path / "embeddings.parquet")
+
+    rows = {r["vec_id"]: r for r in q_semantic_dedup(spark, str(tmp_path)).collect()}
+    assert len(rows) == t.num_rows
+    for vid in (10, 11):
+        assert rows[vid]["keep"] == 1 and rows[vid]["dup_of"] is None
+    assert not {r["dup_of"] for r in rows.values()} & {10, 11}
 
 
 def test_kmeans_assignment_works_in_streaming(spark, tmp_path):

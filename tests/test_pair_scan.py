@@ -101,3 +101,17 @@ def test_topk_norm_col_hook(vectors):
         vectors.where(F.col("vec_id") % 10 == 0), vectors, k=5
     )
     assert _canon(with_hook) == _canon(without)
+
+
+@pytest.mark.parametrize("empty_side", ["queries", "corpus"])
+def test_topk_empty_side_returns_no_rows(vectors, empty_side):
+    """An empty query set or an empty corpus scans zero pairs."""
+    empty = vectors.where(F.lit(False))
+    q, c = (empty, vectors) if empty_side == "queries" else (vectors, empty)
+    assert cosine_topk_bruteforce(q, c, k=5).count() == 0
+    assert cosine_topk_bruteforce(q, c, k=5, exclude_same="label").count() == 0
+
+
+def test_pairs_empty_input_returns_no_rows(vectors):
+    """No vectors: the streamed and the packed side are both empty."""
+    assert embedding_cosine_pairs(vectors.where(F.lit(False))).count() == 0
