@@ -4,7 +4,7 @@
 feature derivation -> point-in-time join -> lag features) at sf0.001.
 ``queries()`` / ``oracle_sql()`` expose every implemented operator from
 SURVEY.md §2 with its DuckDB-equivalent SQL; see
-``aqi_featurestore_spark/plans/queries.py`` for the registry.
+``aqi_featurestore_spark/plans/__init__.py`` for the registry.
 """
 
 from __future__ import annotations

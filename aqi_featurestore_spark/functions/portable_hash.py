@@ -29,9 +29,8 @@ both the Spark plan and the oracle SQL — no RNG needs to be
 reproduced inside either engine.
 
 At 100 TB the md5 path costs ONE md5 per shingle/token plus cheap
-integer ops — comparable to (for MinHash, cheaper than) the previous
-64 xxhash64 calls per shingle. ``xxhash64`` remains available via the
-``scheme`` parameters on the operators for clusters that prefer it.
+integer ops — comparable to (for MinHash, cheaper than) 64 xxhash64
+calls per shingle.
 """
 
 from __future__ import annotations
@@ -110,13 +109,6 @@ def duck_hex_int(col: str, start: int, n: int) -> str:
         for i in range(n)
     )
     return f"({terms})"
-
-
-def duck_md5_int32(col: str) -> str:
-    """SQL equivalent of md5_int32 over an expression yielding VARCHAR.
-    NOTE: evaluates md5 eight times — bind ``md5(x)`` to a column in a
-    CTE first and pass that column name."""
-    return duck_hex_int(f"md5({col})", 1, 8)
 
 
 def duck_md5_int63(h_col: str) -> str:

@@ -16,7 +16,7 @@ Convention decisions (SURVEY.md §7 hard parts):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -72,11 +72,6 @@ def next_hour_features(hour: Column | str, day: Column | str, dow: Column | str)
         "next_day": F.when(wraps, d + 1).otherwise(d),
         "next_dayOfWeek": F.when(wraps, F.pmod(w, F.lit(7)) + 1).otherwise(w),
     }
-
-
-def with_time_features(df: DataFrame, ts: str = "feature_timestamp") -> DataFrame:
-    """Apply the full derivation in one projection."""
-    return df.withColumns(time_feature_columns(ts))
 
 
 DATE_IN_TEXT_PATTERN = r"(\d{1,2}/\d{1,2}/\d{4})"

@@ -549,11 +549,7 @@ def read_ann_index(
     ``as_of`` pins the index to ``version <= as_of`` (time-travel: a
     serving incident replays against the exact snapshot a query saw);
     a pin below the vacuum retention floor RAISES — that history was
-    compacted and resolving it would silently return the base snapshot.
-
-    Legacy format (pre-round-7: coarse table without a ``mode`` column)
-    reads back under seeded-int64 semantics — the format it was written
-    with — instead of failing on a missing field (round-7 ADVICE)."""
+    compacted and resolving it would silently return the base snapshot."""
     if as_of is not None:
         floor = index_retention_floor(spark, path)
         if floor is not None and int(as_of) < floor:
@@ -564,11 +560,8 @@ def read_ann_index(
     index = spark.read.parquet(f"{path}/index")
     if as_of is not None:
         index = index.where(F.col("version") <= int(as_of))
-    coarse_df = spark.read.parquet(f"{path}/coarse")
-    crows = coarse_df.collect()
-    mode = (
-        crows[0]["mode"] if "mode" in coarse_df.columns else "seeded"
-    )
+    crows = spark.read.parquet(f"{path}/coarse").collect()
+    mode = crows[0]["mode"]
     cent = {r["list_id"]: list(r["cent"]) for r in crows}
     cent_sorted = [cent[i] for i in sorted(cent)]
     book_rows = spark.read.parquet(f"{path}/books").collect()

@@ -59,6 +59,8 @@ def connected_components(
     """
     if method not in ("label", "doubling"):
         raise ValueError(f"unknown connected-components method {method!r}")
+    if max_iter < 1:
+        raise ValueError(f"connected_components: max_iter must be >= 1, got {max_iter}")
     edges = (
         pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))

@@ -103,22 +103,9 @@ def _retention_path(path: str) -> str:
     return f"{path}/retention"
 
 
-def _is_v2_layout(spark: SparkSession, path: str) -> bool:
-    from aqi_featurestore_spark.sources import fs
-
-    return fs.exists(spark, _weights_path(path))
-
-
 def _read_weights(spark: SparkSession, path: str) -> DataFrame:
-    """Weights rows ``(term_id, w_micro, version, dim)``. Legacy stores
-    (pre-round-8: parquet directly at ``path``, no dim column) read
-    back with ``dim`` NULL — resolution still works, the mixed-dim
-    guard just has nothing to check (ADVICE migration-path rule: old
-    data keeps its old semantics instead of failing opaquely)."""
-    if _is_v2_layout(spark, path):
-        return spark.read.parquet(_weights_path(path))
-    legacy = spark.read.parquet(path)
-    return legacy.withColumn("dim", F.lit(None).cast("int"))
+    """Weights rows ``(term_id, w_micro, version, dim)``."""
+    return spark.read.parquet(_weights_path(path))
 
 
 def retention_floor(spark: SparkSession, path: str) -> int | None:
@@ -233,7 +220,7 @@ def read_model(
     rows = current_model(df, as_of=version).collect()
     if not rows:
         raise ValueError(f"no model rows at {path!r} (version<={version})")
-    dims = {int(r["dim"]) for r in rows if r["dim"] is not None}
+    dims = {int(r["dim"]) for r in rows}
     if len(dims) > 1:
         raise ValueError(
             f"model at {path!r} resolves across versions with different "
@@ -241,7 +228,7 @@ def read_model(
             "declared dim; a re-dimensioned model belongs at a new path"
         )
     terms = {int(r["term_id"]): int(r["w_micro"]) for r in rows}
-    dim = dims.pop() if dims else max(terms)
+    dim = dims.pop()
     if max(terms) != dim:
         raise ValueError(
             f"model at {path!r} declares dim={dim} but resolves term_ids "
@@ -277,12 +264,10 @@ def list_models(spark: SparkSession, path: str) -> DataFrame:
     # weights first), so the weights side is the authority on what
     # exists; meta is versions-sized -> broadcast
     listing = versions.join(
-        F.broadcast(meta.withColumnRenamed("dim", "meta_dim")),
-        ["version"],
-        "left",
+        F.broadcast(meta.drop("dim")), ["version"], "left"
     ).select(
         "version",
-        F.coalesce("dim", "meta_dim").alias("dim"),
+        "dim",
         "n_train",
         "gd_rounds",
         "lr_num",
@@ -336,11 +321,6 @@ def vacuum_model_registry(
 
     if keep_versions < 1:
         raise ValueError("vacuum_model_registry: keep_versions must be >= 1")
-    if not _is_v2_layout(spark, path):
-        raise ValueError(
-            f"vacuum_model_registry: {path!r} is a legacy (pre-dim) store; "
-            "re-publish under the current layout before vacuuming"
-        )
     wpath = _weights_path(path)
     weights = spark.read.parquet(wpath)
     versions = sorted(

@@ -10,10 +10,11 @@ document bodies:
   shingle hash, and common-shingle skew is what AQE's skew-join splitting
   handles.
 - **MinHash signatures + LSH banding** (approximate Jaccard): k
-  hash-permutations approximated by xxhash64(shingle, salt_i); signature =
-  per-doc min per salt. Banding b x r turns "Jaccard >= t" into "some band
-  equal", so candidate generation is an equi-join on (band, band_hash) —
-  no pairwise scan.
+  hash-permutations approximated by an affine universal family over one
+  md5-derived shingle hash; signature = per-doc min per permutation.
+  Banding b x r turns "Jaccard >= t" into "some band equal", so
+  candidate generation is an equi-join on (band, band_hash) — no
+  pairwise scan.
 - **SimHash** (approximate cosine over token sets): 64-bit signature from
   per-bit weighted majority of token hashes; near-dups = signatures within
   small Hamming distance, found by exact-match on 16-bit bands (any
@@ -31,20 +32,14 @@ from aqi_featurestore_spark.functions import portable_hash as ph
 from aqi_featurestore_spark.functions.text import word_shingles
 
 
-def _spread(df: DataFrame, enabled: bool = True) -> DataFrame:
+def _spread(df: DataFrame) -> DataFrame:
     """Repartition a narrow input up to cluster parallelism before
     expensive per-row work (shingle explode, 64-hash signatures). A small
     single-file scan arrives as ONE partition and would serialize the
     whole pipeline; the extra shuffle moves only the source rows.
 
-    This is a pure plan hint: ``enabled`` comes from the caller (the
-    public operators' ``spread`` kwarg) — probing the actual partition
-    count would force physical planning through the RDD API on every
-    call. Pass ``spread=False`` when the input already arrives well
-    partitioned (a large multi-file scan), where the round-robin shuffle
-    of source rows is wasted work."""
-    if not enabled:
-        return df
+    This is a pure plan hint: probing the actual partition count would
+    force physical planning through the RDD API on every call."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
@@ -70,7 +65,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.2,
     broadcast: bool = False,
-    spread: bool = True,
 ) -> DataFrame:
     """Exact Jaccard similarity over k-word shingle sets for every pair
     sharing at least one shingle. Returns (d1, d2, inter, n1, n2, jaccard)
@@ -86,7 +80,7 @@ def ngram_jaccard_pairs(
     knows the corpus is small says so."""
     small = broadcast
     if small:
-        docs = _spread(docs, spread)
+        docs = _spread(docs)
     sh = _doc_shingles(docs, id_col=id_col, text_col=text_col, k=k)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
@@ -117,7 +111,6 @@ def containment_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.3,
-    spread: bool = True,
 ) -> DataFrame:
     """Asymmetric set-containment near-dup pairs: for every doc pair
     sharing a k-word shingle, ``c1 = inter/n1`` (the fraction of d1's
@@ -136,8 +129,7 @@ def containment_pairs(
     blocking on each doc's rarest shingles (frequency-ascending, the
     same DF-rank machinery) which preserves the containment guarantee
     for the SMALLER side."""
-    sh = _doc_shingles(docs.transform(lambda d: _spread(d, spread)),
-                       id_col=id_col, text_col=text_col, k=k)
+    sh = _doc_shingles(_spread(docs), id_col=id_col, text_col=text_col, k=k)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("n"))
     a, b = sh.alias("a"), sh.alias("b")
     inter = (
@@ -210,7 +202,6 @@ def jaccard_prefix_pairs(
     text_col: str = "text",
     k: int = 3,
     threshold: float = 0.2,
-    spread: bool = True,
 ) -> DataFrame:
     """EXACT n-gram Jaccard pairs (same output as `ngram_jaccard_pairs`)
     via PPJoin-style prefix filtering — the shape that survives when the
@@ -235,9 +226,9 @@ def jaccard_prefix_pairs(
     subtree recompute each; join keys d1/d2 defeat exchange reuse) was
     3x the shingle passes. Lossless: output thresholded on TRUE
     Jaccard."""
-    sh = _doc_shingles(
-        _spread(docs, spread), id_col=id_col, text_col=text_col, k=k
-    ).select(F.col(id_col), F.xxhash64("shingle").alias("h"))
+    sh = _doc_shingles(_spread(docs), id_col=id_col, text_col=text_col, k=k).select(
+        F.col(id_col), F.xxhash64("shingle").alias("h")
+    )
     df_cnt = sh.groupBy("h").agg(F.count("*").alias("cnt"))
     ranked = sh.join(df_cnt, "h")
     lists = ranked.groupBy(id_col).agg(
@@ -294,36 +285,25 @@ def minhash_signatures(
     text_col: str = "text",
     k: int = 3,
     num_hashes: int = 64,
-    scheme: str = "md5",
 ) -> DataFrame:
     """Per-doc MinHash signature as ``sig: array<bigint>[num_hashes]``.
     Documents with no shingles (< k tokens) get no signature row.
 
-    ``scheme="md5"`` (default) approximates the ``num_hashes``
-    permutations with an affine universal family over a 32-bit
-    md5-derived shingle hash: ONE md5 per shingle, then ``num_hashes``
-    exact-integer ``(a*h + b) mod 2^31-1`` ops. Portable — the DuckDB
-    oracle recomputes identical signatures, which is what upgrades the
-    whole MinHash family from rows-only to the hard value-hash gate.
-    ``scheme="xxhash64"`` is the JVM-hash variant (one xxhash64 per
-    (shingle, salt)); same statistics, not reproducible elsewhere."""
+    The ``num_hashes`` permutations are an affine universal family over
+    a 32-bit md5-derived shingle hash: ONE md5 per shingle, then
+    ``num_hashes`` exact-integer ``(a*h + b) mod 2^31-1`` ops. Portable —
+    the DuckDB oracle recomputes identical signatures, which is what
+    upgrades the whole MinHash family from rows-only to the hard
+    value-hash gate."""
     # min() is duplicate-insensitive and partial aggregation merges
     # repeats map-side, so the shingle-dedup exchange is pure overhead.
     sh = _doc_shingles(docs, id_col=id_col, text_col=text_col, k=k, dedup=False)
-    if scheme == "md5":
-        base = (ph.md5_int32("shingle") % F.lit(ph.MERSENNE31)).alias("hb")
-        sh = sh.select(id_col, base)
-        mins = [
-            F.min(ph.affine(F.col("hb"), a, b)).alias(f"h{i}")
-            for i, (a, b) in enumerate(ph.hash_family(num_hashes))
-        ]
-    elif scheme == "xxhash64":
-        mins = [
-            F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown minhash scheme {scheme!r}")
+    base = (ph.md5_int32("shingle") % F.lit(ph.MERSENNE31)).alias("hb")
+    sh = sh.select(id_col, base)
+    mins = [
+        F.min(ph.affine(F.col("hb"), a, b)).alias(f"h{i}")
+        for i, (a, b) in enumerate(ph.hash_family(num_hashes))
+    ]
     sig = sh.groupBy(id_col).agg(*mins)
     return sig.select(id_col, F.array(*[f"h{i}" for i in range(num_hashes)]).alias("sig"))
 
@@ -334,7 +314,6 @@ def _band_buckets(
     id_col: str,
     bands: int,
     rows_per_band: int,
-    scheme: str,
     carry: tuple[str, ...] = (),
 ) -> DataFrame:
     """Explode a signature frame into ``(id, band, bucket)`` rows — the
@@ -350,40 +329,24 @@ def _band_buckets(
     estimate joins key on d1/d2, a different partitioning). Recomputing
     the md5-affine signatures / shingle sets is the dominant cost at any
     scale, so carrying wins."""
-    if scheme == "md5":
-        band_hashes = F.array(
-            *[
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at("sig", b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    ),
-                    1,
-                    16,
-                )
-                for b in range(bands)
-            ]
-        )
-    elif scheme == "xxhash64":
-        band_hashes = F.array(
-            *[
-                F.xxhash64(
-                    F.lit(b),
-                    *[
-                        F.element_at("sig", b * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ],
-                )
-                for b in range(bands)
-            ]
-        )
-    else:
-        raise ValueError(f"unknown banding scheme {scheme!r}")
+    band_hashes = F.array(
+        *[
+            F.substring(
+                F.md5(
+                    F.concat_ws(
+                        "|",
+                        *[
+                            F.element_at("sig", b * rows_per_band + r + 1)
+                            for r in range(rows_per_band)
+                        ],
+                    )
+                ),
+                1,
+                16,
+            )
+            for b in range(bands)
+        ]
+    )
     cols = [F.col(id_col), F.posexplode(band_hashes).alias("band", "bucket")]
     cols.extend(F.col(c) for c in carry)
     return signatures.select(*cols)
@@ -395,18 +358,15 @@ def minhash_lsh_candidates(
     id_col: str = "doc_id",
     bands: int = 16,
     rows_per_band: int = 4,
-    scheme: str = "md5",
 ) -> DataFrame:
     """LSH banding: docs sharing any band bucket become candidate pairs
     (d1 < d2, distinct). Probability a pair with Jaccard j collides:
     1 - (1 - j^r)^b — (16, 4) puts the S-curve threshold near 0.5.
 
-    Bucket key: ``scheme="md5"`` hashes the '|'-joined band values with
-    md5 (portable, 16-char key); ``"xxhash64"`` keeps the 8-byte JVM
-    hash. Either way the bucket join shuffles fixed-width keys only."""
+    Bucket key: md5 of the '|'-joined band values (portable, 16-char
+    key), so the bucket join shuffles fixed-width keys only."""
     buckets = _band_buckets(
-        signatures, id_col=id_col, bands=bands, rows_per_band=rows_per_band,
-        scheme=scheme,
+        signatures, id_col=id_col, bands=bands, rows_per_band=rows_per_band
     )
     a, b_ = buckets.alias("a"), buckets.alias("b")
     return (
@@ -428,7 +388,6 @@ def minhash_lsh_candidates_between(
     id_col: str = "doc_id",
     bands: int = 16,
     rows_per_band: int = 4,
-    scheme: str = "md5",
 ) -> DataFrame:
     """LSH candidates BETWEEN two disjoint signature sets: each new doc
     paired with every corpus doc sharing a band bucket -> ``(d1=new,
@@ -439,7 +398,7 @@ def minhash_lsh_candidates_between(
     are computed once per batch here, but at scale they'd be a stored
     table appended per accepted batch, so each ingest shuffles only the
     new batch's buckets against a bucket-partitioned corpus index."""
-    kw = dict(bands=bands, rows_per_band=rows_per_band, scheme=scheme)
+    kw = dict(bands=bands, rows_per_band=rows_per_band)
     a = _band_buckets(new_sigs, id_col=id_col, **kw).alias("a")
     b = _band_buckets(corpus_sigs, id_col=id_col, **kw).alias("b")
     return (
@@ -482,8 +441,6 @@ def minhash_dedup_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    scheme: str = "md5",
-    spread: bool = True,
 ) -> DataFrame:
     """End-to-end MinHash-LSH near-dup detection: signatures -> banding ->
     candidate pairs -> estimate filter.
@@ -493,19 +450,18 @@ def minhash_dedup_pairs(
     the alternative (re-joining the signature table per side, as
     `minhash_estimated_jaccard` does for externally-supplied pairs)
     recomputes the signature subtree twice and was the whole-query
-    bottleneck (~10x) under the md5-portable scheme."""
+    bottleneck (~10x) with the md5-portable signatures."""
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
-        _spread(docs, spread),
+        _spread(docs),
         id_col=id_col,
         text_col=text_col,
         k=k,
         num_hashes=num_hashes,
-        scheme=scheme,
     )
     buckets = _band_buckets(
         sigs, id_col=id_col, bands=bands, rows_per_band=rows_per_band,
-        scheme=scheme, carry=("sig",),
+        carry=("sig",),
     )
     a, b = buckets.alias("a"), buckets.alias("b")
     cand = (
@@ -540,16 +496,13 @@ def minhash_dedup_pairs(
 SIMHASH_BITS = 64
 
 
-def simhash(
-    text: Column | str, *, bits: int = SIMHASH_BITS, scheme: str = "md5"
-) -> Column:
+def simhash(text: Column | str, *, bits: int = SIMHASH_BITS) -> Column:
     """64-bit SimHash over whitespace tokens: tokens -> 63-bit hash ->
     per-bit +/-1 vote -> sign bits reassembled. Returns bigint (bit 63
     kept zero to stay in two's-complement range).
 
-    ``scheme="md5"`` (default) derives the token hash from md5 hex
-    chars (portable — the DuckDB oracle rebuilds identical fingerprints
-    with exact integer votes); ``"xxhash64"`` uses the JVM hash.
+    The token hash comes from md5 hex chars (portable — the DuckDB
+    oracle rebuilds identical fingerprints with exact integer votes).
 
     The vote stage is an Arrow-batched pandas_udf over the token-hash
     array: one numpy shift/popcount pass per batch. (The pure-expression
@@ -559,12 +512,7 @@ def simhash(
 
     col = F.col(text) if isinstance(text, str) else text
     tokens = F.filter(F.split(F.lower(F.trim(col)), r"\s+"), lambda t: t != "")
-    if scheme == "md5":
-        hashes = F.transform(tokens, lambda t: ph.md5_int63(t))
-    elif scheme == "xxhash64":
-        hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    else:
-        raise ValueError(f"unknown simhash scheme {scheme!r}")
+    hashes = F.transform(tokens, lambda t: ph.md5_int63(t))
 
     shifts = np.arange(bits - 1, dtype=np.int64)
     weights = np.int64(1) << shifts
@@ -590,8 +538,6 @@ def simhash_near_dup_pairs(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    scheme: str = "md5",
-    spread: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with Hamming(simhash) <= max_hamming, found without
     a pairwise scan: split the 64-bit signature into (max_hamming + 1)
@@ -600,8 +546,8 @@ def simhash_near_dup_pairs(
     (band, band_bits)."""
     n_bands = max_hamming + 1
     width = SIMHASH_BITS // n_bands
-    sigs = _spread(docs, spread).select(
-        F.col(id_col), simhash(text_col, scheme=scheme).alias("sig")
+    sigs = _spread(docs).select(
+        F.col(id_col), simhash(text_col).alias("sig")
     )
     bands = F.array(
         *[
@@ -699,7 +645,6 @@ def exact_jaccard_for_pairs(
     text_col: str = "text",
     k: int = 3,
     docs2: DataFrame | None = None,
-    spread: bool = True,
 ) -> DataFrame:
     """Exact k-shingle Jaccard computed ONLY for the given candidate pairs
     (d1, d2) — the verification half of detect-approx -> verify-exact.
@@ -718,7 +663,7 @@ def exact_jaccard_for_pairs(
         # dropDuplicates exchange would be a second, redundant shuffle.
         return (
             _doc_shingles(
-                _spread(d, spread), id_col=id_col, text_col=text_col, k=k, dedup=False
+                _spread(d), id_col=id_col, text_col=text_col, k=k, dedup=False
             )
             .groupBy(id_col)
             .agg(F.sort_array(F.collect_set(F.xxhash64("shingle"))).alias("sh"))
@@ -749,8 +694,6 @@ def minhash_verified_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    scheme: str = "md5",
-    spread: bool = True,
 ) -> DataFrame:
     """The production near-dedup shape at 100 TB: MinHash-LSH generates
     candidates (no pairwise scan), exact Jaccard verifies each candidate
@@ -769,26 +712,17 @@ def minhash_verified_pairs(
     measured 1.6x slower at sf0.1."""
     rows_per_band = num_hashes // bands
     sh = _doc_shingles(
-        _spread(docs, spread), id_col=id_col, text_col=text_col, k=k, dedup=False
+        _spread(docs), id_col=id_col, text_col=text_col, k=k, dedup=False
     )
-    if scheme == "md5":
-        base = sh.select(
-            id_col,
-            (ph.md5_int32("shingle") % F.lit(ph.MERSENNE31)).alias("hb"),
-            F.xxhash64("shingle").alias("xh"),
-        )
-        mins = [
-            F.min(ph.affine(F.col("hb"), a, b)).alias(f"h{i}")
-            for i, (a, b) in enumerate(ph.hash_family(num_hashes))
-        ]
-    elif scheme == "xxhash64":
-        base = sh.select(id_col, "shingle", F.xxhash64("shingle").alias("xh"))
-        mins = [
-            F.min(F.xxhash64("shingle", F.lit(i))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"unknown minhash scheme {scheme!r}")
+    base = sh.select(
+        id_col,
+        (ph.md5_int32("shingle") % F.lit(ph.MERSENNE31)).alias("hb"),
+        F.xxhash64("shingle").alias("xh"),
+    )
+    mins = [
+        F.min(ph.affine(F.col("hb"), a, b)).alias(f"h{i}")
+        for i, (a, b) in enumerate(ph.hash_family(num_hashes))
+    ]
     per_doc = (
         base.groupBy(id_col)
         .agg(*mins, F.sort_array(F.collect_set("xh")).alias("sh"))
@@ -800,7 +734,7 @@ def minhash_verified_pairs(
     )
     buckets = _band_buckets(
         per_doc, id_col=id_col, bands=bands, rows_per_band=rows_per_band,
-        scheme=scheme, carry=("sh",),
+        carry=("sh",),
     )
     a, b_ = buckets.alias("a"), buckets.alias("b")
     cand = (
@@ -842,8 +776,6 @@ def minhash_incremental_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.5,
-    scheme: str = "md5",
-    spread: bool = True,
 ) -> DataFrame:
     """Incremental ingestion dedup gate: which NEW documents near-
     duplicate something already in the corpus. MinHash-LSH candidates
@@ -856,18 +788,15 @@ def minhash_incremental_pairs(
     At 100 TB the corpus side's signatures/buckets are a stored,
     bucket-partitioned index (computed once per accepted batch), so the
     per-batch cost scales with the batch, not the corpus."""
-    sig_kw = dict(
-        id_col=id_col, text_col=text_col, k=k, num_hashes=num_hashes, scheme=scheme
-    )
-    new_sigs = minhash_signatures(_spread(new_docs, spread), **sig_kw)
-    corpus_sigs = minhash_signatures(_spread(corpus_docs, spread), **sig_kw)
+    sig_kw = dict(id_col=id_col, text_col=text_col, k=k, num_hashes=num_hashes)
+    new_sigs = minhash_signatures(_spread(new_docs), **sig_kw)
+    corpus_sigs = minhash_signatures(_spread(corpus_docs), **sig_kw)
     cand = minhash_lsh_candidates_between(
         new_sigs, corpus_sigs, id_col=id_col, bands=bands,
-        rows_per_band=num_hashes // bands, scheme=scheme,
+        rows_per_band=num_hashes // bands,
     )
     exact = exact_jaccard_for_pairs(
-        new_docs, cand, id_col=id_col, text_col=text_col, k=k, docs2=corpus_docs,
-        spread=spread,
+        new_docs, cand, id_col=id_col, text_col=text_col, k=k, docs2=corpus_docs
     )
     return exact.where(F.col("jaccard") >= threshold)
 
@@ -884,8 +813,6 @@ def write_signature_index(
     k: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    scheme: str = "md5",
-    spread: bool = True,
 ) -> None:
     """APPEND a batch's LSH band buckets ``(id, band, bucket)`` to the
     stored signature index — the table `minhash_incremental_pairs`'s
@@ -901,13 +828,13 @@ def write_signature_index(
     re-shingling/re-hashing the corpus — the per-batch dedup cost
     becomes O(batch + collisions), independent of corpus size."""
     sigs = minhash_signatures(
-        _spread(docs, spread),
+        _spread(docs),
         id_col=id_col, text_col=text_col, k=k,
-        num_hashes=num_hashes, scheme=scheme,
+        num_hashes=num_hashes,
     )
     bb = _band_buckets(
         sigs, id_col=id_col, bands=bands,
-        rows_per_band=num_hashes // bands, scheme=scheme,
+        rows_per_band=num_hashes // bands,
     )
     (
         bb.select(id_col, "band", "bucket")
@@ -1030,8 +957,6 @@ def lsh_candidates_from_index(
     k: int = 3,
     num_hashes: int = 64,
     bands: int = 16,
-    scheme: str = "md5",
-    spread: bool = True,
 ) -> DataFrame:
     """LSH candidates between a new batch and the STORED index:
     ``(d1=new_id, d2=corpus_id)``. The corpus side is a parquet read of
@@ -1040,13 +965,13 @@ def lsh_candidates_from_index(
     are absorbed by the distinct."""
     spark = new_docs.sparkSession
     sigs = minhash_signatures(
-        _spread(new_docs, spread),
+        _spread(new_docs),
         id_col=id_col, text_col=text_col, k=k,
-        num_hashes=num_hashes, scheme=scheme,
+        num_hashes=num_hashes,
     )
     a = _band_buckets(
         sigs, id_col=id_col, bands=bands,
-        rows_per_band=num_hashes // bands, scheme=scheme,
+        rows_per_band=num_hashes // bands,
     ).alias("a")
     idx = spark.read.parquet(index_path).distinct().alias("b")
     return (

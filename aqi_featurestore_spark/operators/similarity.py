@@ -8,7 +8,7 @@ array<float>, label). Two paths:
   rank per query. Cost O(|Q| x |N|) — right answer for small query sets,
   and the oracle for recall measurement.
 - **LSH (random hyperplane) ANN**: sign-bit sketch of each vector against
-  ``n_planes`` deterministic Gaussian hyperplanes; candidates = vectors
+  ``n_planes`` deterministic small-integer hyperplanes; candidates = vectors
   sharing a bucket in any band of the sketch; exact cosine only on
   candidates. At 100 TB the bucket join replaces the full cross product.
 - **Cosine near-dup pairs** (the embedding flavor of near-dedup): all
@@ -187,10 +187,10 @@ def _bucketed(df: DataFrame, id_col: Column, vec: Column, ex: Column | None):
     )
 
 
-def _struct_mats(struct_arr, normalize: bool, has_ex: bool):
+def _struct_mats(struct_arr, has_ex: bool):
     """(ids, matrix, ex) numpy views of a packed struct array; the
     matrix is unit-normalized with the pinned cumsum-of-squares order
-    when ``normalize`` (bit-identical to `_normalized_arrow`)."""
+    (bit-identical to `_normalized_arrow`)."""
     import numpy as np
 
     ids = np.asarray(struct_arr.field("id"), dtype=np.int64)
@@ -199,10 +199,8 @@ def _struct_mats(struct_arr, normalize: bool, has_ex: bool):
         return ids, np.empty((0, 0)), ex
     vecs = struct_arr.field("vec")
     mat = np.asarray(vecs.flatten(), dtype=np.float64).reshape(len(ids), -1)
-    if normalize:
-        nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
-        mat = mat / nrm[:, None]
-    return ids, mat, ex
+    nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+    return ids, mat / nrm[:, None], ex
 
 
 def _fold_dots(amat, bmat, ii, jj):
@@ -219,7 +217,7 @@ def _fold_dots(amat, bmat, ii, jj):
     return acc
 
 
-def _pair_scan_fn(threshold: float, round_scores: int, normalize: bool):
+def _pair_scan_fn(threshold: float, round_scores: int):
     """mapInArrow body for the all-pairs scan: for each streamed bucket
     row, pairs (id_a < id_b) against the packed side, BLAS-prescreened
     (slack 1e-3 >> the ~1e-14 reassociation error of a 64-dim unit-dot)
@@ -237,12 +235,8 @@ def _pair_scan_fn(threshold: float, round_scores: int, normalize: bool):
             ball_col = batch.column(batch.schema.get_field_index("_all"))
             for r in range(batch.num_rows):
                 if bids is None:
-                    bids, bmat, _ = _struct_mats(
-                        ball_col[r].values, normalize, False
-                    )
-                aids, amat, _ = _struct_mats(
-                    rows_col[r].values, normalize, False
-                )
+                    bids, bmat, _ = _struct_mats(ball_col[r].values, False)
+                aids, amat, _ = _struct_mats(rows_col[r].values, False)
                 if not len(aids) or not len(bids):
                     continue
                 approx = amat @ bmat.T
@@ -268,7 +262,7 @@ def _pair_scan_fn(threshold: float, round_scores: int, normalize: bool):
     return fn
 
 
-def _topk_scan_fn(normalize: bool, has_ex: bool):
+def _topk_scan_fn(has_ex: bool):
     """mapInArrow body for the brute-force top-k ground truth: each
     streamed corpus bucket scores EVERY query exactly (sequential
     per-dim loop — rank inputs must be exact, so no prescreen) and
@@ -286,12 +280,8 @@ def _topk_scan_fn(normalize: bool, has_ex: bool):
             qall_col = batch.column(batch.schema.get_field_index("_all"))
             for r in range(batch.num_rows):
                 if qids is None:
-                    qids, qmat, qex = _struct_mats(
-                        qall_col[r].values, normalize, has_ex
-                    )
-                nids, nmat, nex = _struct_mats(
-                    rows_col[r].values, normalize, has_ex
-                )
+                    qids, qmat, qex = _struct_mats(qall_col[r].values, has_ex)
+                nids, nmat, nex = _struct_mats(rows_col[r].values, has_ex)
                 if not len(nids) or not len(qids):
                     continue
                 keep = qids[None, :] != nids[:, None]  # (n, q)
@@ -313,15 +303,6 @@ def _topk_scan_fn(normalize: bool, has_ex: bool):
     return fn
 
 
-def _norm_expr(vec_col: str, norm_col: str | None) -> Column:
-    """The unit-normalized vector: computed from ``vec_col`` (Arrow
-    path) unless the caller already carries it in ``norm_col`` — the
-    share-the-projection hook ann_recall_methods uses so every method
-    leg reads ONE cached normalization instead of recomputing it
-    (bit-identical either way: same IEEE ops on the same input)."""
-    return F.col(norm_col) if norm_col else _normalized_arrow(vec_col)
-
-
 def cosine_topk_bruteforce(
     queries: DataFrame,
     corpus: DataFrame,
@@ -330,7 +311,6 @@ def cosine_topk_bruteforce(
     vec_col: str = "embedding",
     k: int = 10,
     round_scores: int = 6,
-    norm_col: str | None = None,
     exclude_same: str | None = None,
 ) -> DataFrame:
     """For each query vector, the k nearest corpus vectors by cosine
@@ -350,12 +330,11 @@ def cosine_topk_bruteforce(
     # of every sweep/audit inherit it). Rounding + ranking stay JVM-side
     # and unchanged, so rank boundaries and tie-breaks are bit-identical
     # to the fold form (oracle-gated).
-    vexpr = F.col(norm_col) if norm_col else F.col(vec_col)
     ex = F.col(exclude_same) if exclude_same else None
-    c = _bucketed(corpus, F.col(id_col), vexpr, ex)
-    qp = _packed(queries, F.col(id_col), vexpr, ex)
+    c = _bucketed(corpus, F.col(id_col), F.col(vec_col), ex)
+    qp = _packed(queries, F.col(id_col), F.col(vec_col), ex)
     raw = c.crossJoin(F.broadcast(qp)).mapInArrow(
-        _topk_scan_fn(normalize=norm_col is None, has_ex=ex is not None),
+        _topk_scan_fn(has_ex=ex is not None),
         "q_id long, n_id long, cos double",
     )
     scored = raw.select(
@@ -372,8 +351,6 @@ def hyperplane_sketch(
     *,
     n_planes: int = 16,
     dim: int = 64,
-    seed: int = 7,
-    scheme: str = "int",
 ) -> Column:
     """Sign-bit sketch: bit p set iff dot(vec, plane_p) > 0.
 
@@ -381,42 +358,25 @@ def hyperplane_sketch(
     bit-pack; the plane matrix is closure-captured and shipped once per
     executor.
 
-    ``scheme="int"`` (default) quantizes the vector to int64
-    (``floor(v * 1e6)``) and uses small-integer planes: the dot is exact
-    integer arithmetic, so the DuckDB oracle reproduces every sign bit —
-    this is what makes the LSH queries hash-verifiable. ``"gaussian"``
-    uses seeded float hyperplanes (MT19937 is platform-stable, so still
-    deterministic within Spark, but not reproducible in SQL)."""
+    The vector is quantized to int64 (``floor(v * 1e6)``) and the
+    planes are small integers: the dot is exact integer arithmetic, so
+    the DuckDB oracle reproduces every sign bit — this is what makes the
+    LSH queries hash-verifiable."""
     import numpy as np
 
     from aqi_featurestore_spark.functions import portable_hash as ph
 
     weights = 1 << np.arange(n_planes, dtype=np.int64)
-    if scheme == "int":
-        planes_t = np.array(ph.int_planes(n_planes, dim), dtype=np.int64).T
+    planes_t = np.array(ph.int_planes(n_planes, dim), dtype=np.int64).T
 
-        @pandas_udf("long")
-        def sketch(vecs: pd.Series) -> pd.Series:
-            if vecs.empty:
-                return pd.Series([], dtype="int64")
-            v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
-            q = np.floor(v * 1e6).astype(np.int64)
-            bits = q @ planes_t > 0
-            return pd.Series(bits @ weights)
-
-    elif scheme == "gaussian":
-        gplanes_t = np.random.RandomState(seed).standard_normal((n_planes, dim)).T
-
-        @pandas_udf("long")
-        def sketch(vecs: pd.Series) -> pd.Series:
-            if vecs.empty:
-                return pd.Series([], dtype="int64")
-            v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
-            bits = v @ gplanes_t > 0
-            return pd.Series(bits @ weights)
-
-    else:
-        raise ValueError(f"unknown sketch scheme {scheme!r}")
+    @pandas_udf("long")
+    def sketch(vecs: pd.Series) -> pd.Series:
+        if vecs.empty:
+            return pd.Series([], dtype="int64")
+        v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
+        q = np.floor(v * 1e6).astype(np.int64)
+        bits = q @ planes_t > 0
+        return pd.Series(bits @ weights)
 
     return sketch(F.col(vec) if isinstance(vec, str) else vec)
 
@@ -432,7 +392,6 @@ def cosine_topk_lsh(
     bands: int = 4,
     dim: int = 64,
     round_scores: int = 6,
-    scheme: str = "int",
 ) -> DataFrame:
     """ANN top-k: candidates share at least one of ``bands`` sketch bands
     (equi-join on (band, bits) — no cross product), then exact cosine +
@@ -444,7 +403,7 @@ def cosine_topk_lsh(
     def with_bands(df: DataFrame, role: str) -> DataFrame:
         # ids + band bits ONLY: the candidate join and its dedup shuffle
         # move fixed-width keys, never the vectors.
-        sk = hyperplane_sketch(vec_col, n_planes=n_planes, dim=dim, scheme=scheme)
+        sk = hyperplane_sketch(vec_col, n_planes=n_planes, dim=dim)
         banded = df.select(F.col(id_col).alias(f"{role}_id"), sk.alias("sketch"))
         bands_arr = F.array(
             *[
@@ -489,7 +448,6 @@ def embedding_cosine_pairs(
     n_planes: int = 16,
     bands: int = 4,
     dim: int = 64,
-    scheme: str = "int",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (d1, d2, cos_sim) with
     d1 < d2 and round(cosine, 6) >= threshold.
@@ -513,7 +471,7 @@ def embedding_cosine_pairs(
         a = _bucketed(vectors, F.col(id_col), F.col(vec_col), None)
         b_ = _packed(vectors, F.col(id_col), F.col(vec_col), None)
         raw = a.crossJoin(F.broadcast(b_)).mapInArrow(
-            _pair_scan_fn(threshold, round_scores, normalize=True),
+            _pair_scan_fn(threshold, round_scores),
             "d1 long, d2 long, cos double",
         )
         return raw.select(
@@ -530,9 +488,8 @@ def embedding_cosine_pairs(
     # column rather than a reproduction of the normalization fold.
     sketched = vectors.select(
         F.col(id_col).alias("id"),
-        hyperplane_sketch(
-            _as_double(vec_col), n_planes=n_planes, dim=dim, scheme=scheme
-        ).alias("sketch"),
+        hyperplane_sketch(_as_double(vec_col), n_planes=n_planes, dim=dim)
+        .alias("sketch"),
     )
     # candidate generation + dedup on bare id pairs; vectors join back
     # after the shuffle (fixed-width keys move, arrays don't)

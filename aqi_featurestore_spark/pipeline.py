@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from aqi_featurestore_spark.functions.aqi import aqi_from_pm25
 from aqi_featurestore_spark.functions.time_features import (
     entity_key,
+    reconstructed_datetime,
     time_feature_columns,
 )
 from aqi_featurestore_spark.operators.lag import add_lag_features
@@ -102,8 +103,7 @@ def training_set(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine = build_spine(events)
     joined = historical_features(spine, features).where(F.col("aqi").isNotNull())
     with_dt = joined.withColumn(
-        "datetime",
-        F.to_timestamp(F.unix_timestamp("event_timestamp") + F.col("hour").cast("long") * 3600),
+        "datetime", reconstructed_datetime("event_timestamp", "hour")
     )
     return add_lag_features(
         with_dt,

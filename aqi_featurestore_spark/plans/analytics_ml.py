@@ -3,9 +3,8 @@ extraction, star denormalization, A/B tests, market basket, robust
 medians, Benford, spatial kNN, LTTB, dedup resolution, splits, eval
 metrics, funnels, retention, chunking, vocab/TF-IDF, CDC diff, Z-order.
 
-Split out of plans/queries.py (round 4); registration still via the
-shared ``@_q`` registry in plans/_base.py. Reference citations live on
-each query docstring.
+Registration is via the shared ``@_q`` registry in plans/_base.py.
+Reference citations live on each query docstring.
 """
 
 from __future__ import annotations

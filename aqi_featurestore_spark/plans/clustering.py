@@ -284,7 +284,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         for batch in it:
             rows_col = batch.column(batch.schema.get_field_index("_rows"))
             for r in range(batch.num_rows):
-                ids, mat, _ = _struct_mats(rows_col[r].values, True, False)
+                ids, mat, _ = _struct_mats(rows_col[r].values, False)
                 m = len(ids)
                 if m < 2:
                     continue

@@ -5,9 +5,8 @@ CMS heavy hitters, PageRank, Bloom gate, LM familiarity, reservoir,
 rolling DAU, BM25 top-k, bucketizer, policy dedup, skew report, HLL
 audits/rollups, padding-efficiency audit, KMV bottom-k set algebra.
 
-Split out of plans/queries.py (round 4); registration still via the
-shared ``@_q`` registry in plans/_base.py. Reference citations live on
-each query docstring.
+Registration is via the shared ``@_q`` registry in plans/_base.py.
+Reference citations live on each query docstring.
 """
 
 from __future__ import annotations
@@ -1662,7 +1661,7 @@ def q_domain_minhash_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # near_dedup._spread pattern); the min-aggregate absorbs it map-side
     sigs = minhash_signatures(
         docs.repartition(spark.sparkContext.defaultParallelism),
-        id_col="source", num_hashes=_OVL_HASHES, scheme="md5"
+        id_col="source", num_hashes=_OVL_HASHES
     )
     a = sigs.select(F.col("source").alias("source_a"), F.col("sig").alias("_sa"))
     b = sigs.select(F.col("source").alias("source_b"), F.col("sig").alias("_sb"))

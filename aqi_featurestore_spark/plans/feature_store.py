@@ -1,9 +1,8 @@
 """Feature-store parity queries (SURVEY.md S2.1-S2.10) plus the
 TPC-H-shaped bench headliners (Q1, top-k per group, skew demo, EMA, PIT).
 
-Split out of plans/queries.py (round 4); registration still via the
-shared ``@_q`` registry in plans/_base.py. Reference citations live on
-each query docstring.
+Registration is via the shared ``@_q`` registry in plans/_base.py.
+Reference citations live on each query docstring.
 """
 
 from __future__ import annotations

@@ -4,9 +4,8 @@ windows, the time-series hyperfunctions (TWAP, rate, LOCF), MaxSim
 late-interaction retrieval + its shortlist-recall audit, and hybrid
 reciprocal-rank fusion.
 
-Split out of plans/queries.py (round 4); registration still via the
-shared ``@_q`` registry in plans/_base.py. Reference citations live on
-each query docstring.
+Registration is via the shared ``@_q`` registry in plans/_base.py.
+Reference citations live on each query docstring.
 """
 
 from __future__ import annotations
@@ -636,18 +635,15 @@ def q_ann_recall_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit cost, same as ann_recall) and is localCheckpoint-ed ONCE so
     the per-method overlap joins and the query-count scalar read the
     materialized (q_id, n_id) pairs instead of re-running the brute
-    scan per leg; the corpus normalization inside it is computed once
-    and shared between the query and corpus sides (norm_col hook); the
-    pq and ivfpq legs share ONE set of subspace codebook fits
+    scan per leg; the batched scan inside it normalizes each vector
+    once; the pq and ivfpq legs share ONE set of subspace codebook fits
     (round-5 ask #2). The overlap joins move (q_id, n_id) pairs only;
     output is 4 rows."""
     e = _read(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") % 50 == 0)
-    # round-12: the brute ground truth is the session-shared audit leg
-    # (also read by ann_probe_sweep) — the batched pair scan normalizes
-    # once inside its numpy stage, so the round-5 share-one-normalization
-    # cache (e_nv + norm_col hook) is no longer needed here; identical
-    # rows, oracle-gated.
+    # the brute ground truth is the session-shared audit leg (also read
+    # by ann_probe_sweep); the batched pair scan normalizes once inside
+    # its numpy stage.
     exact_tk = _shared_exact10(spark, sf_dir)
     # ONE PQ books fit shared across the pq/ivfpq/ivfpq_km legs AND the
     # session (the serving-fit cache: identical params, identical fit).

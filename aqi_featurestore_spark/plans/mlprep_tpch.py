@@ -2,9 +2,8 @@
 shard packing) and the TPC-H completeness batch Q6/Q7/Q8/Q10/Q14/Q15/
 Q18/Q19 plus MERGE upsert.
 
-Split out of plans/queries.py (round 4); registration still via the
-shared ``@_q`` registry in plans/_base.py. Reference citations live on
-each query docstring.
+Registration is via the shared ``@_q`` registry in plans/_base.py.
+Reference citations live on each query docstring.
 """
 
 from __future__ import annotations

@@ -4,9 +4,8 @@ kNN vote, FK audits, mergeable aggregation, trend features, as-of joins
 (forward/nearest), TPC-H Q13/Q17/Q22 shapes, Bloom semi-join scan
 reduction and its prefiltered-revenue composition.
 
-Split out of plans/queries.py (round 4); registration still via the
-shared ``@_q`` registry in plans/_base.py. Reference citations live on
-each query docstring.
+Registration is via the shared ``@_q`` registry in plans/_base.py.
+Reference citations live on each query docstring.
 """
 
 from __future__ import annotations

@@ -133,22 +133,3 @@ MEDIA = StructType(
         StructField("duration_ms", LongType(), True),
     ]
 )
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def load_testdata(spark, sf_dir: str, *names: str):
-    """Read driver-generated parquet tables; returns dict name -> DataFrame."""
-    names = names or TESTDATA_TABLES
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -234,23 +234,20 @@ class OfflineStore:
         return preds
 
     def prune_plan(
-        self, col_or_preds, cut=None, *, as_of: int | None = None
+        self,
+        preds: list[tuple[str, str, object]],
+        *,
+        as_of: int | None = None,
     ) -> tuple[list[str], list[str]]:
         """The file-skip decision, exposed for audits/tests: partition
         the version's file list into (kept, skipped) for a predicate
-        conjunction using the manifest's per-file stats. Accepts either
-        the legacy ``(col, cut)`` pair (meaning ``col >= cut``) or a
+        conjunction using the manifest's per-file stats. ``preds`` is a
         list of ``(col, op, cut)`` conjuncts with op in {'>=', '<='}.
         One-sided per conjunct (skip only when the recorded ``max <
         cut`` / ``min > cut`` PROVES emptiness — a file skips the
         moment any conjunct proves it); stat-less files are kept —
         exactly ``zone_skip_decisions``'s rule with the file as the
         zone."""
-        preds = (
-            [(col_or_preds, ">=", cut)]
-            if cut is not None
-            else list(col_or_preds)
-        )
         manifest = self.manifests.manifest(
             as_of if as_of is not None else self.version()
         )

@@ -1,8 +1,9 @@
 #!/usr/bin/env python
-"""Dump .explain("formatted") for named queries to plans/<tag>/<q>_<suffix>.txt.
+"""Dump .explain("formatted") for named queries to <outdir>/<q>_<suffix>.txt.
 
 Usage: python scripts/dump_plans.py <outdir> <suffix> <query> [query ...]
-(e.g. python scripts/dump_plans.py plans/r11 before hybrid_fusion_sweep)
+(e.g. python scripts/dump_plans.py plans/sweep before hybrid_fusion_sweep;
+the repo-root plans/ directory is git-ignored, so dumps stay local)
 """
 
 from __future__ import annotations

@@ -306,32 +306,6 @@ def test_refresh_refuses_mismatched_model(spark, emb, built, tmp_path):
     write_ann_index(ok, rmodel, path, mode="refresh")
 
 
-def test_legacy_coarse_schema_reads_as_seeded(spark, emb, built, tmp_path):
-    """Pre-round-7 indexes persisted the coarse table WITHOUT a 'mode'
-    column; they must read back under seeded-int64 semantics (the
-    format they were written with) instead of a KeyError."""
-    index, model = built
-    path = str(tmp_path / "annidx")
-    write_ann_index(index, model, path)
-    # strip the mode column in place, simulating the legacy layout
-    legacy = spark.read.parquet(f"{path}/coarse").drop("mode").collect()
-    spark.createDataFrame(
-        legacy, "list_id int, cent array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/coarse")
-    rindex, rmodel = read_ann_index(spark, path)
-    assert rmodel.coarse == "seeded"
-    assert rmodel.cent_q == model.cent_q
-    served = ann_index_topk(
-        current_index(rindex),
-        emb.where(F.col("vec_id") % 100 == 3),
-        rmodel,
-        k=5,
-        rescore=20,
-        rerank_vectors=emb,
-    )
-    assert served.count() > 0
-
-
 def test_as_of_time_travel_replay(spark, emb, built, tmp_path):
     """Versioned-PIT discipline on the index (round-7 verdict ask #7):
     a lookup replayed as_of the pre-refresh version must match the

@@ -251,7 +251,7 @@ def test_dedup_ingest_stream_with_signature_index(spark, tmp_path):
     direct = bucket_set(
         _band_buckets(
             minhash_signatures(spark.read.parquet(corpus)),
-            id_col="doc_id", bands=16, rows_per_band=4, scheme="md5",
+            id_col="doc_id", bands=16, rows_per_band=4,
         ).select("doc_id", "band", "bucket")
     )
     assert stored == direct
@@ -372,7 +372,7 @@ def test_dedup_ingest_bootstraps_index_over_preexisting_corpus(
         (r["doc_id"], r["band"], r["bucket"])
         for r in _band_buckets(
             minhash_signatures(spark.read.parquet(corpus)),
-            id_col="doc_id", bands=16, rows_per_band=4, scheme="md5",
+            id_col="doc_id", bands=16, rows_per_band=4,
         ).select("doc_id", "band", "bucket").collect()
     }
     assert stored == direct

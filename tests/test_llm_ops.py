@@ -288,6 +288,18 @@ def test_cc_doubling_converges_logarithmically(spark):
     assert got == {v: 0 for v in range(65)}
 
 
+@pytest.mark.parametrize("method", ["label", "doubling"])
+@pytest.mark.parametrize("max_iter", [0, -1])
+def test_cc_rejects_max_iter_below_one(spark, method, max_iter):
+    """With no round to run there is no convergence to report: the call
+    refuses up front instead of failing inside the loop's else arm."""
+    from aqi_featurestore_spark.operators.dedup_groups import connected_components
+
+    pairs = spark.createDataFrame([(1, 2)], "d1 long, d2 long")
+    with pytest.raises(ValueError, match="max_iter"):
+        connected_components(pairs, method=method, max_iter=max_iter)
+
+
 def test_minhash_verified_agrees_with_exact(spark):
     from aqi_featurestore_spark.operators.near_dedup import minhash_verified_pairs
 
@@ -559,7 +571,7 @@ def test_containment_catches_subset_duplicate(spark):
     filler = " ".join(f"w{i} x{i} y{i}" for i in range(30))
     rows = [(1, short), (2, filler + " " + short + " " + filler)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    cp = containment_pairs(docs, threshold=0.9, spread=False).collect()
+    cp = containment_pairs(docs, threshold=0.9).collect()
     assert len(cp) == 1 and cp[0]["d1"] == 1 and cp[0]["c1"] == 1.0
     jp = ngram_jaccard_pairs(docs, threshold=0.5).collect()
     assert jp == []  # symmetric Jaccard misses the subset duplicate

@@ -80,19 +80,6 @@ def test_mixed_dim_resolution_refused(spark, tmp_path):
     assert (w, b, v) == ([1, 2, 3, 4], 5, 1)
 
 
-def test_legacy_layout_reads_back(spark, tmp_path):
-    """Pre-round-8 stores wrote (term_id, w_micro, version) parquet
-    directly at the path — they must read back under the old semantics
-    instead of failing opaquely (the ADVICE migration-path rule)."""
-    path = str(tmp_path / "legacy")
-    spark.createDataFrame(
-        [(0, 11, 1), (1, 22, 1), (2, 33, 1)],
-        "term_id int, w_micro long, version long",
-    ).write.parquet(path)
-    w, b, v = read_model(spark, path)
-    assert (w, b, v) == ([11, 22], 33, 1)
-
-
 def test_read_model_missing_term_errors(spark, tmp_path):
     path = str(tmp_path / "models")
     write_model(

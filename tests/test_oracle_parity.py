@@ -27,6 +27,7 @@ SESSION_ARTIFACT_READERS = (
     "semantic_dedup",
     "quality_classifier_train",
     "model_registry_list",
+    "ann_recall_methods",
 )
 
 

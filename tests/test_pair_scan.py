@@ -90,19 +90,6 @@ def test_topk_batched_equals_fold(vectors):
     assert _canon(new) == _canon(ref)
 
 
-def test_topk_norm_col_hook(vectors):
-    """The share-one-normalization hook still yields identical bits."""
-    nv = vectors.select(
-        "vec_id", "embedding", _normalized_arrow("embedding").alias("nv")
-    )
-    q = nv.where(F.col("vec_id") % 10 == 0)
-    with_hook = cosine_topk_bruteforce(q, nv, k=5, norm_col="nv")
-    without = cosine_topk_bruteforce(
-        vectors.where(F.col("vec_id") % 10 == 0), vectors, k=5
-    )
-    assert _canon(with_hook) == _canon(without)
-
-
 @pytest.mark.parametrize("empty_side", ["queries", "corpus"])
 def test_topk_empty_side_returns_no_rows(vectors, empty_side):
     """An empty query set or an empty corpus scans zero pairs."""

@@ -49,7 +49,7 @@ def test_offline_store_file_skipping_prunes_and_matches(spark, stat_store):
     read, (b) return exactly the rows of the unpruned filter, and (c)
     skip only files whose recorded max PROVES emptiness (one-sided)."""
     store = stat_store
-    kept, skipped = store.prune_plan("aqi", 150.0)
+    kept, skipped = store.prune_plan([("aqi", ">=", 150.0)])
     assert skipped and kept
     assert len(kept) + len(skipped) == len(store.read().inputFiles())
 
@@ -72,7 +72,7 @@ def test_offline_store_file_skipping_prunes_and_matches(spark, stat_store):
     )
     assert none.count() == 0
     # a cut below every file's max prunes nothing and loses nothing
-    k2, s2 = store.prune_plan("aqi", 0.5)
+    k2, s2 = store.prune_plan([("aqi", ">=", 0.5)])
     assert not s2
     assert store.read(where_ge=("aqi", 0.5)).count() == 6
 
@@ -97,7 +97,7 @@ def test_offline_store_prune_matches_zone_skip_decisions(spark, stat_store):
         for r in decisions.collect()
         if r["skip_p"] == 1
     }
-    _kept, skipped = store.prune_plan("aqi", cut)
+    _kept, skipped = store.prune_plan([("aqi", ">=", cut)])
     assert {OfflineStore._norm_path(p) for p in skipped} == skip_direct
 
 
@@ -106,7 +106,7 @@ def test_offline_store_file_skipping_composes_with_as_of(spark, stat_store):
     where_ge prunes inside an as-of replay too."""
     store = stat_store
     # at version 1 only day-1 files exist; a cut above them skips all
-    kept_v1, skipped_v1 = store.prune_plan("aqi", 150.0, as_of=1)
+    kept_v1, skipped_v1 = store.prune_plan([("aqi", ">=", 150.0)], as_of=1)
     assert not kept_v1 and skipped_v1
     assert store.read(as_of=1, where_ge=("aqi", 150.0)).count() == 0
     # version 2 adds day-2 (still < 150); version 3 adds the matches
@@ -121,7 +121,7 @@ def test_offline_store_stats_survive_retire(spark, stat_store):
     files keep their recorded min/max and pruning still works."""
     store = stat_store
     store.retire(before=date(2024, 1, 2))
-    kept, skipped = store.prune_plan("aqi", 150.0)
+    kept, skipped = store.prune_plan([("aqi", ">=", 150.0)])
     assert len(skipped) >= 1  # day-2 files still provably empty
     got = store.read(where_ge=("aqi", 150.0))
     assert got.count() == 2
