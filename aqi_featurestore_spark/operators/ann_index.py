@@ -22,8 +22,12 @@ Three pieces:
   the index table: queries compute probe lists + ADC LUTs from the
   model (no corpus contact), broadcast onto an equi-join with the
   index's ``list_id``, ADC-score, exact re-rank only the bounded
-  shortlist against a vector table (candidate-keyed join — reads
-  ``rescore x |Q|`` vectors, not the corpus).
+  shortlist against a vector table. The re-rank is all JVM
+  (similarity._exact_rerank) and scores only ``rescore x |Q|`` pairs,
+  but it normalizes every row of the ``rerank_vectors`` table before
+  the candidate-keyed join, so each serve reads and normalizes that
+  whole table, and a zero-norm row anywhere in it raises
+  DIVIDE_BY_ZERO under ANSI mode even when it is no candidate.
 
 Persistence (:func:`write_ann_index` / :func:`read_ann_index`):
 the index parquet is PARTITIONED BY ``list_id``, so a single-query

@@ -281,7 +281,15 @@ def normalized_jvm(vec_col: Column | str) -> Column:
     double, left-fold of squares from 0.0, sqrt, elementwise divide —
     the same IEEE op order as similarity._normalized_arrow's numpy
     cumsum and the oracle's ``_SIM_NORM_CTE``, so cosines agree
-    bit-for-bit across all three."""
+    bit-for-bit across all three.
+
+    The norm is bound ONCE per row as the lambda variable of a
+    transform over the one-element ``array(nrm)``. Written inline as
+    ``transform(dbl, x -> x / nrm)``, Catalyst evaluates the dim-term
+    fold again for every element — O(dim^2) per row; bound, the row
+    costs O(dim) and the bits are the same. A null vector gives null,
+    an empty one an empty array; a zero-norm vector divides by zero
+    (DIVIDE_BY_ZERO under ANSI mode, NaNs otherwise)."""
     c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
     dbl = F.transform(c, lambda x: x.cast("double"))
     nrm = F.sqrt(
@@ -289,4 +297,6 @@ def normalized_jvm(vec_col: Column | str) -> Column:
             F.transform(dbl, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
         )
     )
-    return F.transform(dbl, lambda x: x / nrm)
+    return F.element_at(
+        F.transform(F.array(nrm), lambda n: F.transform(dbl, lambda x: x / n)), 1
+    )

@@ -40,7 +40,6 @@ from aqi_featurestore_spark.operators.clustering import (
     MICRO,
     kmeans_fit,
     kmeans_min_struct,
-    normalized_jvm,
 )
 from aqi_featurestore_spark.plans._base import _q, _read, session_artifact
 
@@ -243,8 +242,9 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pair join is an equi-join ON cluster_id (shuffle keyed on cid),
     quadratic only within a cluster — the operative SemDeDup contract
     is k grows with the corpus so per-cluster population stays bounded.
-    Cosine is the pure-JVM normalize + left-fold dot (no Python
-    boundary); the dup reduce is one (vec_id)-keyed aggregate."""
+    Cosine is the batched per-cluster mapInArrow scan below (numpy,
+    the pinned fold order); the dup reduce is one (vec_id)-keyed
+    aggregate."""
     e = _read(spark, sf_dir, "embeddings")
     cents = _cluster_fit(spark, sf_dir)
     vc = e.select(

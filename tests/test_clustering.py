@@ -4,7 +4,7 @@ The registry queries are hash-verified against the unrolled DuckDB
 oracle by test_oracle_parity; these pin the OPERATOR contracts directly:
 planted clusters are recovered, empty clusters carry forward, the
 assignment plan never shuffles, and the JVM normalizer matches the
-Arrow one bit-for-bit.
+Arrow one and its old per-element form bit-for-bit.
 """
 
 from __future__ import annotations
@@ -102,6 +102,57 @@ def test_normalized_jvm_matches_arrow(spark):
     ).collect()
     for r in both:
         assert r["jvm"] == r["arrow"]  # bit-identical, not approx
+
+
+def _normalized_inline(vec_col):
+    """The per-element form ``normalized_jvm`` replaced: the norm sits
+    inside the divide lambda, so Catalyst re-folds it for every element.
+    Kept as the reference the bind-once form must match bit for bit."""
+    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    nrm = F.sqrt(
+        F.aggregate(
+            F.transform(dbl, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
+        )
+    )
+    return F.transform(dbl, lambda x: x / nrm)
+
+
+def test_normalized_jvm_matches_inline_form_on_sf01(spark):
+    e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    rows = e.select(
+        normalized_jvm("embedding").alias("bound"),
+        _normalized_inline("embedding").alias("inline"),
+    ).collect()
+    assert len(rows) == 2000
+    for r in rows:
+        assert r["bound"] == r["inline"]  # bit-identical, not approx
+
+
+def test_normalized_jvm_null_and_empty_vectors(spark):
+    df = spark.createDataFrame(
+        [(0, None), (1, []), (2, [3.0, 4.0])], "id int, embedding array<float>"
+    )
+    rows = {
+        r["id"]: r
+        for r in df.select(
+            "id",
+            normalized_jvm("embedding").alias("bound"),
+            _normalized_inline("embedding").alias("inline"),
+        ).collect()
+    }
+    assert rows[0]["bound"] is None and rows[0]["inline"] is None
+    assert rows[1]["bound"] == [] and rows[1]["inline"] == []
+    assert rows[2]["bound"] == rows[2]["inline"] == [0.6, 0.8]
+
+
+@pytest.mark.parametrize("form", [normalized_jvm, _normalized_inline])
+def test_zero_norm_vector_divides_by_zero(spark, form):
+    """Under ANSI mode (Spark 4's default) a zero-norm vector raises in
+    the bound form exactly as it did in the inline one."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    df = spark.createDataFrame([(0, [0.0, 0.0, 0.0])], "id int, embedding array<float>")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        df.select(form("embedding")).collect()
 
 
 def test_semantic_dedup_drops_planted_duplicate(spark):

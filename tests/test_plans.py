@@ -37,32 +37,21 @@ SF_DIR = "/root/testdata/sf0.001"
 
 # Queries whose plans legitimately cross into Python via Arrow batches
 # (numpy matmul / popcount per batch — see docs/PLANS.md "Python
-# boundaries"). Anything else must stay pure JVM.
+# boundaries"). Anything else must stay pure JVM: the compressed-domain
+# ANN serving path (ann_index_serve, ann_filtered_topk, the hybrid
+# serves, similarity_topk_pq) re-ranks in the JVM, so an Arrow UDF that
+# comes back onto it fails here.
 ARROW_EVAL_OK = {
-    "ann_recall",
-    "ann_recall_methods",
-    "similarity_topk_pq",
-    "embedding_cosine_dedup",
+    "ann_recall",  # LSH sketch + IVF probe/dot legs
+    "ann_recall_methods",  # LSH, IVF and seeded-IVFADC coarse udfs
     "rocchio_classify",
     "embedding_cosine_dedup_lsh",
-    "knn_label_vote",
     "simhash_dedup",
-    "similarity_topk_cosine",
     "similarity_topk_ivf",
-    "similarity_topk_ivfpq",  # seeded coarse assign/probe + exact re-rank dot
-    "ann_index_serve",  # query-side probe udf + exact re-rank dot (serving path)
-    "ann_filtered_topk",  # same serving path with an attr predicate
+    "similarity_topk_ivfpq",  # seeded coarse assign/probe udfs (re-rank is JVM)
     "ann_index_stats",  # seeded coarse assign udf (one corpus pass)
-    "ann_probe_sweep",  # brute ground-truth leg + probe udfs + re-rank dots
     "similarity_topk_lsh",
-    "hard_negative_mining",  # same normalized-dot Arrow batch as the cosine baseline
     "maxsim_topk",  # the shared Arrow normalize; dots are JVM folds
-    "maxsim_shortlist_recall",  # same shared Arrow normalize
-    "hybrid_rrf_fusion",  # cosine leg's Arrow normalize; dots are JVM folds
-    "hybrid_rrf_fusion_ann",  # the IVFADC leg's exact re-rank dot (serving path)
-    "hybrid_rerank_serve",  # same IVFADC leg inside the end-to-end serve
-    "hybrid_fusion_sweep",  # brute ground-truth leg + per-probe serve-path dots
-    "hybrid_codebook_sweep",  # brute ground-truth leg + per-config serve-path dots
 }
 MAP_IN_PANDAS_OK = {
     "multimodal_features", "frame_sample", "image_phash_dedup",
