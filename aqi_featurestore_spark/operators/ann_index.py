@@ -23,11 +23,12 @@ Three pieces:
   model (no corpus contact), broadcast onto an equi-join with the
   index's ``list_id``, ADC-score, exact re-rank only the bounded
   shortlist against a vector table. The re-rank is all JVM
-  (similarity._exact_rerank) and scores only ``rescore x |Q|`` pairs,
-  but it normalizes every row of the ``rerank_vectors`` table before
-  the candidate-keyed join, so each serve reads and normalizes that
-  whole table, and a zero-norm row anywhere in it raises
-  DIVIDE_BY_ZERO under ANSI mode even when it is no candidate.
+  (similarity._exact_rerank) and scores only ``rescore x |Q|`` pairs:
+  each query's normalized vector rides the shortlist from its encode,
+  and the raw ``rerank_vectors`` rows join the shortlist on ``n_id``
+  before they normalize, so a serve normalizes its candidates only,
+  never the whole table (a zero-norm row that is no candidate is never
+  divided; one that is a candidate raises DIVIDE_BY_ZERO under ANSI).
 
 Persistence (:func:`write_ann_index` / :func:`read_ann_index`):
 the index parquet is PARTITIONED BY ``list_id``, so a single-query
@@ -111,13 +112,6 @@ class AnnIndexModel:
         return self.dim // self.n_subspaces
 
 
-def _micro_col(vec_col: Column | str) -> Column:
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(
-        c, lambda x: F.round(x.cast("double") * 1_000_000, 0).cast("long")
-    )
-
-
 def _coarse_builders(model: AnnIndexModel):
     """(assign, probe) Column builders for the model's coarse mode —
     the ONE place lookup/encode arithmetic is chosen, so the serve,
@@ -126,18 +120,10 @@ def _coarse_builders(model: AnnIndexModel):
         from aqi_featurestore_spark.operators import clustering as _cl
 
         cents = model.cent_d
-
-        def assign(col):
-            return _cl.kmeans_assign_col(_micro_col(col), cents)
-
-        def probe(col):
-            ds = _cl.kmeans_dist_structs(_micro_col(col), cents)
-            return F.transform(
-                F.slice(F.array_sort(ds), 1, model.n_probe),
-                lambda s: s["cid"].cast("int"),
-            )
-
-        return assign, probe
+        return (
+            lambda col: _cl.kmeans_cell_col(col, cents),
+            lambda col: _cl.kmeans_probe_col(col, cents, model.n_probe),
+        )
     if model.coarse == "seeded":
         import numpy as np
 
@@ -295,11 +281,13 @@ def ann_index_topk(
         keep_vec=True,
     ).select(
         "q_id",
+        F.col("_nv").alias("q_vec"),
         probe_lists(vec_col).alias("_probes"),
         *_pq_lut_cols(model.books, n_sub),
     )
     q = q0.select(
         "q_id",
+        "q_vec",
         F.explode("_probes").alias("list_id"),
         *[f"lut{s}" for s in range(n_sub)],
     )
@@ -311,21 +299,21 @@ def ann_index_topk(
     scored = pairs.select(
         "q_id",
         "n_id",
+        "q_vec",
         F.round(
             _pq_adc_dist(n_sub) / F.lit(1_000_000_000_000.0), round_scores
         ).alias("pq_dist"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("pq_dist").asc(), F.col("n_id").asc())
     adc = scored.select(
-        "q_id", "n_id", "pq_dist", F.row_number().over(w).alias("rk")
+        "q_id", "n_id", "q_vec", "pq_dist", F.row_number().over(w).alias("rk")
     ).where(F.col("rk") <= (rescore if rescore else k))
     if not rescore:
-        return adc
+        return adc.drop("q_vec")
     if rerank_vectors is None:
         raise ValueError("rescore > 0 needs rerank_vectors (id -> vector table)")
     return _exact_rerank(
         adc,
-        queries,
         rerank_vectors,
         id_col=id_col,
         vec_col=vec_col,
@@ -361,7 +349,7 @@ def _model_fingerprint(model: AnnIndexModel) -> str:
 
 def _round_half_up_micro(x: float) -> float:
     """Spark F.round(_, 0) HALF_UP (away from zero at .5) on x * 1e6 —
-    the driver-side twin of :func:`_micro_col`'s quantization."""
+    the driver-side twin of ``clustering.micro_sql``'s quantization."""
     import math
 
     v = float(x) * 1e6

@@ -49,20 +49,47 @@ from aqi_featurestore_spark.functions import portable_hash as _ph
 __all__ = [
     "kmeans_fit",
     "kmeans_assign_col",
-    "kmeans_dist_structs",
+    "kmeans_assign_sql",
+    "kmeans_cell_col",
+    "kmeans_dist_structs_sql",
     "kmeans_min_struct",
+    "kmeans_probe_col",
+    "micro_col",
+    "micro_sql",
     "normalized_jvm",
+    "sql_name",
     "MICRO",
 ]
 
 MICRO = 1_000_000
 
 
-def _micro_arr(vec_col: Column | str) -> Column:
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    return F.transform(
-        c, lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
+def sql_name(col: str) -> str:
+    """A column name as SQL text: backtick-quoted, so any name (spaces,
+    dots, a name that is also a lambda variable) stays one reference."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+# The vector expressions below are SQL text, parsed by ONE ``F.expr``
+# each. Built from Python lambdas, the same trees cost several py4j
+# round trips per node; as text they cost one per expression. Lambda
+# variables carry reserved ``__`` names, so a lambda body that
+# references an outer column named ``x``, ``c``, ``i`` or ``n`` reads
+# that column, never the lambda variable.
+
+
+def micro_sql(vec: str) -> str:
+    """SQL text of the micro-unit quantization of a vector fragment:
+    ``round(double(x) * 1e6)`` as BIGINT per element (HALF_UP)."""
+    return (
+        f"transform({vec}, __x -> "
+        f"CAST(round(CAST(__x AS DOUBLE) * {MICRO}, 0) AS BIGINT))"
     )
+
+
+def micro_col(vec_col: str) -> Column:
+    """Micro-unit BIGINT array of the vector column named ``vec_col``."""
+    return F.expr(micro_sql(sql_name(vec_col)))
 
 
 def _seed_hash(id_col: str) -> Column:
@@ -114,7 +141,7 @@ def kmeans_fit(
     # re-reading and re-transforming the scan. The cached data is the
     # id + k x dim longs projection, not the source table's full width.
     vc = df.select(
-        F.col(id_col).alias("_id"), _micro_arr(vec_col).alias("_v")
+        F.col(id_col).alias("_id"), micro_col(vec_col).alias("_v")
     ).persist()
     try:
         if init is not None:
@@ -134,7 +161,7 @@ def kmeans_fit(
             )
             chosen = [[float(x) for x in first["_v"]]]
             for _ in range(k - 1):
-                m = kmeans_min_struct(F.col("_v"), chosen)
+                m = kmeans_min_struct("_v", chosen)
                 far = (
                     vc.select("_id", "_v", m["d"].alias("_d"))
                     .orderBy(F.desc("_d"), F.asc("_id"))
@@ -160,7 +187,7 @@ def kmeans_fit(
             assigned = vc.select(
                 "_id",
                 "_v",
-                kmeans_assign_col(F.col("_v"), centroids).alias("_cid"),
+                kmeans_assign_col("_v", centroids).alias("_cid"),
             )
             stats = (
                 assigned.select("_cid", F.posexplode("_v").alias("_dim", "_x"))
@@ -208,33 +235,37 @@ def _double_lit_sql(x: float) -> str:
     return f"CAST('{x!r}' AS DOUBLE)"
 
 
-def kmeans_dist_structs(
-    micro_vec: Column, centroids: dict[int, list[float]] | list[list[float]]
-) -> Column:
-    """Array of ``(d, cid)`` structs — squared distance of a micro-unit
-    BIGINT vector column to EVERY literal centroid — a pure JVM
-    projection, no join, no shuffle. ``array_min`` of it is the nearest
-    centroid; ``slice(array_sort(...), 1, p)`` is an IVF probe list.
+def kmeans_dist_structs_sql(
+    micro_vec: str, centroids: dict[int, list[float]] | list[list[float]]
+) -> str:
+    """SQL text of the array of ``(d, cid)`` structs — squared distance
+    of a micro-unit BIGINT vector fragment to EVERY literal centroid — a
+    pure JVM projection, no join, no shuffle. ``array_min`` of it is the
+    nearest centroid; ``slice(array_sort(...), 1, p)`` is an IVF probe
+    list.
 
     Distance per centroid: left-fold over dims of
     ``(double(v_d) - c_d)^2`` from 0.0 — the exact op order the oracle's
     ``list_reduce(list_transform(...))`` reproduces.
 
-    Construction form (round-11 optimization; values bit-identical):
-    ONE ``transform`` over a 2-D centroid literal instead of k separate
-    per-centroid fold subtrees. The k x dim literals arrive in a single
-    ``F.expr`` (1 py4j round-trip instead of ~k x dim ``F.lit`` calls —
-    measured 0.96 s -> 0.04 s per 16 x 64 build), constant-fold into one
-    array literal, and the plan carries ONE zip_with/aggregate lambda
-    instead of k copies per distance expression (the optimizer pass
-    over the biggest sweep queries measures 0.2-0.3 s after the change;
-    end-to-end construction of those queries fell 3-6x). Per-row
-    execution is unchanged: the transform evaluates the same k folds in
-    the same IEEE order; ``cid`` comes from the transform index exactly
-    where the literal enumerate() put it before."""
+    Construction form (values bit-identical to every earlier form): ONE
+    ``transform`` over a 2-D centroid literal instead of k separate
+    per-centroid fold subtrees, so the plan carries ONE zip_with/
+    aggregate lambda instead of k copies per distance expression. The
+    whole expression — the k x dim literals, the fold lambdas and the
+    caller's wrapping (``array_min``, the probe slice, the LUT
+    ``transform``) — is SQL text that reaches the JVM in ONE ``F.expr``
+    py4j round trip. Built as k x dim ``F.lit`` calls the literals alone
+    measured 0.96 s per 16 x 64 build against 0.04 s as text; built from
+    Python lambdas, each lambda node cost several more round trips (a
+    warm ``ann_index_serve`` construction at sf0.001: 3,194 py4j
+    commands with lambdas, 943 as text, py4j's garbage-collection
+    notices not counted). Per-row execution is unchanged: the transform
+    evaluates the same k folds in the same IEEE order; ``cid`` is the
+    transform index."""
     if isinstance(centroids, dict):
         centroids = [centroids[c] for c in range(len(centroids))]
-    cents = F.expr(
+    cents = (
         "array("
         + ",".join(
             "array(" + ",".join(_double_lit_sql(x) for x in cent) + ")"
@@ -242,46 +273,70 @@ def kmeans_dist_structs(
         )
         + ")"
     )
-    return F.transform(
-        cents,
-        lambda c, i: F.struct(
-            F.aggregate(
-                F.zip_with(
-                    micro_vec,
-                    c,
-                    lambda x, cc: (x.cast("double") - cc)
-                    * (x.cast("double") - cc),
-                ),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ).alias("d"),
-            i.cast("int").alias("cid"),
-        ),
+    return (
+        f"transform({cents}, (__c, __i) -> named_struct("
+        f"'d', aggregate(zip_with({micro_vec}, __c, (__x, __y) -> "
+        "(CAST(__x AS DOUBLE) - __y) * (CAST(__x AS DOUBLE) - __y)), "
+        "0.0D, (__a, __d) -> __a + __d), "
+        "'cid', CAST(__i AS INT)))"
     )
 
 
+def kmeans_assign_sql(
+    micro_vec: str, centroids: dict[int, list[float]] | list[list[float]]
+) -> str:
+    """SQL text of the nearest-centroid id (ties: smallest squared
+    distance, then smallest cid) — ``array_min`` over
+    :func:`kmeans_dist_structs_sql` (lexicographic on (dist, cid))."""
+    return f"CAST(array_min({kmeans_dist_structs_sql(micro_vec, centroids)}).cid AS INT)"
+
+
 def kmeans_min_struct(
-    micro_vec: Column, centroids: dict[int, list[float]] | list[list[float]]
+    micro_col: str, centroids: dict[int, list[float]] | list[list[float]]
 ) -> Column:
-    """``(d, cid)`` struct of the nearest centroid (ties: smallest
-    squared distance, then smallest cid) — ``array_min`` over
-    :func:`kmeans_dist_structs` (lexicographic on (dist, cid))."""
-    return F.array_min(kmeans_dist_structs(micro_vec, centroids))
+    """``(d, cid)`` struct of the nearest centroid to the micro-unit
+    vector column named ``micro_col`` — see :func:`kmeans_assign_sql`."""
+    return F.expr(
+        f"array_min({kmeans_dist_structs_sql(sql_name(micro_col), centroids)})"
+    )
 
 
 def kmeans_assign_col(
-    micro_vec: Column, centroids: dict[int, list[float]] | list[list[float]]
+    micro_col: str, centroids: dict[int, list[float]] | list[list[float]]
 ) -> Column:
-    """Nearest-centroid id — see :func:`kmeans_min_struct`."""
-    return kmeans_min_struct(micro_vec, centroids)["cid"].cast("int")
+    """Nearest-centroid id of the micro-unit vector column named
+    ``micro_col`` — see :func:`kmeans_assign_sql`."""
+    return F.expr(kmeans_assign_sql(sql_name(micro_col), centroids))
 
 
-def normalized_jvm(vec_col: Column | str) -> Column:
-    """Unit-normalize an array<float> column entirely JVM-side: cast to
-    double, left-fold of squares from 0.0, sqrt, elementwise divide —
-    the same IEEE op order as similarity._normalized_arrow's numpy
-    cumsum and the oracle's ``_SIM_NORM_CTE``, so cosines agree
-    bit-for-bit across all three.
+def kmeans_cell_col(
+    vec_col: str, centroids: dict[int, list[float]] | list[list[float]]
+) -> Column:
+    """Coarse cell of the RAW float vector column named ``vec_col``: the
+    nearest centroid to its micro-unit quantization."""
+    return F.expr(kmeans_assign_sql(micro_sql(sql_name(vec_col)), centroids))
+
+
+def kmeans_probe_col(
+    vec_col: str,
+    centroids: dict[int, list[float]] | list[list[float]],
+    n_probe: int,
+) -> Column:
+    """IVF probe list of the RAW float vector column named ``vec_col``:
+    the ``n_probe`` nearest cells, nearest first (ties on cid)."""
+    ds = kmeans_dist_structs_sql(micro_sql(sql_name(vec_col)), centroids)
+    return F.expr(
+        f"transform(slice(array_sort({ds}), 1, {int(n_probe)}), "
+        "__s -> CAST(__s.cid AS INT))"
+    )
+
+
+def normalized_jvm(vec_col: str) -> Column:
+    """Unit-normalize the array<float> column named ``vec_col`` entirely
+    JVM-side: cast to double, left-fold of squares from 0.0, sqrt,
+    elementwise divide — the same IEEE op order as
+    similarity._normalized_arrow's numpy cumsum and the oracle's
+    ``_SIM_NORM_CTE``, so cosines agree bit-for-bit across all three.
 
     The norm is bound ONCE per row as the lambda variable of a
     transform over the one-element ``array(nrm)``. Written inline as
@@ -289,14 +344,13 @@ def normalized_jvm(vec_col: Column | str) -> Column:
     fold again for every element — O(dim^2) per row; bound, the row
     costs O(dim) and the bits are the same. A null vector gives null,
     an empty one an empty array; a zero-norm vector divides by zero
-    (DIVIDE_BY_ZERO under ANSI mode, NaNs otherwise)."""
-    c = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-    dbl = F.transform(c, lambda x: x.cast("double"))
-    nrm = F.sqrt(
-        F.aggregate(
-            F.transform(dbl, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-        )
+    (DIVIDE_BY_ZERO under ANSI mode, NaNs otherwise). One ``F.expr``."""
+    dbl = f"transform({sql_name(vec_col)}, __x -> CAST(__x AS DOUBLE))"
+    nrm = (
+        f"sqrt(aggregate(transform({dbl}, __x -> __x * __x), 0.0D, "
+        "(__a, __x) -> __a + __x))"
     )
-    return F.element_at(
-        F.transform(F.array(nrm), lambda n: F.transform(dbl, lambda x: x / n)), 1
+    return F.expr(
+        f"element_at(transform(array({nrm}), __n -> "
+        f"transform({dbl}, __x -> __x / __n)), 1)"
     )

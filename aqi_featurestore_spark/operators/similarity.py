@@ -28,10 +28,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
+from aqi_featurestore_spark.operators.clustering import micro_sql, sql_name
 
-def _as_double(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: x.cast("double"))
+
+def _as_double(col: str) -> Column:
+    return F.expr(f"transform({sql_name(col)}, __x -> CAST(__x AS DOUBLE))")
 
 
 # -- Vectorized (Arrow) dot / normalize ------------------------------------
@@ -87,10 +88,14 @@ def _normalized_arrow(col: Column | str) -> Column:
     return norm_udf(F.col(col) if isinstance(col, str) else col)
 
 
-def _dot_fold(a: Column, b: Column) -> Column:
-    """Sequential left-fold dot (the semantic spec above), all JVM: the
-    scorer of the exact re-rank and of maxsim_topk."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
+def _dot_fold(a: str, b: str) -> Column:
+    """Sequential left-fold dot (the semantic spec above) of the vector
+    columns named ``a`` and ``b``, all JVM, one ``F.expr``: the scorer of
+    the exact re-rank and of maxsim_topk."""
+    return F.expr(
+        f"aggregate(zip_with({sql_name(a)}, {sql_name(b)}, (__x, __y) -> __x * __y), "
+        "0.0D, (__s, __t) -> __s + __t)"
+    )
 
 
 def _dot_arrow(a: Column, b: Column) -> Column:
@@ -574,16 +579,9 @@ def _pq_fit_books(
         F.col(id_col).alias("_id"), _cl.normalized_jvm(vec_col).alias("_nv")
     )
     # micro-quantized subvector columns _v0.._v{S-1}: micro(slice(nv)) —
-    # the same values kmeans_fit's _micro_arr produced on the slices.
+    # the same values kmeans_fit's micro_col produced on the slices.
     vc = nv.select(
-        "_id",
-        *[
-            F.transform(
-                F.slice(F.col("_nv"), s * subdim + 1, subdim),
-                lambda x: F.round(x.cast("double") * _cl.MICRO, 0).cast("long"),
-            ).alias(f"_v{s}")
-            for s in range(n_subspaces)
-        ],
+        "_id", *[_micro_slice(s, subdim).alias(f"_v{s}") for s in range(n_subspaces)]
     ).persist()
     try:
         seeds = (
@@ -604,7 +602,7 @@ def _pq_fit_books(
             per_sub = F.array(
                 *[
                     F.struct(
-                        kmeans_assign_col(F.col(f"_v{s}"), books[s]).alias("cid"),
+                        kmeans_assign_col(f"_v{s}", books[s]).alias("cid"),
                         F.col(f"_v{s}").alias("v"),
                     )
                     for s in range(n_subspaces)
@@ -646,6 +644,11 @@ def _pq_fit_books(
         vc.unpersist()
 
 
+def _micro_slice(s: int, subdim: int) -> Column:
+    """Micro-unit BIGINT subvector ``s`` of the normalized ``_nv``."""
+    return F.expr(micro_sql(f"slice(`_nv`, {s * subdim + 1}, {subdim})"))
+
+
 def _pq_sub_frame(
     df: DataFrame,
     keep: list[Column],
@@ -656,36 +659,31 @@ def _pq_sub_frame(
     keep_vec: bool = False,
 ) -> DataFrame:
     """Stage 1 of the two-stage PQ encode: project each row's
-    normalized micro subvectors ONCE as ``_sub{s}`` columns. The
-    downstream code/LUT projections then reference cheap attributes.
+    normalized vector ONCE as ``_nv`` and its micro subvectors as
+    ``_sub{s}`` columns. The downstream code/LUT projections then
+    reference cheap attributes, and the query side of every ADC scan
+    carries ``_nv`` on as ``q_vec``, the vector its exact re-rank
+    scores with (:func:`_exact_rerank`): each query is normalized once
+    per serve.
 
     The split into two selects is DELIBERATE and load-bearing:
-    ``kmeans_dist_structs`` references its input vector once per
+    ``kmeans_dist_structs_sql`` references its input vector once per
     centroid, and Catalyst's interpreted higher-order functions do no
-    common-subexpression sharing — inlining the O(dim) normalize fold
-    (itself O(dim) per element, O(dim^2) per row) into 16 centroid
-    folds re-normalized every row 16x per subspace. CollapseProject
-    refuses to merge projections when it would duplicate non-cheap
-    expressions, so this boundary survives optimization. Two stages
-    here: the full normalized vector once (``_nv``), then the four
-    micro subvector slices from it — so the O(dim^2) fold runs once
-    per row, not once per subspace or per centroid. Measured on the
-    sf1 probe (20k x 64-dim): corpus encode 473s -> ~10s, identical
-    bits (same expressions, staged)."""
+    common-subexpression sharing — inlining the normalize fold into 16
+    centroid folds re-normalized every row 16x per subspace.
+    CollapseProject refuses to merge projections when it would
+    duplicate non-cheap expressions, so this boundary survives
+    optimization. Two stages here: the full normalized vector once
+    (``_nv``), then the micro subvector slices from it — so the
+    normalize runs once per row, not once per subspace or per
+    centroid. Measured on the sf1 probe (20k x 64-dim): corpus encode
+    473s -> ~10s, identical bits (same expressions, staged)."""
     from aqi_featurestore_spark.operators import clustering as _cl
 
     cols = list(keep) + ([F.col(vec_col)] if keep_vec else [])
     nv = df.select(*cols, _cl.normalized_jvm(vec_col).alias("_nv"))
-    passthrough = [c for c in nv.columns if c != "_nv"]
     return nv.select(
-        *passthrough,
-        *[
-            F.transform(
-                F.slice(F.col("_nv"), s * subdim + 1, subdim),
-                lambda x: F.round(x * _cl.MICRO, 0).cast("long"),
-            ).alias(f"_sub{s}")
-            for s in range(n_subspaces)
-        ],
+        "*", *[_micro_slice(s, subdim).alias(f"_sub{s}") for s in range(n_subspaces)]
     )
 
 
@@ -695,37 +693,37 @@ def _pq_code_cols(books, n_subspaces: int) -> list[Column]:
     from aqi_featurestore_spark.operators import clustering as _cl
 
     return [
-        _cl.kmeans_assign_col(F.col(f"_sub{s}"), books[s]).alias(f"c{s}")
+        _cl.kmeans_assign_col(f"_sub{s}", books[s]).alias(f"c{s}")
         for s in range(n_subspaces)
     ]
 
 
-def _pq_lut_cols(books, n_subspaces: int) -> list[Column]:
-    """``lut{s}`` columns: per-query squared distances to every codeword
-    of subspace ``s`` (``n_codes`` doubles) — the ADC lookup tables —
-    from the ``_sub{s}`` columns of a :func:`_pq_sub_frame` projection."""
+def _pq_lut_sql(books, s: int) -> str:
+    """SQL text of subspace ``s``'s ADC lookup table: the squared
+    distances of ``_sub{s}`` to every codeword (``n_codes`` doubles)."""
     from aqi_featurestore_spark.operators import clustering as _cl
 
+    ds = _cl.kmeans_dist_structs_sql(f"`_sub{s}`", books[s])
+    return f"transform({ds}, __s -> __s.d)"
+
+
+def _pq_lut_cols(books, n_subspaces: int) -> list[Column]:
+    """``lut{s}`` columns: per-query ADC lookup tables (:func:`_pq_lut_sql`)
+    from the ``_sub{s}`` columns of a :func:`_pq_sub_frame` projection."""
     return [
-        F.transform(
-            _cl.kmeans_dist_structs(F.col(f"_sub{s}"), books[s]),
-            lambda st: st["d"],
-        ).alias(f"lut{s}")
-        for s in range(n_subspaces)
+        F.expr(_pq_lut_sql(books, s)).alias(f"lut{s}") for s in range(n_subspaces)
     ]
 
 
 def _pq_adc_dist(n_subspaces: int) -> Column:
     """Left-assoc sum of the per-subspace LUT lookups — the ADC score."""
-    dist = F.element_at("lut0", F.col("c0") + 1)
-    for s in range(1, n_subspaces):
-        dist = dist + F.element_at(f"lut{s}", F.col(f"c{s}") + 1)
-    return dist
+    return F.expr(
+        " + ".join(f"element_at(lut{s}, c{s} + 1)" for s in range(n_subspaces))
+    )
 
 
 def _exact_rerank(
     shortlist: DataFrame,
-    queries: DataFrame,
     corpus: DataFrame,
     *,
     id_col: str,
@@ -733,27 +731,29 @@ def _exact_rerank(
     k: int,
     round_scores: int,
 ) -> DataFrame:
-    """Exact cosine re-rank of a candidate-bounded (q_id, n_id)
+    """Exact cosine re-rank of a candidate-bounded (q_id, n_id, q_vec)
     shortlist to the final top-k — the second stage every compressed-
-    domain ANN scan shares. All JVM: the bind-once ``normalized_jvm``
-    and the ``_dot_fold`` left fold, the same bits as the Arrow pair
-    (see module header) with no Python boundary on the serving path."""
+    domain ANN scan shares. ``q_vec`` is the query's normalized vector,
+    carried from its encode (:func:`_pq_sub_frame`), so no query is
+    normalized twice. The RAW corpus vectors join the shortlist on
+    ``n_id`` and only then normalize: ``rescore x |Q|`` candidate rows,
+    never the whole corpus table, and a zero-norm corpus row that is
+    never a candidate is never divided. All JVM: the bind-once
+    ``normalized_jvm`` and the ``_dot_fold`` left fold, the same bits as
+    the Arrow pair (see module header) with no Python boundary on the
+    serving path."""
     from aqi_featurestore_spark.operators import clustering as _cl
 
-    qv = queries.select(
-        F.col(id_col).alias("q_id"), _cl.normalized_jvm(vec_col).alias("q_vec")
+    cand = shortlist.select("q_id", "n_id", "q_vec").join(
+        corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_raw")),
+        "n_id",
     )
-    nv = corpus.select(
-        F.col(id_col).alias("n_id"), _cl.normalized_jvm(vec_col).alias("n_vec")
-    )
-    cand = (
-        shortlist.select("q_id", "n_id")
-        .join(F.broadcast(qv), "q_id")
-        .join(nv, "n_id")
-    )
-    cos = _dot_fold(F.col("q_vec"), F.col("n_vec"))
     rescored = cand.select(
-        "q_id", "n_id", F.round(cos, round_scores).alias("cos_sim")
+        "q_id", "n_id", "q_vec", _cl.normalized_jvm("n_raw").alias("n_vec")
+    ).select(
+        "q_id",
+        "n_id",
+        F.round(_dot_fold("q_vec", "n_vec"), round_scores).alias("cos_sim"),
     )
     w2 = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("n_id").asc()
@@ -846,23 +846,23 @@ def cosine_topk_pq(
     ).select("n_id", *_pq_code_cols(books, n_subspaces))
     luts = _pq_sub_frame(
         queries, [F.col(id_col).alias("q_id")], vec_col, n_subspaces, subdim
-    ).select("q_id", *_pq_lut_cols(books, n_subspaces))
+    ).select("q_id", F.col("_nv").alias("q_vec"), *_pq_lut_cols(books, n_subspaces))
     pairs = cds.join(F.broadcast(luts), F.col("q_id") != F.col("n_id"))
     dist = _pq_adc_dist(n_subspaces)
     scored = pairs.select(
         "q_id",
         "n_id",
+        "q_vec",
         F.round(dist / F.lit(1_000_000_000_000.0), round_scores).alias("pq_dist"),
     )
     w = Window.partitionBy("q_id").orderBy(F.col("pq_dist").asc(), F.col("n_id").asc())
     adc = scored.select(
-        "q_id", "n_id", "pq_dist", F.row_number().over(w).alias("rk")
+        "q_id", "n_id", "q_vec", "pq_dist", F.row_number().over(w).alias("rk")
     ).where(F.col("rk") <= (rescore if rescore else k))
     if not rescore:
-        return adc
+        return adc.drop("q_vec")
     return _exact_rerank(
         adc,
-        queries,
         corpus,
         id_col=id_col,
         vec_col=vec_col,
@@ -985,23 +985,10 @@ def _kmeans_coarse_cols(
             corpus, k=n_lists, iters=iters, id_col=id_col, vec_col=vec_col
         )
 
-    def _micro(col: str) -> Column:
-        return F.transform(
-            F.col(col),
-            lambda x: F.round(x.cast("double") * _cl.MICRO, 0).cast("long"),
-        )
-
-    def assign_list(col: str) -> Column:
-        return _cl.kmeans_assign_col(_micro(col), cents)
-
-    def probe_lists(col: str) -> Column:
-        ds = _cl.kmeans_dist_structs(_micro(col), cents)
-        return F.transform(
-            F.slice(F.array_sort(ds), 1, n_probe),
-            lambda s: s["cid"].cast("int"),
-        )
-
-    return assign_list, probe_lists
+    return (
+        lambda col: _cl.kmeans_cell_col(col, cents),
+        lambda col: _cl.kmeans_probe_col(col, cents, n_probe),
+    )
 
 
 def cosine_topk_ivf(
@@ -1249,11 +1236,13 @@ def cosine_topk_ivfpq(
         keep_vec=True,
     ).select(
         "q_id",
+        F.col("_nv").alias("q_vec"),
         probe_lists(vec_col).alias("_probes"),
         *_pq_lut_cols(books, n_subspaces),
     )
     q = q0.select(
         "q_id",
+        "q_vec",
         F.explode("_probes").alias("list_id"),
         *[f"lut{s}" for s in range(n_subspaces)],
     )
@@ -1264,19 +1253,19 @@ def cosine_topk_ivfpq(
     scored = pairs.select(
         "q_id",
         "n_id",
+        "q_vec",
         F.round(dist / F.lit(1_000_000_000_000.0), round_scores).alias("pq_dist"),
     )
     w = Window.partitionBy("q_id").orderBy(
         F.col("pq_dist").asc(), F.col("n_id").asc()
     )
     adc = scored.select(
-        "q_id", "n_id", "pq_dist", F.row_number().over(w).alias("rk")
+        "q_id", "n_id", "q_vec", "pq_dist", F.row_number().over(w).alias("rk")
     ).where(F.col("rk") <= (rescore if rescore else k))
     if not rescore:
-        return adc
+        return adc.drop("q_vec")
     return _exact_rerank(
         adc,
-        queries,
         corpus,
         id_col=id_col,
         vec_col=vec_col,
@@ -1314,8 +1303,6 @@ def pq_reconstruction_stats(
     centroids; the error pass is a zero-join projection (distances to
     broadcast literal codewords) into one bounded aggregate of
     n_subspaces rows."""
-    from aqi_featurestore_spark.operators import clustering as _cl
-
     if books is None:
         books = _pq_fit_books(
             corpus,
@@ -1333,17 +1320,9 @@ def pq_reconstruction_stats(
     )
     limb = 100_000_000
     err_cols = [
-        F.round(
-            F.array_min(
-                F.transform(
-                    _cl.kmeans_dist_structs(F.col(f"_sub{s}"), books[s]),
-                    lambda st: st["d"],
-                )
-            ),
-            0,
-        )
-        .cast("long")
-        .alias(f"e{s}")
+        F.expr(
+            f"CAST(round(array_min({_pq_lut_sql(books, s)}), 0) AS BIGINT)"
+        ).alias(f"e{s}")
         for s in range(n_subspaces)
     ]
     errs = sub.select(F.posexplode(F.array(*err_cols)).alias("subspace_id", "e"))
@@ -1405,7 +1384,7 @@ def maxsim_topk(
     )
     # broadcast nested-loop: streamed corpus tokens x bounded query tokens
     pairs = c.crossJoin(q)
-    dot = _dot_fold(F.col("q_vec"), F.col("n_vec"))
+    dot = _dot_fold("q_vec", "n_vec")
     tokmax = pairs.groupBy("q_id", "q_tok", "n_id").agg(
         F.max(dot).alias("mx")
     )

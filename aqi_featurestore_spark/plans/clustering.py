@@ -40,6 +40,7 @@ from aqi_featurestore_spark.operators.clustering import (
     MICRO,
     kmeans_fit,
     kmeans_min_struct,
+    micro_col,
 )
 from aqi_featurestore_spark.plans._base import _q, _read, session_artifact
 
@@ -192,11 +193,9 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _cluster_fit(spark, sf_dir)
     vc = e.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
-        ).alias("v"),
+        micro_col("embedding").alias("v"),
     )
-    m = kmeans_min_struct(F.col("v"), cents)
+    m = kmeans_min_struct("v", cents)
     return vc.select(
         "vec_id",
         m["cid"].cast("int").alias("cluster_id"),
@@ -249,15 +248,13 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _cluster_fit(spark, sf_dir)
     vc = e.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
-        ).alias("v"),
+        micro_col("embedding").alias("v"),
         F.col("embedding"),
     )
     assigned = vc.select(
         "vec_id",
         "embedding",
-        kmeans_min_struct(F.col("v"), cents)["cid"].cast("int").alias("cluster_id"),
+        kmeans_min_struct("v", cents)["cid"].cast("int").alias("cluster_id"),
     )
     # Round-12: the within-cluster pair scan runs as ONE batched
     # mapInArrow stage per cluster (the similarity module's batched
@@ -363,13 +360,11 @@ def q_cluster_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _cluster_fit(spark, sf_dir)
     vc = e.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
-        ).alias("v"),
+        micro_col("embedding").alias("v"),
     )
     assigned = vc.select(
         "vec_id",
-        kmeans_min_struct(F.col("v"), cents)["cid"].cast("int").alias("cluster_id"),
+        kmeans_min_struct("v", cents)["cid"].cast("int").alias("cluster_id"),
     )
     sz = assigned.groupBy("cluster_id").agg(F.count("*").alias("n_vecs"))
     # total derived from the k-row size table, NOT a second corpus pass:
@@ -424,11 +419,9 @@ def q_cluster_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _cluster_fit(spark, sf_dir)
     vc = e.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
-        ).alias("v"),
+        micro_col("embedding").alias("v"),
     )
-    m = kmeans_min_struct(F.col("v"), cents)
+    m = kmeans_min_struct("v", cents)
     af = vc.select("vec_id", m["cid"].cast("int").alias("cluster_id"),
                    m["d"].alias("d"))
     from pyspark.sql import Window as W
@@ -471,11 +464,9 @@ def q_kmeans_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _cluster_fit(spark, sf_dir)
     vc = e.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
-        ).alias("v"),
+        micro_col("embedding").alias("v"),
     )
-    m = kmeans_min_struct(F.col("v"), cents)
+    m = kmeans_min_struct("v", cents)
     af = vc.select(m["cid"].cast("int").alias("cluster_id"),
                    F.round(m["d"], 0).cast("long").alias("di"))
     return (
@@ -517,11 +508,9 @@ def q_kmeans_assign_fp(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _cluster_fit(spark, sf_dir, seeding="farthest")
     vc = e.select(
         "vec_id",
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
-        ).alias("v"),
+        micro_col("embedding").alias("v"),
     )
-    m = kmeans_min_struct(F.col("v"), cents)
+    m = kmeans_min_struct("v", cents)
     return vc.select(
         "vec_id",
         m["cid"].cast("int").alias("cluster_id"),
@@ -581,13 +570,11 @@ def q_kmeans_warm_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, k=_SERVE_K, iters=1, init=cents3
     )
     vc = e.select(
-        F.transform(
-            "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
-        ).alias("v"),
+        micro_col("embedding").alias("v"),
     )
     assigned = vc.select(
-        kmeans_min_struct(F.col("v"), cents3)["cid"].alias("c_old"),
-        kmeans_min_struct(F.col("v"), cents4)["cid"].alias("c_new"),
+        kmeans_min_struct("v", cents3)["cid"].alias("c_old"),
+        kmeans_min_struct("v", cents4)["cid"].alias("c_new"),
     )
     ag = assigned.groupBy("c_new").agg(
         F.count("*").cast("long").alias("n_docs"),

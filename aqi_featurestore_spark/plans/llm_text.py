@@ -915,13 +915,12 @@ def q_serving_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     passes, k x dim driver state); the returned plan is one pure-JVM
     literal-centroid assignment map into a 16-cell aggregate — the rank
     window and totals ride the bounded cell domain."""
-    from aqi_featurestore_spark.operators.clustering import kmeans_assign_col
-    from aqi_featurestore_spark.operators.ann_index import _micro_col
+    from aqi_featurestore_spark.operators.clustering import kmeans_cell_col
 
     e = _read(spark, sf_dir, "embeddings")
     cents, _books = _serving_fits(spark, sf_dir)
     cellc = (
-        e.select(kmeans_assign_col(_micro_col("embedding"), cents).alias("list_id"))
+        e.select(kmeans_cell_col("embedding", cents).alias("list_id"))
         .groupBy("list_id")
         .agg(F.count("*").cast("bigint").alias("n_rows"))
     )
@@ -1945,6 +1944,8 @@ def q_maxsim_shortlist_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN lookups (`similarity_topk_ivfpq` per token) for candidate
     generation and rescores the bounded union — this query prices what
     that shortlist loses."""
+    from aqi_featurestore_spark.operators.similarity import _dot_fold
+
     e = _read(spark, sf_dir, "embeddings")
     mv = e.select(
         F.expr(f"vec_id div {_MAXSIM_C}").alias("mdoc_id"),
@@ -1962,11 +1963,7 @@ def q_maxsim_shortlist_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("mdoc_id").alias("n_id"),
         normalized_arrow("embedding").alias("n_vec"),
     )
-    dot = F.aggregate(
-        F.zip_with("q_vec", "n_vec", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, x: s + x,
-    )
+    dot = _dot_fold("q_vec", "n_vec")
     tm = (
         c.crossJoin(q)
         .groupBy("q_id", "q_tok", "n_id")

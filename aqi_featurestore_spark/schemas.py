@@ -3,9 +3,13 @@
 The reference declares its schemas at every hop (Arrow schema at
 airflow/dags/load.py:154-168, Feast Field schema at
 feast/features/aqi_feature.py:21-26); inference appears only on a metadata
-side-channel. We keep that discipline: every source read and every store
-write goes through a schema from this module, so Catalyst can prune scans
-and never pays inference cost on a 100 TB read.
+side-channel. This module holds the declared schemas. Not every read uses
+one yet: of the testdata tables (sources/testdata.py), only ``embeddings``
+reads with its declared schema (``EMBEDDINGS``), so building a plan over
+it runs no Spark job. ``events``, ``documents`` and the TPC-H tables
+(``region``, ``nation``, ``customer``, ``supplier``, ``part``, ``orders``,
+``lineitem``) still infer theirs from the parquet footers, which costs one
+Spark job per read.
 """
 
 from __future__ import annotations

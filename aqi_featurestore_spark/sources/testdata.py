@@ -16,6 +16,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from aqi_featurestore_spark.schemas import EMBEDDINGS
+
+#: tables read with their declared schema instead of an inferred one;
+#: inferring a parquet schema runs a Spark job at every read
+DECLARED = {"embeddings": EMBEDDINGS}
+
 
 def _pin_session(spark: SparkSession) -> None:
     """Runtime-settable confs the engine depends on, applied defensively:
@@ -37,11 +43,16 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one testdata table, normalizing timestamp units where needed."""
+    """Read one testdata table, normalizing timestamp units where needed.
+    A table in :data:`DECLARED` reads with its declared schema, so
+    building a plan over it runs no Spark job."""
     if name == "events":
         return read_events(spark, sf_dir)
     _pin_session(spark)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    reader = spark.read
+    if name in DECLARED:
+        reader = reader.schema(DECLARED[name])
+    return reader.parquet(f"{sf_dir}/{name}.parquet")
 
 
 TESTDATA_TABLES = (

@@ -377,3 +377,62 @@ def test_vacuum_ann_index_contract(spark, emb, built, tmp_path):
     assert _rows(current_index(idx3)) == asof3_before
     with pytest.raises(ValueError, match="retention floor"):
         read_ann_index(spark, path, as_of=2)
+
+
+def test_zero_norm_row_that_is_never_a_candidate_serves(spark, emb, built):
+    """The exact re-rank normalizes only its candidates: a zero-norm row
+    in ``rerank_vectors`` that no probe reaches (it is not in the index)
+    leaves the serve unchanged. A build over a zero-norm row still
+    raises DIVIDE_BY_ZERO under ANSI mode — refusing or excluding such
+    rows at ingest is an open decision."""
+    index, model = built
+    zero = spark.createDataFrame(
+        [(10**9, [0.0] * 64, 0)], "vec_id long, embedding array<float>, label int"
+    )
+    with_zero = emb.unionByName(zero)
+    q = emb.where(F.col("vec_id") % 50 == 0)
+    got = ann_index_topk(index, q, model, k=10, rescore=50, rerank_vectors=with_zero)
+    want = ann_index_topk(index, q, model, k=10, rescore=50, rerank_vectors=emb)
+    assert _rows(got) == _rows(want)
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        build_ann_index(with_zero, n_lists=16, n_probe=4, n_subspaces=4, n_codes=16)
+
+
+def test_warm_serve_construction_runs_no_job_and_few_py4j_commands(spark):
+    """Construct-layer pin: once the session's ANN store is warm, building
+    the ``ann_index_serve`` plan launches no Spark job (the embeddings
+    read has a declared schema) and stays under a py4j-command ceiling
+    (every vector expression is one SQL string; the lambda-built forms
+    took 3,200 to 3,800 such commands; the SQL forms about 950)."""
+    from py4j.clientserver import ClientServerConnection
+
+    from aqi_featurestore_spark.plans import QUERIES
+
+    serve = QUERIES["ann_index_serve"]
+    serve(spark, SF_DIR)  # warm: builds the session fits and store
+    sc = spark.sparkContext
+    group = "ann-serve-construct-pin"
+    sends = []
+    send = ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        # py4j's garbage-collection notices ("m" memory commands) follow
+        # the Python GC, not the construction; count the rest
+        if not command.startswith("m\n"):
+            sends.append(1)
+        return send(self, command, *args, **kwargs)
+
+    sc.setJobGroup(group, "warm construction")
+    try:
+        ClientServerConnection.send_command = counting
+        try:
+            serve(spark, SF_DIR)
+        finally:
+            ClientServerConnection.send_command = send
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert 0 < len(sends) < 1500, len(sends)

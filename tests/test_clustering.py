@@ -5,6 +5,11 @@ oracle by test_oracle_parity; these pin the OPERATOR contracts directly:
 planted clusters are recovered, empty clusters carry forward, the
 assignment plan never shuffles, and the JVM normalizer matches the
 Arrow one and its old per-element form bit-for-bit.
+
+The vector expressions are SQL text (one ``F.expr`` each); the
+Python-lambda forms they replaced are kept HERE as references — the
+normalize, micro-quantize, centroid distance structs, LUT and dot
+fold — and the SQL forms must give the same bits.
 """
 
 from __future__ import annotations
@@ -19,10 +24,21 @@ from pyspark.sql import functions as F
 from aqi_featurestore_spark.operators.clustering import (
     MICRO,
     kmeans_assign_col,
+    kmeans_cell_col,
+    kmeans_dist_structs_sql,
     kmeans_fit,
     kmeans_min_struct,
+    kmeans_probe_col,
+    micro_col,
     normalized_jvm,
 )
+from aqi_featurestore_spark.operators.similarity import (
+    _dot_fold,
+    _pq_lut_cols,
+    _pq_sub_frame,
+)
+
+SF01_EMB = "/root/testdata/sf0.1/embeddings.parquet"
 
 
 def _planted(spark, *, n_per=40, dim=8, spread=0.05, seed=11):
@@ -52,7 +68,7 @@ def test_kmeans_recovers_planted_clusters(spark):
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
         ).alias("v"),
-    ).select("vec_id", kmeans_assign_col(F.col("v"), cents).alias("cid"))
+    ).select("vec_id", kmeans_assign_col("v", cents).alias("cid"))
     got = {r["vec_id"]: r["cid"] for r in out.collect()}
     # cluster ids are arbitrary — check the PARTITION matches the truth
     by_true: dict[int, set[int]] = {}
@@ -81,7 +97,7 @@ def test_assignment_plan_is_pure_projection(spark):
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
         ).alias("v")
-    ).select(kmeans_min_struct(F.col("v"), cents).alias("m"))
+    ).select(kmeans_min_struct("v", cents).alias("m"))
     plan = out._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
@@ -117,8 +133,186 @@ def _normalized_inline(vec_col):
     return F.transform(dbl, lambda x: x / nrm)
 
 
+def _normalized_lambda(vec_col):
+    """The bind-once normalize built from Python lambdas — the form the
+    SQL-text ``normalized_jvm`` replaced."""
+    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    nrm = F.sqrt(
+        F.aggregate(
+            F.transform(dbl, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
+        )
+    )
+    return F.element_at(
+        F.transform(F.array(nrm), lambda n: F.transform(dbl, lambda x: x / n)), 1
+    )
+
+
+def _micro_lambda(vec_col):
+    return F.transform(
+        F.col(vec_col), lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
+    )
+
+
+def _dist_structs_lambda(micro_vec, centroids):
+    """The lambda-built centroid distance structs (k-literal transform)."""
+    from aqi_featurestore_spark.operators.clustering import _double_lit_sql
+
+    cents = F.expr(
+        "array("
+        + ",".join(
+            "array(" + ",".join(_double_lit_sql(x) for x in cent) + ")"
+            for cent in centroids
+        )
+        + ")"
+    )
+    return F.transform(
+        cents,
+        lambda c, i: F.struct(
+            F.aggregate(
+                F.zip_with(
+                    micro_vec,
+                    c,
+                    lambda x, cc: (x.cast("double") - cc) * (x.cast("double") - cc),
+                ),
+                F.lit(0.0),
+                lambda acc, d: acc + d,
+            ).alias("d"),
+            i.cast("int").alias("cid"),
+        ),
+    )
+
+
+def _probe_lambda(vec_col, centroids, n_probe):
+    ds = _dist_structs_lambda(_micro_lambda(vec_col), centroids)
+    return F.transform(
+        F.slice(F.array_sort(ds), 1, n_probe), lambda s: s["cid"].cast("int")
+    )
+
+
+def _lut_lambda(sub_col, book):
+    return F.transform(
+        _dist_structs_lambda(F.col(sub_col), book), lambda st: st["d"]
+    )
+
+
+def _dot_lambda(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x
+    )
+
+
+def _centroids(rows, k, offset=0.25):
+    """k literal centroids in micro units with fractional parts, taken
+    from the first k micro vectors (deterministic, no fit job)."""
+    return [[float(x) + offset for x in r] for r in rows[:k]]
+
+
+@pytest.fixture(scope="module")
+def sf01(spark):
+    e = spark.read.parquet(SF01_EMB)
+    assert e.count() == 2000
+    return e
+
+
+def test_sql_forms_match_lambda_forms_on_sf01(spark, sf01):
+    """Normalize, micro-quantize, centroid distance structs, the
+    nearest-cell and probe builders, and the dot fold: SQL text and the
+    lambda forms give the same bits on every sf0.1 vector."""
+    micro_rows = [r["v"] for r in sf01.orderBy("vec_id").limit(16)
+                  .select(_micro_lambda("embedding").alias("v")).collect()]
+    cents = _centroids(micro_rows, 16)
+    q = sf01.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("q_id"), normalized_jvm("embedding").alias("q_nv")
+    )
+    df = sf01.select(
+        "vec_id",
+        "embedding",
+        normalized_jvm("embedding").alias("nv_sql"),
+        _normalized_lambda("embedding").alias("nv_lam"),
+        micro_col("embedding").alias("v_sql"),
+        _micro_lambda("embedding").alias("v_lam"),
+    ).crossJoin(F.broadcast(q))
+    rows = df.select(
+        "nv_sql", "nv_lam", "v_sql", "v_lam",
+        F.expr(kmeans_dist_structs_sql("v_sql", cents)).alias("ds_sql"),
+        _dist_structs_lambda(F.col("v_lam"), cents).alias("ds_lam"),
+        kmeans_min_struct("v_sql", cents).alias("m_sql"),
+        F.array_min(_dist_structs_lambda(F.col("v_lam"), cents)).alias("m_lam"),
+        kmeans_assign_col("v_sql", cents).alias("a_sql"),
+        kmeans_cell_col("embedding", cents).alias("cell_sql"),
+        F.array_min(_dist_structs_lambda(_micro_lambda("embedding"), cents))["cid"]
+        .cast("int").alias("a_lam"),
+        kmeans_probe_col("embedding", cents, 4).alias("p_sql"),
+        _probe_lambda("embedding", cents, 4).alias("p_lam"),
+        _dot_fold("q_nv", "nv_sql").alias("dot_sql"),
+        _dot_lambda(F.col("q_nv"), F.col("nv_lam")).alias("dot_lam"),
+    ).collect()
+    assert len(rows) == 6000
+    for r in rows:
+        assert r["nv_sql"] == r["nv_lam"]  # bit-identical, not approx
+        assert r["v_sql"] == r["v_lam"]
+        assert r["ds_sql"] == r["ds_lam"]
+        assert r["m_sql"] == r["m_lam"]
+        assert r["a_sql"] == r["cell_sql"] == r["a_lam"] == r["m_lam"]["cid"]
+        assert r["p_sql"] == r["p_lam"]
+        assert r["dot_sql"] == r["dot_lam"]
+
+
+def test_pq_lut_sql_matches_lambda_form_on_sf01(spark, sf01):
+    """The ADC lookup tables over the staged ``_sub{s}`` columns."""
+    sub = _pq_sub_frame(sf01, [F.col("vec_id")], "embedding", 4, 16)
+    first = sub.orderBy("vec_id").limit(16).collect()
+    books = [_centroids([r[f"_sub{s}"] for r in first], 16) for s in range(4)]
+    rows = sub.select(
+        *_pq_lut_cols(books, 4),
+        *[_lut_lambda(f"_sub{s}", books[s]).alias(f"ref{s}") for s in range(4)],
+    ).collect()
+    assert len(rows) == 2000
+    for r in rows:
+        for s in range(4):
+            assert r[f"lut{s}"] == r[f"ref{s}"]
+
+
+@pytest.mark.parametrize("name", ["x", "c", "i", "n", "vec `x` 1.a"])
+def test_sql_forms_resolve_any_column_name(spark, name):
+    """Lambda variables carry reserved names, and names are quoted: an
+    input column called like a lambda variable, or one that needs
+    backticks, is read as the column."""
+    rows = [(0, [3.0, 4.0, 0.5, -2.0]), (1, [1.0, -1.0, 2.0, 0.25])]
+    base = spark.createDataFrame(rows, "id int, embedding array<float>")
+    df = base.select("id", "embedding", F.col("embedding").alias(name))
+    cents = [[1e6, -1e6, 0.0, 2.5e5], [3e6, 4e6, 5e5, -2e6]]
+    got = df.select(
+        normalized_jvm(name).alias("nv"),
+        _normalized_lambda("embedding").alias("nv_ref"),
+        micro_col(name).alias("v"),
+        _micro_lambda("embedding").alias("v_ref"),
+        kmeans_cell_col(name, cents).alias("cell"),
+        F.array_min(_dist_structs_lambda(_micro_lambda("embedding"), cents))["cid"]
+        .cast("int").alias("cell_ref"),
+        kmeans_probe_col(name, cents, 2).alias("p"),
+        _probe_lambda("embedding", cents, 2).alias("p_ref"),
+        _dot_fold(name, "embedding").alias("dot"),
+        _dot_lambda(F.col("embedding"), F.col("embedding")).alias("dot_ref"),
+    ).collect()
+    for r in got:
+        assert r["nv"] == r["nv_ref"]
+        assert r["v"] == r["v_ref"]
+        assert r["cell"] == r["cell_ref"]
+        assert r["p"] == r["p_ref"]
+        assert r["dot"] == r["dot_ref"]
+    # the micro-vector builders read a micro column of the same name
+    assigned = df.select(micro_col(name).alias(name)).select(
+        kmeans_assign_col(name, cents).alias("a"),
+        kmeans_min_struct(name, cents)["cid"].alias("m"),
+    )
+    assert [(r["a"], r["m"]) for r in assigned.collect()] == [
+        (r["cell"], r["cell"]) for r in got
+    ]
+
+
 def test_normalized_jvm_matches_inline_form_on_sf01(spark):
-    e = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    e = spark.read.parquet(SF01_EMB)
     rows = e.select(
         normalized_jvm("embedding").alias("bound"),
         _normalized_inline("embedding").alias("inline"),
@@ -138,17 +332,26 @@ def test_normalized_jvm_null_and_empty_vectors(spark):
             "id",
             normalized_jvm("embedding").alias("bound"),
             _normalized_inline("embedding").alias("inline"),
+            _normalized_lambda("embedding").alias("lam"),
+            micro_col("embedding").alias("v"),
+            _micro_lambda("embedding").alias("v_lam"),
         ).collect()
     }
     assert rows[0]["bound"] is None and rows[0]["inline"] is None
-    assert rows[1]["bound"] == [] and rows[1]["inline"] == []
-    assert rows[2]["bound"] == rows[2]["inline"] == [0.6, 0.8]
+    assert rows[0]["lam"] is None
+    assert rows[0]["v"] is None and rows[0]["v_lam"] is None
+    assert rows[1]["bound"] == [] and rows[1]["inline"] == [] == rows[1]["lam"]
+    assert rows[1]["v"] == [] == rows[1]["v_lam"]
+    assert rows[2]["bound"] == rows[2]["inline"] == rows[2]["lam"] == [0.6, 0.8]
+    assert rows[2]["v"] == rows[2]["v_lam"] == [3_000_000, 4_000_000]
 
 
-@pytest.mark.parametrize("form", [normalized_jvm, _normalized_inline])
+@pytest.mark.parametrize(
+    "form", [normalized_jvm, _normalized_inline, _normalized_lambda]
+)
 def test_zero_norm_vector_divides_by_zero(spark, form):
     """Under ANSI mode (Spark 4's default) a zero-norm vector raises in
-    the bound form exactly as it did in the inline one."""
+    the SQL form exactly as it did in the lambda and inline ones."""
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     df = spark.createDataFrame([(0, [0.0, 0.0, 0.0])], "id int, embedding array<float>")
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
@@ -214,7 +417,7 @@ def test_kmeans_assignment_works_in_streaming(spark, tmp_path):
         F.transform(
             "embedding", lambda x: F.round(x.cast("double") * MICRO, 0).cast("long")
         ).alias("v"),
-    ).select("vec_id", kmeans_assign_col(F.col("v"), cents).alias("cid"))
+    ).select("vec_id", kmeans_assign_col("v", cents).alias("cid"))
     q = (
         assigned.writeStream.format("memory")
         .queryName("km_stream")
@@ -236,7 +439,7 @@ def test_kmeans_assignment_works_in_streaming(spark, tmp_path):
                 lambda x: F.round(x.cast("double") * MICRO, 0).cast("long"),
             ).alias("v"),
         )
-        .select("vec_id", kmeans_assign_col(F.col("v"), cents).alias("cid"))
+        .select("vec_id", kmeans_assign_col("v", cents).alias("cid"))
         .collect()
     }
     assert got == batch and len(got) == 30

@@ -46,7 +46,7 @@ def test_pairs_batched_equals_fold(vectors):
     )
     a = v.select(F.col("id").alias("d1"), F.col("vec").alias("v1"))
     b = v.select(F.col("id").alias("d2"), F.col("vec").alias("v2"))
-    cos = _dot_fold(F.col("v1"), F.col("v2"))
+    cos = _dot_fold("v1", "v2")
     ref = (
         a.join(F.broadcast(b), F.col("d1") < F.col("d2"))
         .select("d1", "d2", F.round(cos, 6).alias("cos_sim"))
@@ -76,7 +76,7 @@ def test_topk_batched_equals_fold(vectors):
         .where(F.col("q_id") != F.col("n_id"))
         .where(F.col("_q_ex") != F.col("_n_ex"))
     )
-    cos = _dot_fold(F.col("q_vec"), F.col("n_vec"))
+    cos = _dot_fold("q_vec", "n_vec")
     scored = pairs.select("q_id", "n_id", F.round(cos, 6).alias("cos_sim"))
     w = Window.partitionBy("q_id").orderBy(
         F.col("cos_sim").desc(), F.col("n_id").asc()

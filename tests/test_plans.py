@@ -219,11 +219,14 @@ EXCHANGE_CEILING = {
     # similarity_topk_pq/ivfpq, pq_reconstruction_error, ann_recall_methods:
     # +1 per corpus encode round-11 — the PQ encode spreads the corpus side
     # (similarity._spread) so the interpreted code argmins parallelize
-    "similarity_topk_lsh": 2, "similarity_topk_pq": 3,
-    "similarity_topk_ivfpq": 3, "ann_index_serve": 2, "ann_filtered_topk": 2,
+    # The exact re-rank consumers (similarity._exact_rerank) are pinned at
+    # their measured counts: the JVM re-rank joins its candidates to the
+    # corpus by broadcast, so no consumer shuffles for the re-rank itself.
+    "similarity_topk_lsh": 2, "similarity_topk_pq": 2,
+    "similarity_topk_ivfpq": 2, "ann_index_serve": 1, "ann_filtered_topk": 1,
     "ann_index_stats": 4,  # assign agg + totals scalar + rank window + final
     "serving_index_stats": 4,  # same shape over the trained quantizer
-    "ann_probe_sweep": 22,  # 4 lookups vs ONE checkpointed index + exact leg
+    "ann_probe_sweep": 18,  # 4 lookups vs ONE checkpointed index + exact leg
     "classifier_auc": 2,  # bucket-count agg + 1-row rank-sum agg
     "quality_classifier_train": 1,  # the final-round gradient aggregate
     "model_warm_start_train": 1,  # the staged round-8 gradient aggregate
@@ -256,7 +259,7 @@ EXCHANGE_CEILING = {
     "curation_funnel_v2": 12,  # gopher + lm + classifier stages, doc-keyed joins
     "label_noise_audit": 1,  # 10-class disagreement aggregate (fit at build)
     "epoch_shuffle_plan": 1,  # one (epoch, shard) window partitioning
-    "ann_recall_methods": 28,  # +5 ivfpq_km leg; +2 round-11 spreads (brute + pq/ivfpq encodes)
+    "ann_recall_methods": 25,  # +5 ivfpq_km leg; +2 round-11 spreads (brute + pq/ivfpq encodes)
     "similarity_triangles": 6,
     "skew_join_plain": 2, "skew_join_salted": 4, "skew_report": 6,
     "sliding_windows": 1, "small_quantity_revenue": 2,
@@ -281,14 +284,14 @@ EXCHANGE_CEILING = {
     "zone_map_skip_audit": 1,  # one map-combining month-stats aggregate
     # round 9
     "zone_map_zorder_audit": 8,  # 4 single-row summary aggs over 2 checkpointed stats tables
-    "hybrid_rrf_fusion_ann": 7,  # ivfpq leg (2) + checkpointed-index posting join + 2 leg windows + fuse
+    "hybrid_rrf_fusion_ann": 6,  # ivfpq leg (1) + checkpointed-index posting join + 2 leg windows + fuse
     "hybrid_fusion_recall": 5,  # checkpointed fx/fa top-5s + bounded overlap joins
-    "hybrid_rerank_serve": 8,  # the fusion's 7 + the candidate-broadcast rerank window
+    "hybrid_rerank_serve": 7,  # the fusion's 6 + the candidate-broadcast rerank window
     # round 10
     "sparse_topk_serve": 2,  # weights-store scan -> posting join agg + rank window; ZERO build jobs
-    "hybrid_fusion_sweep": 33,  # exact leg + 4 probe lookups vs ONE checkpointed index + 5 fusions
+    "hybrid_fusion_sweep": 29,  # exact leg + 4 probe lookups vs ONE checkpointed index + 5 fusions
     # round 11
-    "hybrid_codebook_sweep": 49,  # exact leg + 6 config lookups vs TWO checkpointed indexes + 7 fusions
+    "hybrid_codebook_sweep": 43,  # exact leg + 6 config lookups vs TWO checkpointed indexes + 7 fusions
     "lm_bigram_quality": 15,  # bigram/unigram/vocab/doc aggregates (distinct keys) + 1-row median cut
 }
 # Headroom for queries added after this table was measured: they still
