@@ -18,16 +18,19 @@ Everything is library code over public Spark APIs; Catalyst does the
 optimization (partition pruning, pushdown, AQE join selection).
 """
 
-from aqi_featurestore_spark.session import get_spark
-
 __version__ = "0.1.0"
 
 __all__ = ["FeatureStore", "FeatureView", "get_spark", "__version__"]
 
 
 def __getattr__(name: str):
-    # Lazy: store/registry pull in operator modules; keep bare package
-    # import light for tooling.
+    # Lazy: store/registry pull in operator modules and the session pulls
+    # in pyspark; keep bare package import light for tooling and for the
+    # worker daemon, which must run before pyspark is imported.
+    if name == "get_spark":
+        from aqi_featurestore_spark.session import get_spark
+
+        return get_spark
     if name == "FeatureStore":
         from aqi_featurestore_spark.store import FeatureStore
 

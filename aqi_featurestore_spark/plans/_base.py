@@ -24,40 +24,12 @@ import os
 import shutil
 import tempfile
 import threading
-from datetime import timedelta
 from typing import Callable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from aqi_featurestore_spark import pipeline
-from aqi_featurestore_spark.functions import portable_hash as _ph
-from aqi_featurestore_spark.plans import approx_oracles
 from aqi_featurestore_spark.functions.aqi import aqi_case_sql
-from aqi_featurestore_spark.functions.text import (
-    doc_fingerprint,
-    lang_id,
-    quality_features,
-    token_count,
-)
-from aqi_featurestore_spark.functions.time_features import entity_key
-from aqi_featurestore_spark.operators.dedup import append_if_absent, dedup_exact
-from aqi_featurestore_spark.operators.near_dedup import (
-    minhash_dedup_pairs,
-    ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
-)
-from aqi_featurestore_spark.operators.multimodal import (
-    extract_media_features,
-    frame_sample_plan,
-)
-from aqi_featurestore_spark.operators.similarity import (
-    cosine_topk_bruteforce,
-    cosine_topk_ivf,
-    cosine_topk_lsh,
-    embedding_cosine_pairs,
-)
-from aqi_featurestore_spark.operators.snapshot import latest_per_key, online_lookup
+from aqi_featurestore_spark.operators.near_dedup import ngram_jaccard_pairs
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -72,7 +44,6 @@ def _q(name: str, sql: str | None = None):
         return fn
 
     return deco
-
 
 from aqi_featurestore_spark.sources.testdata import read_table as _read_table
 

@@ -10,15 +10,11 @@ Reference citations live on each query docstring.
 
 from __future__ import annotations
 
-from datetime import timedelta
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from aqi_featurestore_spark import pipeline
 from aqi_featurestore_spark.functions import portable_hash as _ph
 from aqi_featurestore_spark.plans import approx_oracles
-from aqi_featurestore_spark.functions.aqi import aqi_case_sql
 from aqi_featurestore_spark.functions.text import (
     doc_fingerprint,
     lang_id,
@@ -26,8 +22,7 @@ from aqi_featurestore_spark.functions.text import (
     token_count,
     word_shingles,
 )
-from aqi_featurestore_spark.functions.time_features import entity_key
-from aqi_featurestore_spark.operators.dedup import append_if_absent, dedup_exact
+from aqi_featurestore_spark.operators.dedup import dedup_exact
 from aqi_featurestore_spark.operators.near_dedup import (
     hamming_hash_pairs,
     minhash_dedup_pairs,
@@ -51,17 +46,10 @@ from aqi_featurestore_spark.operators.similarity import (
     normalized_arrow,
     pq_fit_books,
 )
-from aqi_featurestore_spark.operators.snapshot import latest_per_key, online_lookup
-from aqi_featurestore_spark.plans._base import (  # noqa: F401
-    ORACLE_SQL,
-    QUERIES,
-    _FEAT_CTE,
+from aqi_featurestore_spark.plans._base import (
     _NGRAM_JACCARD_SQL,
-    _PIT_CTES,
     _SIM_NORM_CTE,
     _SIM_NORM_DOT,
-    _SPINE_CTE,
-    _TOKENS,
     _q,
     _read,
     session_artifact,

@@ -10,49 +10,21 @@ Reference citations live on each query docstring.
 
 from __future__ import annotations
 
-from datetime import timedelta
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from aqi_featurestore_spark import pipeline
 from aqi_featurestore_spark.functions import portable_hash as _ph
-from aqi_featurestore_spark.plans import approx_oracles
-from aqi_featurestore_spark.functions.aqi import aqi_case_sql
-from aqi_featurestore_spark.functions.text import (
-    doc_fingerprint,
-    lang_id,
-    quality_features,
-    token_count,
-)
-from aqi_featurestore_spark.functions.time_features import entity_key
-from aqi_featurestore_spark.operators.dedup import append_if_absent, dedup_exact
-from aqi_featurestore_spark.operators.near_dedup import (
-    minhash_dedup_pairs,
-    ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
-)
-from aqi_featurestore_spark.operators.multimodal import (
-    extract_media_features,
-    frame_sample_plan,
-)
 from aqi_featurestore_spark.operators.similarity import (
     cosine_topk_bruteforce,
-    cosine_topk_ivf,
-    cosine_topk_lsh,
     embedding_cosine_pairs,
 )
-from aqi_featurestore_spark.operators.snapshot import latest_per_key, online_lookup
-from aqi_featurestore_spark.plans._base import (  # noqa: F401
-    ORACLE_SQL,
-    QUERIES,
+from aqi_featurestore_spark.plans._base import (
     _FEAT_CTE,
     _NGRAM_JACCARD_SQL,
-    _PIT_CTES,
     _SIM_NORM_CTE,
     _SIM_NORM_DOT,
     _SPINE_CTE,
-    _TOKENS,
     _q,
     _read,
 )

@@ -36,6 +36,15 @@ from aqi_featurestore_spark.sources import fs
 from aqi_featurestore_spark.sources.offline_store import OfflineStore
 
 
+def _online_columns(view: FeatureView, df: DataFrame) -> DataFrame:
+    """``df`` cut to what the online snapshot holds: the view's entity
+    keys, timestamp and declared features, in that order. Both snapshot
+    writers go through it, so an upsert after ``materialize`` unions equal
+    columns and never serves a column the view does not declare."""
+    keep = [*view.entities, view.timestamp_field, *[n for n, _ in view.features]]
+    return df.select(*[c for c in keep if c in df.columns])
+
+
 class FeatureStore:
     """Dual-store feature platform over one repo path.
 
@@ -133,10 +142,12 @@ class FeatureStore:
         rows win per entity key — Redis hash overwrite semantics)."""
         view = self.registry.get_feature_view(view_name)
         keys = list(view.entities)
-        updates = latest_per_key(df, keys, ts=view.timestamp_field)
+        updates = latest_per_key(
+            _online_columns(view, df), keys, ts=view.timestamp_field
+        )
         p = self._online_path(view_name)
         if os.path.exists(p):
-            current = self.spark.read.parquet(p)
+            current = _online_columns(view, self.spark.read.parquet(p))
             merged = upsert_snapshot(current, updates, keys, ts=view.timestamp_field)
         else:
             merged = updates
@@ -157,10 +168,9 @@ class FeatureStore:
         snap = latest_per_key(
             self.read_offline(view_name), list(view.entities), ts=view.timestamp_field
         )
-        keep = [*view.entities, view.timestamp_field, *[n for n, _ in view.features]]
-        snap.select(*[c for c in keep if c in snap.columns]).write.mode(
-            "overwrite"
-        ).parquet(self._online_path(view_name))
+        _online_columns(view, snap).write.mode("overwrite").parquet(
+            self._online_path(view_name)
+        )
 
     def get_online_features(
         self,

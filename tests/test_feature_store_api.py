@@ -139,6 +139,30 @@ def test_online_upsert_overwrites(store, spark):
     assert out[0]["aqi"] == 99.0 and out[0]["hour"] == 5
 
 
+@pytest.mark.parametrize("materialize_first", [True, False])
+def test_upsert_keeps_only_declared_columns(store, spark, materialize_first):
+    # both snapshot writers hold the same columns: an extra batch column
+    # neither breaks the union after materialize() nor gets served
+    declared = ["entity_id", "feature_timestamp", "aqi", "hour"]
+    online = store._online_path("aqi_info_v1")
+    if materialize_first:
+        store.materialize("aqi_info_v1")
+        assert spark.read.parquet(online).columns == declared
+    update = spark.createDataFrame(
+        [("21.0_105.75", "2023-01-02 05:00:00", 99.0, 5, "extra")],
+        "entity_id string, feature_timestamp string, aqi double, hour int,"
+        " note string",
+    ).withColumn("feature_timestamp", F.to_timestamp("feature_timestamp"))
+    store.write_to_online_store("aqi_info_v1", update)
+    assert spark.read.parquet(online).columns == declared
+    keys = spark.createDataFrame([("21.0_105.75",)], "entity_id string")
+    out = store.get_online_features(
+        "aqi_info_v1", keys, as_of=F.to_timestamp(F.lit("2023-01-03 00:00:00"))
+    )
+    assert "note" not in out.columns
+    assert out.collect()[0]["aqi"] == 99.0
+
+
 def test_registry_persists_across_instances(spark, tmp_path):
     fs1 = FeatureStore(spark, str(tmp_path / "fs_persist"))
     fs1.apply(VIEW)
