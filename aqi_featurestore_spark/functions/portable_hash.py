@@ -130,6 +130,17 @@ def duck_quantized_vec(vec_expr: str) -> str:
     )
 
 
+def duck_nonzero_norm(vec_expr: str) -> str:
+    """SQL predicate ``norm > 0`` over a FLOAT[] column: the oracle twin
+    of the Spark scans' zero-norm filter (operators/clustering.py
+    ``nonzero_norm``). A zero-norm vector is never a neighbour, never a
+    duplicate and never in an index."""
+    return (
+        f"list_reduce(list_transform({vec_expr}, "
+        "y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)), (a, b) -> a + b) > 0"
+    )
+
+
 def duck_int_dot(a: str, b_literal: list[int]) -> str:
     """SQL integer dot of a BIGINT[] column against a literal plane."""
     lit = "[" + ", ".join(str(v) for v in b_literal) + "]"

@@ -27,8 +27,9 @@ Three pieces:
   each query's normalized vector rides the shortlist from its encode,
   and the raw ``rerank_vectors`` rows join the shortlist on ``n_id``
   before they normalize, so a serve normalizes its candidates only,
-  never the whole table (a zero-norm row that is no candidate is never
-  divided; one that is a candidate raises DIVIDE_BY_ZERO under ANSI).
+  never the whole table. A zero-norm row is never in an index: the
+  encode drops it (similarity._pq_sub_frame), and the re-rank drops a
+  zero-norm candidate.
 
 Persistence (:func:`write_ann_index` / :func:`read_ann_index`):
 the index parquet is PARTITIONED BY ``list_id``, so a single-query
@@ -66,11 +67,11 @@ from aqi_featurestore_spark.operators.similarity import (
     _exact_rerank,
     _pq_adc_dist,
     _pq_code_cols,
-    _pq_fit_books,
     _pq_lut_cols,
     _pq_sub_frame,
-    coarse_udfs_from_centroids,
-    seeded_coarse_centroids,
+    coarse_cols,
+    fit_coarse,
+    pq_fit_books,
 )
 
 
@@ -83,7 +84,7 @@ class AnnIndexModel:
     float.
 
     ``coarse="seeded"``: fit-free centroids, exact-int64 assignment
-    (Arrow udf). ``coarse="kmeans"``: the clustering family's
+    (clustering.seeded_cell_col). ``coarse="kmeans"``: the clustering family's
     distributed Lloyd's fit; assignment/probing are pure-JVM literal-
     centroid projections (kmeans_assign_col — no Python boundary), the
     arithmetic the clustering oracles hash-verify. The serving default
@@ -116,22 +117,8 @@ def _coarse_builders(model: AnnIndexModel):
     """(assign, probe) Column builders for the model's coarse mode —
     the ONE place lookup/encode arithmetic is chosen, so the serve,
     refresh, and build paths cannot drift from each other."""
-    if model.coarse == "kmeans":
-        from aqi_featurestore_spark.operators import clustering as _cl
-
-        cents = model.cent_d
-        return (
-            lambda col: _cl.kmeans_cell_col(col, cents),
-            lambda col: _cl.kmeans_probe_col(col, cents, model.n_probe),
-        )
-    if model.coarse == "seeded":
-        import numpy as np
-
-        a, p = coarse_udfs_from_centroids(
-            np.asarray(model.cent_q, dtype=np.int64), model.n_probe
-        )
-        return a, p
-    raise ValueError(f"unknown coarse mode {model.coarse!r}")
+    cents = model.cent_d if model.coarse == "kmeans" else model.cent_q
+    return coarse_cols(model.coarse, cents, model.n_probe)
 
 
 def build_ann_index(
@@ -161,8 +148,9 @@ def build_ann_index(
     :class:`AnnIndexModel`).
 
     ``coarse_cents`` / ``books``: share-one-fit hooks (the
-    cosine_topk_pq ``books`` contract): pass a kmeans_fit output and/or
-    PQ codebooks to skip the corresponding fit passes — the registry's
+    cosine_topk_pq ``books`` contract): pass the mode's centroids (a
+    kmeans_fit output for "kmeans") and/or PQ codebooks to skip the
+    corresponding fit passes — the registry's
     serving queries build every index of a session from ONE coarse fit
     and ONE books fit.
 
@@ -172,31 +160,16 @@ def build_ann_index(
     THE INDEX SCAN (filter-then-search), which both searches the right
     set (post-filtering a top-k loses results) and pushes down to the
     parquet snapshot like any other column predicate."""
-    import numpy as np
-
-    if coarse == "seeded":
-        cent_q = np.asarray(
-            seeded_coarse_centroids(
-                corpus, id_col=id_col, vec_col=vec_col, n_lists=n_lists
-            )
-        ).tolist()
-        cent_d = None
-    elif coarse == "kmeans":
-        from aqi_featurestore_spark.operators.clustering import kmeans_fit
-
-        cent_q = []
-        cent_d = (
-            coarse_cents
-            if coarse_cents is not None
-            else kmeans_fit(
-                corpus, k=n_lists, iters=coarse_iters,
-                id_col=id_col, vec_col=vec_col,
-            )
+    if coarse_cents is None:
+        coarse_cents = fit_coarse(
+            coarse, corpus, id_col=id_col, vec_col=vec_col,
+            n_lists=n_lists, iters=coarse_iters,
         )
-    else:
-        raise ValueError(f"unknown coarse mode {coarse!r}")
+    seeded = coarse == "seeded"
+    cent_q = [[int(x) for x in c] for c in coarse_cents] if seeded else []
+    cent_d = None if seeded else coarse_cents
     if books is None:
-        books = _pq_fit_books(
+        books = pq_fit_books(
             corpus,
             id_col=id_col,
             vec_col=vec_col,

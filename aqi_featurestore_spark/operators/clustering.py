@@ -47,6 +47,7 @@ from pyspark.sql import functions as F
 from aqi_featurestore_spark.functions import portable_hash as _ph
 
 __all__ = [
+    "bound_sql",
     "kmeans_fit",
     "kmeans_assign_col",
     "kmeans_assign_sql",
@@ -54,9 +55,15 @@ __all__ = [
     "kmeans_dist_structs_sql",
     "kmeans_min_struct",
     "kmeans_probe_col",
+    "floor_micro_sql",
+    "matrix_sql",
     "micro_col",
     "micro_sql",
+    "nonzero_norm",
     "normalized_jvm",
+    "seeded_cell_col",
+    "seeded_dist_structs_sql",
+    "seeded_probe_col",
     "sql_name",
     "MICRO",
 ]
@@ -235,6 +242,13 @@ def _double_lit_sql(x: float) -> str:
     return f"CAST('{x!r}' AS DOUBLE)"
 
 
+def matrix_sql(rows, lit=str) -> str:
+    """SQL text of a 2-D array literal; ``lit`` formats each element."""
+    return "array(" + ",".join(
+        "array(" + ",".join(lit(x) for x in row) + ")" for row in rows
+    ) + ")"
+
+
 def kmeans_dist_structs_sql(
     micro_vec: str, centroids: dict[int, list[float]] | list[list[float]]
 ) -> str:
@@ -265,14 +279,7 @@ def kmeans_dist_structs_sql(
     transform index."""
     if isinstance(centroids, dict):
         centroids = [centroids[c] for c in range(len(centroids))]
-    cents = (
-        "array("
-        + ",".join(
-            "array(" + ",".join(_double_lit_sql(x) for x in cent) + ")"
-            for cent in centroids
-        )
-        + ")"
-    )
+    cents = matrix_sql(centroids, _double_lit_sql)
     return (
         f"transform({cents}, (__c, __i) -> named_struct("
         f"'d', aggregate(zip_with({micro_vec}, __c, (__x, __y) -> "
@@ -309,12 +316,42 @@ def kmeans_assign_col(
     return F.expr(kmeans_assign_sql(sql_name(micro_col), centroids))
 
 
+def bound_sql(value: str, var: str, body: str) -> str:
+    """SQL text of ``body`` with ``value`` bound ONCE per row as the
+    lambda variable ``var``: a transform over the one-element
+    ``array(value)``. Catalyst's higher-order functions share no common
+    subexpressions, so a vector expression referenced inside a
+    per-centroid lambda is otherwise evaluated again for every centroid."""
+    return f"element_at(transform(array({value}), {var} -> {body}), 1)"
+
+
+def _probe_sql(dist_structs: str, n_probe: int) -> str:
+    """The ``n_probe`` nearest cids of a ``(d, cid)`` struct array,
+    nearest first, ties on cid.
+
+    Probe lists run on the query side only (|Q| rows), so the quantized
+    vector stays inline in the per-centroid lambda rather than bound
+    once per row (:func:`bound_sql`): at |Q| = 10-40 the bound form
+    saved nothing per row and cost each ``ann_index_serve`` execution a
+    fixed 0.08-0.16 s, all of it under subexpression elimination
+    (``spark.sql.subexpressionElimination.enabled=false`` closed the
+    gap). The cell columns, which run over the corpus, stay bound."""
+    return (
+        f"transform(slice(array_sort({dist_structs}), 1, {int(n_probe)}), "
+        "__s -> CAST(__s.cid AS INT))"
+    )
+
+
 def kmeans_cell_col(
     vec_col: str, centroids: dict[int, list[float]] | list[list[float]]
 ) -> Column:
     """Coarse cell of the RAW float vector column named ``vec_col``: the
-    nearest centroid to its micro-unit quantization."""
-    return F.expr(kmeans_assign_sql(micro_sql(sql_name(vec_col)), centroids))
+    nearest centroid to its micro-unit quantization (bound once per row)."""
+    return F.expr(
+        bound_sql(
+            micro_sql(sql_name(vec_col)), "__v", kmeans_assign_sql("__v", centroids)
+        )
+    )
 
 
 def kmeans_probe_col(
@@ -325,32 +362,89 @@ def kmeans_probe_col(
     """IVF probe list of the RAW float vector column named ``vec_col``:
     the ``n_probe`` nearest cells, nearest first (ties on cid)."""
     ds = kmeans_dist_structs_sql(micro_sql(sql_name(vec_col)), centroids)
-    return F.expr(
-        f"transform(slice(array_sort({ds}), 1, {int(n_probe)}), "
-        "__s -> CAST(__s.cid AS INT))"
+    return F.expr(_probe_sql(ds, n_probe))
+
+
+def floor_micro_sql(vec: str) -> str:
+    """SQL text of the int64 floor quantization of a vector fragment:
+    ``floor(double(x) * 1e6)`` as BIGINT per element — the exact
+    integers of the seeded coarse cells and the hyperplane sketch
+    (the oracle's ``portable_hash.duck_quantized_vec``)."""
+    return (
+        f"transform({vec}, __x -> CAST(floor(CAST(__x AS DOUBLE) * {MICRO}) AS BIGINT))"
     )
+
+
+def seeded_dist_structs_sql(int_vec: str, cent_q) -> str:
+    """SQL text of the ``(d, cid)`` structs of a BIGINT vector against
+    EVERY int64 seeded centroid: ``d`` is the exact int64 squared
+    distance (a double fold is exact only below 2^53). ``array_min`` is
+    the nearest cell; ties go to the smallest cid, the numpy argmin /
+    stable argsort order."""
+    cents = matrix_sql(cent_q, lambda x: f"{int(x)}L")
+    return (
+        f"transform({cents}, (__c, __i) -> named_struct("
+        f"'d', aggregate(zip_with({int_vec}, __c, (__x, __y) -> "
+        "(__x - __y) * (__x - __y)), 0L, (__a, __d) -> __a + __d), "
+        "'cid', CAST(__i AS INT)))"
+    )
+
+
+def seeded_cell_col(vec_col: str, cent_q) -> Column:
+    """Seeded coarse cell of the RAW float vector column named
+    ``vec_col``: the nearest int64 centroid to its floor quantization."""
+    ds = seeded_dist_structs_sql("__v", cent_q)
+    return F.expr(
+        bound_sql(
+            floor_micro_sql(sql_name(vec_col)),
+            "__v",
+            f"CAST(array_min({ds}).cid AS INT)",
+        )
+    )
+
+
+def seeded_probe_col(vec_col: str, cent_q, n_probe: int) -> Column:
+    """Seeded IVF probe list of the RAW float vector column named
+    ``vec_col``: the ``n_probe`` nearest int64 centroids, nearest first."""
+    ds = seeded_dist_structs_sql(floor_micro_sql(sql_name(vec_col)), cent_q)
+    return F.expr(_probe_sql(ds, n_probe))
 
 
 def normalized_jvm(vec_col: str) -> Column:
     """Unit-normalize the array<float> column named ``vec_col`` entirely
     JVM-side: cast to double, left-fold of squares from 0.0, sqrt,
-    elementwise divide — the same IEEE op order as
-    similarity._normalized_arrow's numpy cumsum and the oracle's
-    ``_SIM_NORM_CTE``, so cosines agree bit-for-bit across all three.
+    elementwise divide — the same IEEE op order as the oracle's
+    ``_SIM_NORM_CTE`` and the batched pair scans' numpy cumsum, so
+    cosines agree bit-for-bit.
 
-    The norm is bound ONCE per row as the lambda variable of a
-    transform over the one-element ``array(nrm)``. Written inline as
-    ``transform(dbl, x -> x / nrm)``, Catalyst evaluates the dim-term
+    The norm is bound ONCE per row (:func:`bound_sql`). Written inline
+    as ``transform(dbl, x -> x / nrm)``, Catalyst evaluates the dim-term
     fold again for every element — O(dim^2) per row; bound, the row
     costs O(dim) and the bits are the same. A null vector gives null,
-    an empty one an empty array; a zero-norm vector divides by zero
-    (DIVIDE_BY_ZERO under ANSI mode, NaNs otherwise). One ``F.expr``."""
+    and so does a zero-norm one (the empty vector included): a
+    zero-norm row is never a neighbour, never a duplicate and never in
+    an index, and every scan drops it (:func:`nonzero_norm`) before it
+    scores. One ``F.expr``."""
     dbl = f"transform({sql_name(vec_col)}, __x -> CAST(__x AS DOUBLE))"
     nrm = (
         f"sqrt(aggregate(transform({dbl}, __x -> __x * __x), 0.0D, "
         "(__a, __x) -> __a + __x))"
     )
     return F.expr(
-        f"element_at(transform(array({nrm}), __n -> "
-        f"transform({dbl}, __x -> __x / __n)), 1)"
+        bound_sql(nrm, "__n", f"IF(__n = 0.0D, NULL, transform({dbl}, __x -> __x / __n))")
+    )
+
+
+def nonzero_norm(vec_col: str) -> Column:
+    """True iff the vector column named ``vec_col`` has a nonzero norm:
+    some element's double square is nonzero, which is exactly when the
+    fold of squares in :func:`normalized_jvm` is nonzero (a NaN element
+    keeps the row, as its NaN norm does). A scan filters with this
+    BEFORE it normalizes: the predicate reads the raw vector and stops
+    at its first nonzero element, while a filter on the normalized
+    column is pushed below its projection by Catalyst and evaluates the
+    normalize fold twice per row."""
+    return F.expr(
+        f"exists({sql_name(vec_col)}, "
+        "__x -> CAST(__x AS DOUBLE) * CAST(__x AS DOUBLE) != 0.0D)"
     )

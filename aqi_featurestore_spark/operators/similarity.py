@@ -4,8 +4,8 @@ Extension operators over the ``embeddings`` table (vec_id, embedding
 array<float>, label). Two paths:
 
 - **Brute force** (the exactness baseline): broadcast the query set,
-  JVM-side dot products via zip_with/aggregate (no Python in the loop),
-  rank per query. Cost O(|Q| x |N|) — right answer for small query sets,
+  exact sequential dots in one batched mapInArrow scan, rank per query
+  in the JVM. Cost O(|Q| x |N|) — right answer for small query sets,
   and the oracle for recall measurement.
 - **LSH (random hyperplane) ANN**: sign-bit sketch of each vector against
   ``n_planes`` deterministic small-integer hyperplanes; candidates = vectors
@@ -15,102 +15,65 @@ array<float>, label). Two paths:
   pairs above a cosine threshold — exact for the oracle, LSH-prefiltered
   for scale.
 
-The sketch is an Arrow-batched pandas_udf: one numpy matmul per batch
-(V @ P.T) instead of a 1000-node Catalyst expression tree — the plane
-matrix is seeded (MT19937 is bit-stable across platforms), closure-
-captured, and shipped once per executor, so sketches agree everywhere.
+All vector arithmetic here is JVM SQL, built as text by the builders
+of operators/clustering.py (one ``F.expr`` each): the bind-once
+``normalized_jvm``, the ``_dot_fold`` left fold, the seeded and k-means
+coarse cells, and the integer hyperplane sketch. The only Python
+boundary left is the batched mapInArrow form of the exact pair scans
+below, where numpy does batched work across pairs.
+
+A zero-norm vector has no direction: it is never a neighbour, never a
+duplicate and never in an index. ``normalized_jvm`` gives it null, and
+every scan drops it (``clustering.nonzero_norm``) before it normalizes;
+the batched scans drop zero-norm rows in ``_struct_mats``. The oracle
+SQL filters ``norm > 0``.
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.functions import pandas_udf
 
-from aqi_featurestore_spark.operators.clustering import micro_sql, sql_name
+from aqi_featurestore_spark.operators import clustering as _cl
+from aqi_featurestore_spark.operators.clustering import (
+    floor_micro_sql,
+    micro_sql,
+    nonzero_norm,
+    normalized_jvm,
+    sql_name,
+)
 
 
-def _as_double(col: str) -> Column:
-    return F.expr(f"transform({sql_name(col)}, __x -> CAST(__x AS DOUBLE))")
-
-
-# -- Vectorized (Arrow) dot / normalize ------------------------------------
+# -- Dot and normalize ------------------------------------------------------
 #
 # The semantic spec for both is the sequential left fold
 #   dot(a, b)  = aggregate(zip_with(a, b, *), 0.0, +)       (seed-left)
 #   norm(a)    = sqrt(aggregate(transform(a, x*x), 0.0, +))
-# which is also exactly what the DuckDB oracle SQL evaluates. The pure
-# Catalyst fold forms (`_dot_fold`, clustering.normalized_jvm) are
-# interpreted per element (~100 ns/op, no codegen for higher-order
-# functions); normalized_jvm binds the norm once per row, because a norm
-# written inline in a `transform` lambda re-evaluates PER ELEMENT (64x
-# per row). The pandas_udf implementations below are numpy over Arrow
-# batches — and stay BIT-IDENTICAL to the folds (and to DuckDB's
-# list_reduce) because `np.cumsum` accumulates sequentially:
-# cumsum[-1] = (((x0 + x1) + x2) + ...), the exact same IEEE operation
-# order as the left fold seeded with 0.0 (0.0 + x0 == x0). No pairwise
-# summation, no BLAS reassociation — same doubles.
-# Oracle parity for every query scoring through these is hash-verified
-# (tests/test_oracle_parity.py), which is the bit-parity proof.
-#
-# WHERE EACH WINS (measured on 4 shared cores): the JVM pair wins
-# wherever it replaces a Python boundary. Normalizing the 2,000 sf0.1
-# vectors into a noop sink (median of 5, CPU of the whole process tree)
-# takes 0.50 s wall / 1.67 s CPU with the norm inline in the lambda,
-# 0.48 s / 1.68 s through the Arrow udf and 0.17 s / 0.47 s with
-# normalized_jvm's bind-once form; all three give the same bits. The
-# exact re-rank of every compressed-domain ANN scan (`_exact_rerank`)
-# therefore runs normalized_jvm + `_dot_fold`. On perfbench `ann_serving`
-# (seed 1, traced, per measured pass) that took the serves from 6 Arrow
-# UDF nodes to 0, Python task time from 1.53 s to 0 and executor task
-# time from 2.72 s to 1.27 s; over 10 alternating pairs its `op_cpu_ms`
-# median fell from 4,565 to 3,449 ms. The Arrow dot stays the scorer of
-# the LSH/IVF bucket candidates, where it has not been re-measured; the
-# brute-force pair scans use the batched mapInArrow form below.
+# which is also exactly what the DuckDB oracle SQL evaluates. The
+# Catalyst folds are interpreted per element (no codegen for
+# higher-order functions); normalized_jvm binds the norm once per row,
+# because a norm written inline in a `transform` lambda re-evaluates PER
+# ELEMENT (64x per row). Oracle parity for every query scoring through
+# these is hash-verified (tests/test_oracle_parity.py).
 
 
-def _normalized_arrow(col: Column | str) -> Column:
-    import numpy as np
-
-    @pandas_udf("array<double>")
-    def norm_udf(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            if v is None:
-                out.append(None)
-                continue
-            x = np.asarray(v, dtype=np.float64)
-            n = np.sqrt(np.cumsum(x * x)[-1]) if len(x) else 0.0
-            out.append(x / n)
-        return pd.Series(out)
-
-    return norm_udf(F.col(col) if isinstance(col, str) else col)
+def _normalized(df: DataFrame, keep: list, vec_col: str, alias: str) -> DataFrame:
+    """``keep`` columns plus the normalized ``vec_col`` as ``alias``,
+    zero-norm (and null) rows dropped first: the scan input of every
+    cosine scorer."""
+    return df.where(nonzero_norm(vec_col)).select(
+        *keep, normalized_jvm(vec_col).alias(alias)
+    )
 
 
 def _dot_fold(a: str, b: str) -> Column:
     """Sequential left-fold dot (the semantic spec above) of the vector
     columns named ``a`` and ``b``, all JVM, one ``F.expr``: the scorer of
-    the exact re-rank and of maxsim_topk."""
+    every candidate-bounded cosine scan."""
     return F.expr(
         f"aggregate(zip_with({sql_name(a)}, {sql_name(b)}, (__x, __y) -> __x * __y), "
         "0.0D, (__s, __t) -> __s + __t)"
     )
-
-
-def _dot_arrow(a: Column, b: Column) -> Column:
-    import numpy as np
-
-    @pandas_udf("double")
-    def dot_udf(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype="float64")
-        av = np.array([np.asarray(x, dtype=np.float64) for x in xs])
-        bv = np.array([np.asarray(y, dtype=np.float64) for y in ys])
-        # sequential accumulation along the vector axis — fold-identical
-        return pd.Series(np.cumsum(av * bv, axis=1)[:, -1])
-
-    return dot_udf(a, b)
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -144,8 +107,9 @@ def _spread(df: DataFrame) -> DataFrame:
 # fold-dot is interpreted Catalyst (~100 ns/element, no codegen for
 # higher-order functions): at sf0.1 the 2M-pair dedup scan spent ~60 s of
 # CPU in fold lambdas. The batched form keeps the SAME IEEE arithmetic —
-# normalize = cumsum-of-squares (bit-identical to `_normalized_arrow` and
-# the oracle's list_reduce, see the header above), dot = a strictly
+# normalize = cumsum-of-squares (bit-identical to `normalized_jvm` and
+# the oracle's list_reduce: `np.cumsum` accumulates sequentially, the
+# same IEEE op order as the left fold from 0.0), dot = a strictly
 # sequential dim-loop `acc += a_d * b_d` from 0.0 (exactly the left fold's
 # op order, vectorized across pairs instead of across dims) — and moves it
 # into ONE mapInArrow stage over numpy (guide §4.2: batch the boundary,
@@ -161,7 +125,7 @@ def _spread(df: DataFrame) -> DataFrame:
 # packed (id, vec) structs, and a broadcast cross join hands each bucket
 # task the full packed side — each vector crosses the Arrow boundary once
 # per task instead of once per PAIR (the BNLJ's transfer economics that
-# made `_dot_arrow` lose on unbounded scans). Bound: the packed side must
+# made a per-pair Arrow dot lose on unbounded scans). Bound: the packed side must
 # fit one Arrow cell / task memory — the exact-scan contract already
 # required the corpus to broadcast, so the bound is unchanged.
 
@@ -203,7 +167,8 @@ def _bucketed(df: DataFrame, id_col: Column, vec: Column, ex: Column | None):
 def _struct_mats(struct_arr, has_ex: bool):
     """(ids, matrix, ex) numpy views of a packed struct array; the
     matrix is unit-normalized with the pinned cumsum-of-squares order
-    (bit-identical to `_normalized_arrow`)."""
+    (bit-identical to `normalized_jvm`). Zero-norm rows are dropped, as
+    every JVM scan drops the null `normalized_jvm` gives them."""
     import numpy as np
 
     ids = np.asarray(struct_arr.field("id"), dtype=np.int64)
@@ -213,6 +178,10 @@ def _struct_mats(struct_arr, has_ex: bool):
     vecs = struct_arr.field("vec")
     mat = np.asarray(vecs.flatten(), dtype=np.float64).reshape(len(ids), -1)
     nrm = np.sqrt(np.cumsum(mat * mat, axis=1)[:, -1])
+    keep = nrm != 0
+    if not keep.all():
+        ids, mat, nrm = ids[keep], mat[keep], nrm[keep]
+        ex = ex[keep] if has_ex else None
     return ids, mat / nrm[:, None], ex
 
 
@@ -360,38 +329,35 @@ def cosine_topk_bruteforce(
 
 
 def hyperplane_sketch(
-    vec: Column | str,
+    vec_col: str,
     *,
     n_planes: int = 16,
     dim: int = 64,
 ) -> Column:
-    """Sign-bit sketch: bit p set iff dot(vec, plane_p) > 0.
+    """Sign-bit sketch of the vector column named ``vec_col``: bit p set
+    iff dot(vec, plane_p) > 0.
 
-    Vectorized Arrow path: each batch is one ``V @ P.T`` matmul + sign +
-    bit-pack; the plane matrix is closure-captured and shipped once per
-    executor.
-
-    The vector is quantized to int64 (``floor(v * 1e6)``) and the
-    planes are small integers: the dot is exact integer arithmetic, so
-    the DuckDB oracle reproduces every sign bit — this is what makes the
-    LSH queries hash-verifiable."""
-    import numpy as np
-
+    The vector is quantized to int64 (``floor(v * 1e6)``, bound once per
+    row) and the planes are small integers (``portable_hash.int_planes``:
+    seeded MT19937, bit-stable across platforms): each dot is exact
+    integer arithmetic in one SQL fold, so the DuckDB oracle reproduces
+    every sign bit — this is what makes the LSH queries
+    hash-verifiable."""
     from aqi_featurestore_spark.functions import portable_hash as ph
 
-    weights = 1 << np.arange(n_planes, dtype=np.int64)
-    planes_t = np.array(ph.int_planes(n_planes, dim), dtype=np.int64).T
-
-    @pandas_udf("long")
-    def sketch(vecs: pd.Series) -> pd.Series:
-        if vecs.empty:
-            return pd.Series([], dtype="int64")
-        v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
-        q = np.floor(v * 1e6).astype(np.int64)
-        bits = q @ planes_t > 0
-        return pd.Series(bits @ weights)
-
-    return sketch(F.col(vec) if isinstance(vec, str) else vec)
+    planes = _cl.matrix_sql(ph.int_planes(n_planes, dim))
+    bits = (
+        f"transform({planes}, (__p, __i) -> IF(aggregate(zip_with(__v, __p, "
+        "(__x, __y) -> __x * __y), 0L, (__a, __b) -> __a + __b) > 0, "
+        "shiftleft(1L, __i), 0L))"
+    )
+    return F.expr(
+        _cl.bound_sql(
+            floor_micro_sql(sql_name(vec_col)),
+            "__v",
+            f"aggregate({bits}, 0L, (__a, __b) -> __a + __b)",
+        )
+    )
 
 
 def cosine_topk_lsh(
@@ -426,12 +392,8 @@ def cosine_topk_lsh(
         )
         return banded.select(f"{role}_id", F.posexplode(bands_arr).alias("band", "bits"))
 
-    qv = queries.select(
-        F.col(id_col).alias("q_id"), _normalized_arrow(vec_col).alias("q_vec")
-    )
-    nv = corpus.select(
-        F.col(id_col).alias("n_id"), _normalized_arrow(vec_col).alias("n_vec")
-    )
+    qv = _normalized(queries, [F.col(id_col).alias("q_id")], vec_col, "q_vec")
+    nv = _normalized(corpus, [F.col(id_col).alias("n_id")], vec_col, "n_vec")
     # Query bands broadcast (queries ≪ corpus): the corpus band rows
     # are probed map-side and never shuffle.
     cand_ids = (
@@ -442,7 +404,7 @@ def cosine_topk_lsh(
         .dropDuplicates(["q_id", "n_id"])
     )
     cand = cand_ids.join(F.broadcast(qv), "q_id").join(nv, "n_id")
-    cos = _dot_arrow(F.col("q_vec"), F.col("n_vec"))  # unit-normalized upstream
+    cos = _dot_fold("q_vec", "n_vec")  # unit-normalized upstream
     scored = cand.select("q_id", "n_id", F.round(cos, round_scores).alias("cos_sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("n_id").asc())
     return scored.select("q_id", "n_id", "cos_sim", F.row_number().over(w).alias("rk")).where(
@@ -490,9 +452,7 @@ def embedding_cosine_pairs(
         return raw.select(
             "d1", "d2", F.round(F.col("cos"), round_scores).alias("cos_sim")
         ).where(F.col("cos_sim") >= threshold)
-    v = vectors.select(
-        F.col(id_col).alias("id"), _normalized_arrow(vec_col).alias("vec")
-    )
+    v = _normalized(vectors, [F.col(id_col).alias("id")], vec_col, "vec")
     width = n_planes // bands
     mask = (1 << width) - 1
     # Sketch the RAW embedding, not the normalized copy: the sign of
@@ -501,8 +461,7 @@ def embedding_cosine_pairs(
     # column rather than a reproduction of the normalization fold.
     sketched = vectors.select(
         F.col(id_col).alias("id"),
-        hyperplane_sketch(_as_double(vec_col), n_planes=n_planes, dim=dim)
-        .alias("sketch"),
+        hyperplane_sketch(vec_col, n_planes=n_planes, dim=dim).alias("sketch"),
     )
     # candidate generation + dedup on bare id pairs; vectors join back
     # after the shuffle (fixed-width keys move, arrays don't)
@@ -531,16 +490,16 @@ def embedding_cosine_pairs(
     v1 = v.select(F.col("id").alias("d1"), F.col("vec").alias("v1"))
     v2 = v.select(F.col("id").alias("d2"), F.col("vec").alias("v2"))
     cand = cand_ids.join(v1, "d1").join(v2, "d2")
-    # candidate-bounded LSH pairs score via Arrow (the unbounded exact
-    # scan returned above through the batched mapInArrow form)
-    cos = _dot_arrow(F.col("v1"), F.col("v2"))  # vectors are unit-normalized
+    # candidate-bounded LSH pairs score with the JVM fold (the unbounded
+    # exact scan returned above through the batched mapInArrow form)
+    cos = _dot_fold("v1", "v2")  # vectors are unit-normalized
     return (
         cand.select("d1", "d2", F.round(cos, round_scores).alias("cos_sim"))
         .where(F.col("cos_sim") >= threshold)
     )
 
 
-def _pq_fit_books(
+def pq_fit_books(
     corpus: DataFrame,
     *,
     id_col: str,
@@ -567,17 +526,17 @@ def _pq_fit_books(
     -> 1 persist + 1 seed + iters agg — measured 24 jobs -> 3 for the
     8x16 books fit (guide §1.2: remove passes). Empty clusters carry
     their previous centroid forward, per subspace, exactly as
-    ``kmeans_fit`` does."""
-    from aqi_featurestore_spark.operators import clustering as _cl
+    ``kmeans_fit`` does. Zero-norm rows take no part in the fit.
+
+    Callers that share one fit (``ann_recall_methods`` hands the same
+    books to its pq and ivfpq legs) call this and pass ``books=``."""
     from aqi_featurestore_spark.operators.clustering import (
         _seed_hash,
         kmeans_assign_col,
     )
 
     subdim = dim // n_subspaces
-    nv = corpus.select(
-        F.col(id_col).alias("_id"), _cl.normalized_jvm(vec_col).alias("_nv")
-    )
+    nv = _normalized(corpus, [F.col(id_col).alias("_id")], vec_col, "_nv")
     # micro-quantized subvector columns _v0.._v{S-1}: micro(slice(nv)) —
     # the same values kmeans_fit's micro_col produced on the slices.
     vc = nv.select(
@@ -677,11 +636,11 @@ def _pq_sub_frame(
     (``_nv``), then the micro subvector slices from it — so the
     normalize runs once per row, not once per subspace or per
     centroid. Measured on the sf1 probe (20k x 64-dim): corpus encode
-    473s -> ~10s, identical bits (same expressions, staged)."""
-    from aqi_featurestore_spark.operators import clustering as _cl
-
+    473s -> ~10s, identical bits (same expressions, staged). Zero-norm
+    rows are dropped: they are never encoded into an index and never
+    scored as a query."""
     cols = list(keep) + ([F.col(vec_col)] if keep_vec else [])
-    nv = df.select(*cols, _cl.normalized_jvm(vec_col).alias("_nv"))
+    nv = _normalized(df, cols, vec_col, "_nv")
     return nv.select(
         "*", *[_micro_slice(s, subdim).alias(f"_sub{s}") for s in range(n_subspaces)]
     )
@@ -690,8 +649,6 @@ def _pq_sub_frame(
 def _pq_code_cols(books, n_subspaces: int) -> list[Column]:
     """``c{s}`` columns: nearest-codeword id per subspace, from the
     ``_sub{s}`` columns of a :func:`_pq_sub_frame` projection."""
-    from aqi_featurestore_spark.operators import clustering as _cl
-
     return [
         _cl.kmeans_assign_col(f"_sub{s}", books[s]).alias(f"c{s}")
         for s in range(n_subspaces)
@@ -701,8 +658,6 @@ def _pq_code_cols(books, n_subspaces: int) -> list[Column]:
 def _pq_lut_sql(books, s: int) -> str:
     """SQL text of subspace ``s``'s ADC lookup table: the squared
     distances of ``_sub{s}`` to every codeword (``n_codes`` doubles)."""
-    from aqi_featurestore_spark.operators import clustering as _cl
-
     ds = _cl.kmeans_dist_structs_sql(f"`_sub{s}`", books[s])
     return f"transform({ds}, __s -> __s.d)"
 
@@ -737,20 +692,15 @@ def _exact_rerank(
     carried from its encode (:func:`_pq_sub_frame`), so no query is
     normalized twice. The RAW corpus vectors join the shortlist on
     ``n_id`` and only then normalize: ``rescore x |Q|`` candidate rows,
-    never the whole corpus table, and a zero-norm corpus row that is
-    never a candidate is never divided. All JVM: the bind-once
-    ``normalized_jvm`` and the ``_dot_fold`` left fold, the same bits as
-    the Arrow pair (see module header) with no Python boundary on the
-    serving path."""
-    from aqi_featurestore_spark.operators import clustering as _cl
-
+    never the whole corpus table; a zero-norm candidate is dropped, never
+    scored. All JVM: the bind-once ``normalized_jvm`` and the
+    ``_dot_fold`` left fold, with no Python boundary on the serving
+    path."""
     cand = shortlist.select("q_id", "n_id", "q_vec").join(
         corpus.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_raw")),
         "n_id",
     )
-    rescored = cand.select(
-        "q_id", "n_id", "q_vec", _cl.normalized_jvm("n_raw").alias("n_vec")
-    ).select(
+    rescored = _normalized(cand, ["q_id", "n_id", "q_vec"], "n_raw", "n_vec").select(
         "q_id",
         "n_id",
         F.round(_dot_fold("q_vec", "n_vec"), round_scores).alias("cos_sim"),
@@ -761,16 +711,6 @@ def _exact_rerank(
     return rescored.select(
         "q_id", "n_id", "cos_sim", F.row_number().over(w2).alias("rk")
     ).where(F.col("rk") <= k)
-
-
-# Public names for the share-one-fit / share-one-normalization hooks
-# (ann_recall_methods builds the fit once and hands it to both ADC legs).
-def pq_fit_books(*args, **kwargs):
-    return _pq_fit_books(*args, **kwargs)
-
-
-def normalized_arrow(col: Column | str) -> Column:
-    return _normalized_arrow(col)
 
 
 def cosine_topk_pq(
@@ -830,7 +770,7 @@ def cosine_topk_pq(
     # share-one-fit hook ann_recall_methods uses so its pq and ivfpq
     # legs run ONE set of subspace k-means fits instead of two.
     if books is None:
-        books = _pq_fit_books(
+        books = pq_fit_books(
             corpus,
             id_col=id_col,
             vec_col=vec_col,
@@ -871,28 +811,6 @@ def cosine_topk_pq(
     )
 
 
-def _kmeans_centroids(sample, n_lists: int, *, iters: int = 15, seed: int = 7):
-    """Driver-side Lloyd's k-means over a bounded sample (numpy) — the
-    ``centroids="kmeans_sample"`` fast path for index builds where a
-    ~100k-vector sample is representative enough. The production default
-    is the DISTRIBUTED fit (``centroids="kmeans"``, clustering.kmeans_fit):
-    full-corpus exact-integer Lloyd's, so IVF lists track corpus drift at
-    100 TB instead of a capped snapshot."""
-    import numpy as np
-
-    x = np.asarray(sample, dtype=np.float64)
-    rng = np.random.RandomState(seed)
-    cent = x[rng.choice(len(x), size=min(n_lists, len(x)), replace=False)]
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for j in range(len(cent)):
-            members = x[assign == j]
-            if len(members):
-                cent[j] = members.mean(axis=0)
-    return cent
-
-
 def seeded_coarse_centroids(
     corpus: DataFrame, *, id_col: str, vec_col: str, n_lists: int
 ):
@@ -911,83 +829,48 @@ def seeded_coarse_centroids(
     ).astype(np.int64)  # n_lists x dim
 
 
-def coarse_udfs_from_centroids(cent_q, n_probe: int):
-    """(assign_list, probe_lists) Arrow-batched udfs over given
-    micro-quantized int64 centroids — exact integer distances, argmin
-    ties on smallest list id, fully oracle-reproducible in SQL."""
-    import numpy as np
-
-    @pandas_udf("int")
-    def assign_list(vecs: pd.Series) -> pd.Series:
-        if vecs.empty:
-            return pd.Series([], dtype="int32")
-        v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
-        q = np.floor(v * 1e6).astype(np.int64)
-        # exact int64 distances; argmin ties break on smallest list
-        d = ((q[:, None, :] - cent_q[None, :, :]) ** 2).sum(axis=2)
-        return pd.Series(d.argmin(axis=1)).astype("int32")
-
-    @pandas_udf("array<int>")
-    def probe_lists(vecs: pd.Series) -> pd.Series:
-        if vecs.empty:
-            return pd.Series([], dtype="object")
-        v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
-        q = np.floor(v * 1e6).astype(np.int64)
-        d = ((q[:, None, :] - cent_q[None, :, :]) ** 2).sum(axis=2)
-        order = np.argsort(d, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series([row.astype("int32").tolist() for row in order])
-
-    return assign_list, probe_lists
-
-
-def _seeded_coarse_udfs(
+def fit_coarse(
+    coarse: str,
     corpus: DataFrame,
     *,
     id_col: str,
     vec_col: str,
     n_lists: int,
-    n_probe: int,
-):
-    """Seeded coarse quantizer over the corpus: centroid collection +
-    udf construction (see the two split halves above)."""
-    return coarse_udfs_from_centroids(
-        seeded_coarse_centroids(
-            corpus, id_col=id_col, vec_col=vec_col, n_lists=n_lists
-        ),
-        n_probe,
-    )
-
-
-def _kmeans_coarse_cols(
-    corpus: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    n_lists: int,
-    n_probe: int,
     iters: int,
-    cents: list[list[float]] | None = None,
 ):
-    """k-means coarse quantizer: distributed exact-integer Lloyd's over
-    the FULL corpus — one fit shared with the clustering family (round-4
-    verdict ask #2: one k-means, one scale story). Assignment and
-    probing are literal-centroid JVM projections: no pandas boundary,
-    zero exchanges, the same pinned arithmetic the clustering oracles
-    hash-verify. Returns (assign_list, probe_lists) Column builders.
+    """Coarse quantizer centroids for mode ``coarse``:
 
-    ``cents``: share-one-fit hook (the ``books`` contract): pass the
-    kmeans_fit output to skip the Lloyd passes — how the registry's
-    serving queries reuse ONE session coarse fit."""
-    from aqi_featurestore_spark.operators import clustering as _cl
-
-    if cents is None:
-        cents = _cl.kmeans_fit(
+    - ``"seeded"``: :func:`seeded_coarse_centroids` — no fit passes.
+    - ``"kmeans"``: distributed exact-integer Lloyd's over the FULL
+      corpus (clustering.kmeans_fit, ``iters`` rounds) — one fit shared
+      with the clustering family; the driver only ever holds
+      ``n_lists x dim`` numbers."""
+    if coarse == "seeded":
+        return seeded_coarse_centroids(
+            corpus, id_col=id_col, vec_col=vec_col, n_lists=n_lists
+        )
+    if coarse == "kmeans":
+        return _cl.kmeans_fit(
             corpus, k=n_lists, iters=iters, id_col=id_col, vec_col=vec_col
         )
+    raise ValueError(f"unknown coarse mode {coarse!r}")
 
+
+def coarse_cols(coarse: str, cents, n_probe: int):
+    """(assign_list, probe_lists) Column builders over given centroids:
+    the seeded int64 cells (exact int64 distances) or the k-means
+    micro-unit cells (pinned-order double folds). Both are pure-JVM
+    literal-centroid projections — zero exchanges, ties on the smallest
+    list id — that the oracle reproduces in SQL."""
+    if coarse == "seeded":
+        cell, probe = _cl.seeded_cell_col, _cl.seeded_probe_col
+    elif coarse == "kmeans":
+        cell, probe = _cl.kmeans_cell_col, _cl.kmeans_probe_col
+    else:
+        raise ValueError(f"unknown coarse mode {coarse!r}")
     return (
-        lambda col: _cl.kmeans_cell_col(col, cents),
-        lambda col: _cl.kmeans_probe_col(col, cents, n_probe),
+        lambda col: cell(col, cents),
+        lambda col: probe(col, cents, n_probe),
     )
 
 
@@ -1001,9 +884,6 @@ def cosine_topk_ivf(
     n_lists: int = 16,
     n_probe: int = 4,
     iters: int = 3,
-    sample_fraction: float = 1.0,
-    max_sample: int = 100_000,
-    seed: int = 7,
     round_scores: int = 6,
     centroids: str = "kmeans",
 ) -> DataFrame:
@@ -1016,92 +896,50 @@ def cosine_topk_ivf(
     pass. Candidate generation is an equi-join on ``list_id`` — the
     cross product never materializes.
 
-    ``centroids`` modes:
+    ``centroids`` modes (assignment and probing are pure-JVM projections
+    against literal centroids in both: zero exchanges, no Python
+    boundary, bit-reproducible in SQL):
 
     - ``"kmeans"`` (default): DISTRIBUTED exact-integer Lloyd's
       (clustering.kmeans_fit, ``iters`` rounds) over the FULL corpus —
       the driver only ever holds ``n_lists x dim`` numbers, so centroid
-      quality tracks the whole corpus at any scale. Assignment and
-      probing are pure-JVM projections against literal centroids (zero
-      exchanges, no Python boundary), and bit-reproducible in SQL.
-    - ``"kmeans_sample"``: the index-build fast path — numpy Lloyd's on
-      a driver-side sample capped at ``max_sample`` rows unconditionally
-      (centroid quality saturates ~1e5 vectors; the driver never sees
-      the corpus). Saves the ``iters`` distributed passes when a sample
-      is representative; loses corpus-drift tracking.
+      quality tracks the whole corpus at any scale.
     - ``"seeded"``: the ``n_lists`` corpus vectors with the smallest ids
-      as centroids, exact-integer assignment — no fit passes at all;
+      as centroids, exact int64 assignment — no fit passes at all;
       what the registry oracle verifies end-to-end in plain SQL."""
-    import numpy as np
-
-    from aqi_featurestore_spark.operators import clustering as _cl
-
-    if centroids == "seeded":
-        assign_list, probe_lists = _seeded_coarse_udfs(
-            corpus, id_col=id_col, vec_col=vec_col, n_lists=n_lists, n_probe=n_probe
-        )
-    elif centroids == "kmeans":
-        assign_list, probe_lists = _kmeans_coarse_cols(
+    assign_list, probe_lists = coarse_cols(
+        centroids,
+        fit_coarse(
+            centroids,
             corpus,
             id_col=id_col,
             vec_col=vec_col,
             n_lists=n_lists,
-            n_probe=n_probe,
             iters=iters,
-        )
-    elif centroids == "kmeans_sample":
-        sample_df = corpus.select(vec_col)
-        if sample_fraction < 1.0:
-            sample_df = sample_df.sample(fraction=sample_fraction, seed=seed)
-        # The cap is unconditional so the driver NEVER collects the
-        # corpus regardless of caller parameters.
-        sample = [
-            np.asarray(r[0], dtype=np.float64)
-            for r in sample_df.limit(max_sample).collect()
-        ]
-        cent = _kmeans_centroids(sample, n_lists, seed=seed)
-        cent_t = cent.T  # dim x n_lists
-        cent_sq = (cent**2).sum(axis=1)  # n_lists
-
-        @pandas_udf("int")
-        def assign_list(vecs: pd.Series) -> pd.Series:
-            if vecs.empty:
-                return pd.Series([], dtype="int32")
-            v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
-            # argmin ||v - c||^2 = argmin (||c||^2 - 2 v.c)
-            d = cent_sq[None, :] - 2.0 * (v @ cent_t)
-            return pd.Series(d.argmin(axis=1)).astype("int32")
-
-        @pandas_udf("array<int>")
-        def probe_lists(vecs: pd.Series) -> pd.Series:
-            if vecs.empty:
-                return pd.Series([], dtype="object")
-            v = np.array([np.asarray(x, dtype=np.float64) for x in vecs])
-            d = cent_sq[None, :] - 2.0 * (v @ cent_t)
-            order = np.argsort(d, axis=1)[:, :n_probe]
-            return pd.Series([row.astype("int32").tolist() for row in order])
-
-    else:
-        raise ValueError(f"unknown centroids mode {centroids!r}")
+        ),
+        n_probe,
+    )
 
     # Normalize once per vector, then a single fold-dot per candidate —
     # the same IEEE op order as the oracle SQL (and no per-pair norms).
-    c = corpus.select(
-        F.col(id_col).alias("n_id"),
-        _normalized_arrow(vec_col).alias("n_vec"),
-        assign_list(vec_col).alias("list_id"),
+    c = _normalized(
+        corpus,
+        [F.col(id_col).alias("n_id"), assign_list(vec_col).alias("list_id")],
+        vec_col,
+        "n_vec",
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        _normalized_arrow(vec_col).alias("q_vec"),
-        F.explode(probe_lists(vec_col)).alias("list_id"),
-    )
+    q = _normalized(
+        queries,
+        [F.col(id_col).alias("q_id"), probe_lists(vec_col).alias("_probes")],
+        vec_col,
+        "q_vec",
+    ).select("q_id", "q_vec", F.explode("_probes").alias("list_id"))
     # Queries ≪ corpus is the ANN serving invariant: broadcasting the
     # exploded probe side makes candidate generation map-side — the
     # corpus assignments never shuffle, and the 16-distinct-value
     # list_id key (worst-case skew as a shuffle key) never becomes one.
     cand = F.broadcast(q).join(c, "list_id").where(F.col("q_id") != F.col("n_id"))
-    cos = _dot_arrow(F.col("q_vec"), F.col("n_vec"))  # unit-normalized upstream
+    cos = _dot_fold("q_vec", "n_vec")  # unit-normalized upstream
     scored = cand.select("q_id", "n_id", F.round(cos, round_scores).alias("cos_sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("n_id").asc())
     return scored.select(
@@ -1149,7 +987,7 @@ def cosine_topk_ivfpq(
        production default story: distributed exact-integer Lloyd's
        shared with the clustering family).
     2. **PQ codebooks** — per-subspace distributed Lloyd's on the
-       normalized sub-vectors (``_pq_fit_books``, same fit
+       normalized sub-vectors (``pq_fit_books``, same fit
        ``cosine_topk_pq`` uses). Codes quantize the VECTOR, not the
        residual: the residual-encoding refinement needs per-cell
        codebooks whose fit cost is n_lists fold higher — measured
@@ -1180,27 +1018,23 @@ def cosine_topk_ivfpq(
             "below the requested top-k and silently return fewer rows; "
             "use rescore >= k (two-stage) or rescore=0 (raw ADC ranking)"
         )
-    if coarse == "seeded":
-        assign_list, probe_lists = _seeded_coarse_udfs(
-            corpus, id_col=id_col, vec_col=vec_col, n_lists=n_lists, n_probe=n_probe
-        )
-    elif coarse == "kmeans":
-        assign_list, probe_lists = _kmeans_coarse_cols(
+    # ``coarse_cents``: share-one-fit hook (the ``books`` contract) —
+    # how the registry's serving queries reuse ONE session coarse fit.
+    if coarse_cents is None:
+        coarse_cents = fit_coarse(
+            coarse,
             corpus,
             id_col=id_col,
             vec_col=vec_col,
             n_lists=n_lists,
-            n_probe=n_probe,
             iters=coarse_iters,
-            cents=coarse_cents,
         )
-    else:
-        raise ValueError(f"unknown coarse mode {coarse!r}")
+    assign_list, probe_lists = coarse_cols(coarse, coarse_cents, n_probe)
 
     subdim = dim // n_subspaces
     # ``books``: share-one-fit hook, same contract as cosine_topk_pq.
     if books is None:
-        books = _pq_fit_books(
+        books = pq_fit_books(
             corpus,
             id_col=id_col,
             vec_col=vec_col,
@@ -1304,7 +1138,7 @@ def pq_reconstruction_stats(
     broadcast literal codewords) into one bounded aggregate of
     n_subspaces rows."""
     if books is None:
-        books = _pq_fit_books(
+        books = pq_fit_books(
             corpus,
             id_col=id_col,
             vec_col=vec_col,
@@ -1373,15 +1207,14 @@ def maxsim_topk(
     |Q_tok| x |docs| smalls, not token pairs. The final per-query
     top-k windows over |docs| rows per query."""
     q = F.broadcast(
-        queries.select(
-            F.col(doc_col).alias("q_id"),
-            F.col(tok_col).alias("q_tok"),
-            _normalized_arrow(vec_col).alias("q_vec"),
+        _normalized(
+            queries,
+            [F.col(doc_col).alias("q_id"), F.col(tok_col).alias("q_tok")],
+            vec_col,
+            "q_vec",
         )
     )
-    c = corpus.select(
-        F.col(doc_col).alias("n_id"), _normalized_arrow(vec_col).alias("n_vec")
-    )
+    c = _normalized(corpus, [F.col(doc_col).alias("n_id")], vec_col, "n_vec")
     # broadcast nested-loop: streamed corpus tokens x bounded query tokens
     pairs = c.crossJoin(q)
     dot = _dot_fold("q_vec", "n_vec")

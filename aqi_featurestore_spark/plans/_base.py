@@ -28,6 +28,7 @@ from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aqi_featurestore_spark.functions import portable_hash as _ph
 from aqi_featurestore_spark.functions.aqi import aqi_case_sql
 from aqi_featurestore_spark.operators.near_dedup import ngram_jaccard_pairs
 
@@ -213,17 +214,19 @@ JOIN sizes n2 ON d2 = n2.doc_id
 WHERE CAST(inter AS DOUBLE) / (n1.n + n2.n - inter) >= 0.2"""
 
 
-# Unit-normalize once per vector (mirrors operators.similarity._normalized:
+# Unit-normalize once per vector (mirrors operators.clustering.normalized_jvm:
 # cast-to-double, fold of squares from 0.0, sqrt, element divide — same IEEE
-# op order as the Spark side so cos_sim agrees bit-for-bit).
-_SIM_NORM_CTE = """
+# op order as the Spark side so cos_sim agrees bit-for-bit). Zero-norm rows
+# are left out, as every Spark scan leaves them out.
+_SIM_NORM_CTE = f"""
 norm AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(x AS DOUBLE) /
            sqrt(list_reduce(
                   list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
                   (a, b) -> a + b))) AS v
-  FROM embeddings)"""
+  FROM embeddings
+  WHERE {_ph.duck_nonzero_norm('embedding')})"""
 
 
 _SIM_NORM_DOT = (

@@ -91,7 +91,7 @@ def _rocchio_sql() -> str:
     1e6 integer micro-units, so the scoring dot is an exact,
     order-free BIGINT sum (a float dot under a GROUP BY would depend on
     each engine's scan order). cos_sim := dot_q / 1e12 rounded to 6."""
-    return """
+    return f"""
 WITH ex AS (
   SELECT label, generate_subscripts(embedding, 1) AS dim,
          unnest(list_transform(embedding,
@@ -114,7 +114,8 @@ vn AS (
            sqrt(list_reduce(list_transform(embedding,
                y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)), (p, q) -> p + q))))
            AS vv
-  FROM embeddings),
+  FROM embeddings
+  WHERE {_ph.duck_nonzero_norm('embedding')}),
 vq AS (
   SELECT vec_id, true_label, dim,
          CAST(floor(vv * 1000000) AS BIGINT) AS vq
@@ -165,12 +166,10 @@ def q_rocchio_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dim",
         F.floor(F.col("centroid") / F.col("nrm") * 1_000_000).cast("long").alias("cq"),
     )
-    from aqi_featurestore_spark.operators.similarity import _normalized_arrow
+    from aqi_featurestore_spark.operators.similarity import _normalized
 
-    vn = e.select(
-        "vec_id",
-        F.col("label").alias("true_label"),
-        _normalized_arrow("embedding").alias("v"),
+    vn = _normalized(
+        e, ["vec_id", F.col("label").alias("true_label")], "embedding", "v"
     )
     # explode each vector against the broadcast centroid rows on dim;
     # both sides quantized, so the dot is an exact integer sum
@@ -356,7 +355,7 @@ l{i} AS (
   SELECT prev.vec_id, COALESCE(prev.lab, p.lab) AS lab
   FROM {prev} prev LEFT JOIN p{i} p ON prev.vec_id = p.vec_id)""")
         prev = f"l{i}"
-    return f"""WITH pairs AS ({approx_oracles.embedding_cosine_lsh_sql(threshold=0.25)}),
+    return f"""WITH pairs AS MATERIALIZED ({approx_oracles.embedding_cosine_lsh_sql(threshold=0.25)}),
 edges AS (
   SELECT d1 AS src, d2 AS dst FROM pairs
   UNION ALL SELECT d2, d1 FROM pairs),

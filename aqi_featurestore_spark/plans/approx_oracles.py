@@ -43,15 +43,17 @@ sh AS (
 
 _SHINGLES_CTE = _shingles_cte()
 
-# Unit-normalized embedding vectors (same IEEE op order as Spark's
-# _normalized + _dot fold — proven by similarity_topk_cosine).
-_NORM_CTE = """norm AS (
+# Unit-normalized embedding vectors, zero-norm rows left out (same IEEE
+# op order as Spark's normalized_jvm + _dot_fold — proven by
+# similarity_topk_cosine).
+_NORM_CTE = f"""norm AS (
   SELECT vec_id,
          list_transform(embedding, x -> CAST(x AS DOUBLE) /
            sqrt(list_reduce(
                   list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
                   (a, b) -> a + b))) AS v
-  FROM embeddings)"""
+  FROM embeddings
+  WHERE {ph.duck_nonzero_norm('embedding')})"""
 
 _NORM_DOT = (
     "list_reduce(list_transform(range(1, len({a}) + 1), "
@@ -387,9 +389,10 @@ def _pq_fit_code_ctes(
            sqrt(list_reduce(
                   list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
                   (a, b) -> a + b))) AS nv
-  FROM embeddings)""",
+  FROM embeddings
+  WHERE {ph.duck_nonzero_norm('embedding')})""",
         """pq_hh AS (
-  SELECT vec_id, md5('km|' || CAST(vec_id AS VARCHAR)) AS h8 FROM embeddings)""",
+  SELECT vec_id, md5('km|' || CAST(vec_id AS VARCHAR)) AS h8 FROM pq_nrm)""",
         f"""pq_sr AS (
   SELECT vec_id, CAST(rn - 1 AS INT) AS cid FROM (
     SELECT vec_id, row_number() OVER (ORDER BY {hexpr}, vec_id) AS rn

@@ -210,7 +210,8 @@ nrm AS (
            sqrt(list_reduce(
                   list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
                   (a, b) -> a + b))) AS nv
-  FROM embeddings),
+  FROM embeddings
+  WHERE {_ph.duck_nonzero_norm('embedding')}),
 pairs AS (
   SELECT a.vec_id AS i, b.vec_id AS j
   FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id

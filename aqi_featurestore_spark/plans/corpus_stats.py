@@ -388,12 +388,13 @@ def q_group_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_NORM_SUB = """(SELECT vec_id,
+_EMB_NORM_SUB = f"""(SELECT vec_id,
                list_transform(embedding, x -> CAST(x AS DOUBLE) /
                  sqrt(list_reduce(
                    list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
                    (p, q) -> p + q))) AS v
-        FROM embeddings)"""
+        FROM embeddings
+        WHERE {_ph.duck_nonzero_norm('embedding')})"""
 
 _TRIANGLE_SQL = f"""
 WITH pairs AS (
@@ -685,7 +686,7 @@ def _pagerank_sql() -> str:
              FROM edges e JOIN {prev} r ON e.src = r.node
              GROUP BY e.dst) s ON s.node = d.node)""")
         prev = f"it{i}"
-    return f"""WITH pairs AS ({approx_oracles.embedding_cosine_lsh_sql()}),
+    return f"""WITH pairs AS MATERIALIZED ({approx_oracles.embedding_cosine_lsh_sql()}),
 edges AS (
   SELECT d1 AS src, d2 AS dst FROM pairs
   UNION ALL SELECT d2, d1 FROM pairs),

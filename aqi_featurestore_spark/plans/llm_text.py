@@ -43,7 +43,6 @@ from aqi_featurestore_spark.operators.similarity import (
     cosine_topk_pq,
     embedding_cosine_pairs,
     maxsim_topk,
-    normalized_arrow,
     pq_fit_books,
 )
 from aqi_featurestore_spark.plans._base import (
@@ -845,7 +844,7 @@ def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank window runs over the bounded cell domain and the totals ride
     a 1-row broadcast scalar."""
     from aqi_featurestore_spark.operators.similarity import (
-        coarse_udfs_from_centroids,
+        coarse_cols,
         seeded_coarse_centroids,
     )
 
@@ -853,7 +852,7 @@ def q_ann_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = seeded_coarse_centroids(
         e, id_col="vec_id", vec_col="embedding", n_lists=16
     )
-    assign_list, _ = coarse_udfs_from_centroids(cent, 1)
+    assign_list, _ = coarse_cols("seeded", cent, 1)
     cellc = (
         e.select(assign_list("embedding").alias("list_id"))
         .groupBy("list_id")
@@ -1932,7 +1931,7 @@ def q_maxsim_shortlist_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANN lookups (`similarity_topk_ivfpq` per token) for candidate
     generation and rescores the bounded union — this query prices what
     that shortlist loses."""
-    from aqi_featurestore_spark.operators.similarity import _dot_fold
+    from aqi_featurestore_spark.operators.similarity import _dot_fold, _normalized
 
     e = _read(spark, sf_dir, "embeddings")
     mv = e.select(
@@ -1941,15 +1940,18 @@ def q_maxsim_shortlist_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding",
     )
     q = F.broadcast(
-        mv.where(F.col("mdoc_id") < _MAXSIM_NQ).select(
-            F.col("mdoc_id").alias("q_id"),
-            F.col("vec_id").alias("q_tok"),
-            normalized_arrow("embedding").alias("q_vec"),
+        _normalized(
+            mv.where(F.col("mdoc_id") < _MAXSIM_NQ),
+            [F.col("mdoc_id").alias("q_id"), F.col("vec_id").alias("q_tok")],
+            "embedding",
+            "q_vec",
         )
     )
-    c = mv.where(F.col("mdoc_id") >= _MAXSIM_NQ).select(
-        F.col("mdoc_id").alias("n_id"),
-        normalized_arrow("embedding").alias("n_vec"),
+    c = _normalized(
+        mv.where(F.col("mdoc_id") >= _MAXSIM_NQ),
+        [F.col("mdoc_id").alias("n_id")],
+        "embedding",
+        "n_vec",
     )
     dot = _dot_fold("q_vec", "n_vec")
     tm = (

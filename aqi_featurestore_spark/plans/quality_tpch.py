@@ -726,7 +726,7 @@ def q_shipmode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EMB_RESOLVE_SQL = """
+_EMB_RESOLVE_SQL = f"""
 WITH RECURSIVE pairs AS (
   SELECT a.vec_id AS d1, b.vec_id AS d2
   FROM (SELECT vec_id,
@@ -734,13 +734,15 @@ WITH RECURSIVE pairs AS (
                  sqrt(list_reduce(
                    list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
                    (p, q) -> p + q))) AS v
-        FROM embeddings) a
+        FROM embeddings
+        WHERE {_ph.duck_nonzero_norm('embedding')}) a
   JOIN (SELECT vec_id,
                list_transform(embedding, x -> CAST(x AS DOUBLE) /
                  sqrt(list_reduce(
                    list_transform(embedding, y -> CAST(y AS DOUBLE) * CAST(y AS DOUBLE)),
                    (p, q) -> p + q))) AS v
-        FROM embeddings) b
+        FROM embeddings
+        WHERE {_ph.duck_nonzero_norm('embedding')}) b
     ON a.vec_id < b.vec_id
   WHERE round(list_reduce(list_transform(range(1, len(a.v) + 1),
                                          i -> a.v[i] * b.v[i]), (p, q) -> p + q), 6) >= 0.92),

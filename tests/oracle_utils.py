@@ -59,10 +59,18 @@ def canonical_rows(df: pd.DataFrame) -> list[tuple[str, ...]]:
     return sorted(out)
 
 
+def oracle_frame(sql: str, sf_dir: str) -> pd.DataFrame:
+    con = duck_connection(sf_dir)  # the relation needs its connection open
+    return con.sql(sql).fetchdf()
+
+
 def compare_with_oracle(spark_df, sql: str, sf_dir: str) -> None:
-    con = duck_connection(sf_dir)
-    oracle = con.sql(sql).fetchdf()
-    mine = spark_df.toPandas()
+    compare_frames(spark_df.toPandas(), oracle_frame(sql, sf_dir))
+
+
+def compare_frames(mine: pd.DataFrame, oracle: pd.DataFrame) -> None:
+    """Assert a Spark result (as pandas) equals the oracle's: same
+    columns, row count and canonical values."""
     assert sorted(mine.columns) == sorted(oracle.columns), (
         f"column mismatch: {sorted(mine.columns)} vs {sorted(oracle.columns)}"
     )

@@ -3,8 +3,8 @@
 The registry queries are hash-verified against the unrolled DuckDB
 oracle by test_oracle_parity; these pin the OPERATOR contracts directly:
 planted clusters are recovered, empty clusters carry forward, the
-assignment plan never shuffles, and the JVM normalizer matches the
-Arrow one and its old per-element form bit-for-bit.
+assignment plan never shuffles, and the JVM normalizer matches a
+numpy cumsum reference and its old per-element form bit-for-bit.
 
 The vector expressions are SQL text (one ``F.expr`` each); the
 Python-lambda forms they replaced are kept HERE as references — the
@@ -31,6 +31,8 @@ from aqi_featurestore_spark.operators.clustering import (
     kmeans_probe_col,
     micro_col,
     normalized_jvm,
+    seeded_cell_col,
+    seeded_probe_col,
 )
 from aqi_featurestore_spark.operators.similarity import (
     _dot_fold,
@@ -109,15 +111,19 @@ def test_assignment_plan_is_pure_projection(spark):
 
 
 def test_normalized_jvm_matches_arrow(spark):
-    from aqi_featurestore_spark.operators.similarity import _normalized_arrow
+    """normalized_jvm against the numpy form the batched Arrow pair
+    scans use: ``np.cumsum`` of the squares accumulates left to right
+    from the first term, the fold's IEEE op order."""
+    import numpy as np
 
     df, _ = _planted(spark, n_per=10)
     both = df.select(
-        normalized_jvm("embedding").alias("jvm"),
-        _normalized_arrow("embedding").alias("arrow"),
+        "embedding", normalized_jvm("embedding").alias("jvm")
     ).collect()
     for r in both:
-        assert r["jvm"] == r["arrow"]  # bit-identical, not approx
+        x = np.asarray(r["embedding"], dtype=np.float64)
+        ref = (x / np.sqrt(np.cumsum(x * x)[-1])).tolist()
+        assert r["jvm"] == ref  # bit-identical, not approx
 
 
 def _normalized_inline(vec_col):
@@ -273,6 +279,55 @@ def test_pq_lut_sql_matches_lambda_form_on_sf01(spark, sf01):
             assert r[f"lut{s}"] == r[f"ref{s}"]
 
 
+def test_seeded_cells_and_probes_match_numpy_on_sf01(spark, sf01):
+    """The seeded coarse cell and probe list (exact int64 SQL) against
+    the numpy reference: argmin and stable argsort of the int64 squared
+    distances, ties on the smallest cell id."""
+    import numpy as np
+
+    from aqi_featurestore_spark.operators.similarity import seeded_coarse_centroids
+
+    cent = seeded_coarse_centroids(
+        sf01, id_col="vec_id", vec_col="embedding", n_lists=16
+    )
+    rows = sf01.select(
+        "embedding",
+        seeded_cell_col("embedding", cent.tolist()).alias("cell"),
+        seeded_probe_col("embedding", cent, 5).alias("probe"),
+    ).collect()
+    assert len(rows) == 2000
+    q = np.floor(
+        np.array([r["embedding"] for r in rows], dtype=np.float64) * 1e6
+    ).astype(np.int64)
+    d = ((q[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
+    order = np.argsort(d, axis=1, kind="stable")[:, :5]
+    assert [r["cell"] for r in rows] == d.argmin(axis=1).tolist()
+    assert [r["probe"] for r in rows] == order.tolist()
+
+
+@pytest.mark.parametrize("n_planes", [16, 32])
+def test_hyperplane_sketch_matches_numpy_on_sf01(spark, sf01, n_planes):
+    """The SQL sign sketch against ``floor(v * 1e6) @ planes.T > 0``
+    packed into bits; at 32 planes bit 31 is set on some rows."""
+    import numpy as np
+
+    from aqi_featurestore_spark.functions.portable_hash import int_planes
+    from aqi_featurestore_spark.operators.similarity import hyperplane_sketch
+
+    rows = sf01.select(
+        "embedding", hyperplane_sketch("embedding", n_planes=n_planes).alias("sk")
+    ).collect()
+    q = np.floor(
+        np.array([r["embedding"] for r in rows], dtype=np.float64) * 1e6
+    ).astype(np.int64)
+    planes = np.array(int_planes(n_planes, 64), dtype=np.int64)
+    bits = q @ planes.T > 0
+    want = [sum(1 << p for p in range(n_planes) if b[p]) for b in bits]
+    assert [r["sk"] for r in rows] == want
+    if n_planes == 32:
+        assert any(w >> 31 for w in want)
+
+
 @pytest.mark.parametrize("name", ["x", "c", "i", "n", "vec `x` 1.a"])
 def test_sql_forms_resolve_any_column_name(spark, name):
     """Lambda variables carry reserved names, and names are quoted: an
@@ -340,7 +395,9 @@ def test_normalized_jvm_null_and_empty_vectors(spark):
     assert rows[0]["bound"] is None and rows[0]["inline"] is None
     assert rows[0]["lam"] is None
     assert rows[0]["v"] is None and rows[0]["v_lam"] is None
-    assert rows[1]["bound"] == [] and rows[1]["inline"] == [] == rows[1]["lam"]
+    # the empty vector has norm 0: null, like every zero-norm vector
+    assert rows[1]["bound"] is None
+    assert rows[1]["inline"] == [] == rows[1]["lam"]
     assert rows[1]["v"] == [] == rows[1]["v_lam"]
     assert rows[2]["bound"] == rows[2]["inline"] == rows[2]["lam"] == [0.6, 0.8]
     assert rows[2]["v"] == rows[2]["v_lam"] == [3_000_000, 4_000_000]
@@ -351,9 +408,14 @@ def test_normalized_jvm_null_and_empty_vectors(spark):
 )
 def test_zero_norm_vector_divides_by_zero(spark, form):
     """Under ANSI mode (Spark 4's default) a zero-norm vector raises in
-    the SQL form exactly as it did in the lambda and inline ones."""
+    the lambda and inline reference forms. ``normalized_jvm`` tests the
+    norm it binds and gives null instead: a zero-norm row is never a
+    neighbour, and every scan drops it before it scores."""
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     df = spark.createDataFrame([(0, [0.0, 0.0, 0.0])], "id int, embedding array<float>")
+    if form is normalized_jvm:
+        assert df.select(form("embedding").alias("nv")).collect()[0]["nv"] is None
+        return
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
         df.select(form("embedding")).collect()
 
@@ -377,9 +439,8 @@ def test_semantic_dedup_drops_planted_duplicate(spark):
 
 
 def test_semantic_dedup_zero_vectors_are_never_duplicates(spark, tmp_path):
-    """A zero-norm vector normalizes to NaN, so every cosine it takes
-    part in is NaN; NaN never reaches tau, so it neither is dropped nor
-    causes a drop."""
+    """The batched scan drops zero-norm rows before it scores, so a zero
+    vector neither is dropped nor causes a drop."""
     import pyarrow.parquet as pq
 
     from aqi_featurestore_spark.plans.clustering import q_semantic_dedup

@@ -142,21 +142,6 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert again == approx_set
 
 
-def test_ivf_sample_fastpath_recall(spark):
-    """The driver-capped-sample centroid fit (index-build fast path,
-    centroids="kmeans_sample") keeps working after the default moved to
-    the distributed fit — same recall bar on the same manifold."""
-    vecs = _vectors(spark, n=80, dim=16)
-    q = vecs.where(F.col("vec_id") % 20 == 0)
-    exact = cosine_topk_bruteforce(q, vecs, k=5).collect()
-    approx = cosine_topk_ivf(
-        q, vecs, k=5, n_lists=8, n_probe=3, centroids="kmeans_sample"
-    ).collect()
-    exact_set = {(r["q_id"], r["n_id"]) for r in exact}
-    approx_set = {(r["q_id"], r["n_id"]) for r in approx}
-    assert len(exact_set & approx_set) / len(exact_set) >= 0.8
-
-
 def test_embedding_cosine_pairs_exact_and_lsh(spark):
     base = _vectors(spark, n=40, dim=16)
     # plant a true near-dup: vec 100 = vec 0 with one component nudged

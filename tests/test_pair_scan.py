@@ -15,9 +15,9 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from aqi_featurestore_spark.operators.clustering import normalized_jvm
 from aqi_featurestore_spark.operators.similarity import (
     _dot_fold,
-    _normalized_arrow,
     cosine_topk_bruteforce,
     embedding_cosine_pairs,
 )
@@ -42,7 +42,7 @@ def _canon(df):
 def test_pairs_batched_equals_fold(vectors):
     """All-pairs cosine: batched scan == the BNLJ fold-dot pipeline."""
     v = vectors.select(
-        F.col("vec_id").alias("id"), _normalized_arrow("embedding").alias("vec")
+        F.col("vec_id").alias("id"), normalized_jvm("embedding").alias("vec")
     )
     a = v.select(F.col("id").alias("d1"), F.col("vec").alias("v1"))
     b = v.select(F.col("id").alias("d2"), F.col("vec").alias("v2"))
@@ -62,12 +62,12 @@ def test_topk_batched_equals_fold(vectors):
     queries = vectors.where(F.col("vec_id") % 10 == 0)
     q = queries.select(
         F.col("vec_id").alias("q_id"),
-        _normalized_arrow("embedding").alias("q_vec"),
+        normalized_jvm("embedding").alias("q_vec"),
         F.col("label").alias("_q_ex"),
     )
     c = vectors.select(
         F.col("vec_id").alias("n_id"),
-        _normalized_arrow("embedding").alias("n_vec"),
+        normalized_jvm("embedding").alias("n_vec"),
         F.col("label").alias("_n_ex"),
     )
     pairs = (

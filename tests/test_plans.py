@@ -36,22 +36,12 @@ from aqi_featurestore_spark.plans import QUERIES
 SF_DIR = "/root/testdata/sf0.001"
 
 # Queries whose plans legitimately cross into Python via Arrow batches
-# (numpy matmul / popcount per batch — see docs/PLANS.md "Python
-# boundaries"). Anything else must stay pure JVM: the compressed-domain
-# ANN serving path (ann_index_serve, ann_filtered_topk, the hybrid
-# serves, similarity_topk_pq) re-ranks in the JVM, so an Arrow UDF that
-# comes back onto it fails here.
+# (see docs/PLANS.md "Python boundaries"). Anything else must stay pure
+# JVM: every normalize, dot, coarse cell and LSH sketch of the
+# similarity family is JVM SQL, so an Arrow UDF that comes back onto
+# it fails here.
 ARROW_EVAL_OK = {
-    "ann_recall",  # LSH sketch + IVF probe/dot legs
-    "ann_recall_methods",  # LSH, IVF and seeded-IVFADC coarse udfs
-    "rocchio_classify",
-    "embedding_cosine_dedup_lsh",
-    "simhash_dedup",
-    "similarity_topk_ivf",
-    "similarity_topk_ivfpq",  # seeded coarse assign/probe udfs (re-rank is JVM)
-    "ann_index_stats",  # seeded coarse assign udf (one corpus pass)
-    "similarity_topk_lsh",
-    "maxsim_topk",  # the shared Arrow normalize; dots are JVM folds
+    "simhash_dedup",  # the per-batch popcount vote (near_dedup.simhash)
 }
 MAP_IN_PANDAS_OK = {
     "multimodal_features", "frame_sample", "image_phash_dedup",
