@@ -575,9 +575,8 @@ def vacuum_ann_index(
       vacuum whose floor would drop one refuses;
     - the rewrite re-partitions by ``list_id`` (one task per list → one
       file per list partition), merging the one-file-per-refresh
-      fragments; it lands in a tmp dir and swaps in by rename
-      (atomic on HDFS/POSIX; on object stores run in the maintenance
-      window — the OfflineStore.compact discipline).
+      fragments; it swaps in through ``fs.replace_dir`` (atomic on
+      HDFS/POSIX; on object stores run in the maintenance window).
 
     100 TB shape: ONE shuffle keyed by ``n_id`` for the base-snapshot
     resolution over the below-floor slice, then a write partitioned by
@@ -619,18 +618,9 @@ def vacuum_ann_index(
     kept = rows.where(F.col("version") > cutoff).unionByName(
         base.select(*rows.columns)
     )
-    tmp, old = f"{ipath}.vacuum.tmp", f"{ipath}.vacuum.old"
-    _fs.delete(spark, tmp)
-    (
-        kept.repartition("list_id")
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(tmp)
+    _fs.replace_dir(
+        spark, ipath, kept.repartition("list_id").write.partitionBy("list_id")
     )
-    _fs.delete(spark, old)
-    _fs.rename(spark, ipath, old)
-    _fs.rename(spark, tmp, ipath)
-    _fs.delete(spark, old)
     spark.createDataFrame([(int(cutoff),)], "min_as_of long").coalesce(
         1
     ).write.mode("overwrite").parquet(f"{path}/retention")

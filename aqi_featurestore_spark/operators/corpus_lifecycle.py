@@ -38,28 +38,6 @@ from pyspark.sql import functions as F
 from aqi_featurestore_spark.sources import fs
 
 
-def _swap_rewrite(
-    spark: SparkSession, path: str, df: DataFrame, n_files: int
-) -> None:
-    """Rewrite ``path`` to hold ``df`` in ``n_files`` files via
-    tmp-write + directory rename (atomic on HDFS/POSIX; on object
-    stores there is a visible window — run in the maintenance path,
-    not concurrently with admissions, exactly like
-    `OfflineStore.compact`)."""
-    tmp = f"{path}.compact.tmp"
-    old = f"{path}.compact.old"
-    fs.delete(spark, tmp)
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    fs.delete(spark, old)
-    if not fs.rename(spark, path, old):
-        raise IOError(f"_swap_rewrite: rename {path} -> {old} failed")
-    if not fs.rename(spark, tmp, path):
-        # roll back so the store is never left missing
-        fs.rename(spark, old, path)
-        raise IOError(f"_swap_rewrite: rename {tmp} -> {path} failed")
-    fs.delete(spark, old)
-
-
 def compact_corpus_store(
     spark: SparkSession,
     corpus_path: str,
@@ -82,7 +60,9 @@ def compact_corpus_store(
         return {"files_before": 0, "files_after": 0, "bytes": 0, "version": None}
     total = sum(sz for _p, sz in listing)
     n_files = max(1, -(-total // target_file_bytes))
-    _swap_rewrite(spark, corpus_path, spark.read.parquet(corpus_path), n_files)
+    fs.replace_dir(
+        spark, corpus_path, spark.read.parquet(corpus_path).repartition(n_files).write
+    )
     m = SnapshotManifests(spark, corpus_path)
     v = m.record("compact")
     m.set_floor(v)
@@ -146,8 +126,10 @@ def vacuum_corpus(
     # the rewrite touches every row anyway — right-size the file count
     # while at it (a vacuum is also an implicit compaction)
     total = sum(sz for _p, sz in fs.list_data_files(spark, corpus_path))
-    _swap_rewrite(
-        spark, corpus_path, retained, max(1, -(-total // (128 << 20)))
+    fs.replace_dir(
+        spark,
+        corpus_path,
+        retained.repartition(max(1, -(-total // (128 << 20)))).write,
     )
     m = SnapshotManifests(spark, corpus_path)
     v = m.record("vacuum")

@@ -495,8 +495,8 @@ def retire_from_impact_index(
     candidates, which were correctness-harmless probes).
 
     Shape: one anti-join rewrite of the postings base (fresh-dir +
-    marker republish) and of the partial posting log (snapshot/
-    rename-in swap preserving the epoch partitioning), the N
+    marker republish) and of the partial posting log (``fs.fold_in``
+    preserving the epoch partitioning), the N
     correction recorded in ``retired.json`` (counted as the retired
     ids actually PRESENT in stored postings), then a FORCED weights
     refresh so serving reflects the retained corpus immediately — df
@@ -554,10 +554,11 @@ def retire_from_impact_index(
             {"fold_epoch": int(base_wm), "n_docs": int(base_n)},
         )
     if have_partials:
-        _epoch_swap(
+        fs.fold_in(
             spark,
             f"{root}/postings",
             lambda df: df.join(F.broadcast(ids), "doc_id", "left_anti"),
+            partition_by="epoch",
         )
     fs.write_text_atomic(
         spark,
@@ -573,46 +574,6 @@ def retire_from_impact_index(
         "fold_epoch": stats["fold_epoch"],
         "n_weights": stats["n_weights"],
     }
-
-
-def _epoch_swap(spark: SparkSession, ppath: str, transform) -> None:
-    """Snapshot -> transform -> rename-in -> delete for the
-    epoch-partitioned posting log — `near_dedup._sig_index_swap`'s
-    protocol with ``epoch`` as the partition column: merged files must
-    land back inside their ``epoch=E`` directories, files appended
-    after the snapshot are never deleted, and between rename-in and
-    delete the log holds both row sets (absorbed by the readers'
-    per-epoch distinct — posting rows are unique per (doc_id, token,
-    epoch), so the overlap collapses exactly like the signature
-    index's set-union buckets)."""
-    import uuid
-
-    from aqi_featurestore_spark.sources import fs
-
-    snapshot = [p for p, _s in fs.list_data_files(spark, ppath)]
-    if not snapshot:
-        return
-    snap_df = (
-        spark.read.option("basePath", ppath).parquet(*snapshot).distinct()
-    )
-    out = transform(snap_df)
-    tmp = f"{ppath.rstrip('/')}.swap-{uuid.uuid4().hex[:8]}"
-    fs.delete(spark, tmp)
-    (
-        out.repartition("epoch")
-        .write.mode("overwrite")
-        .partitionBy("epoch")
-        .parquet(tmp)
-    )
-    tag = uuid.uuid4().hex[:8]
-    for i, (f_, _s) in enumerate(fs.list_data_files(spark, tmp)):
-        part_dir = f_.rsplit("/", 2)[1]
-        dst = f"{ppath.rstrip('/')}/{part_dir}/retire-{tag}-{i}.parquet"
-        if not fs.rename(spark, f_, dst):
-            raise IOError(f"_epoch_swap: rename {f_} -> {dst} failed")
-    fs.delete(spark, tmp)
-    for f_ in snapshot:
-        fs.delete(spark, f_)
 
 
 def sparse_topk(

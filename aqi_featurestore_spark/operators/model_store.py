@@ -346,13 +346,7 @@ def vacuum_model_registry(
     kept = weights.where(F.col("version") > cutoff).unionByName(
         base.select(*weights.columns)
     )
-    tmp, old = f"{wpath}.vacuum.tmp", f"{wpath}.vacuum.old"
-    fs.delete(spark, tmp)
-    kept.coalesce(1).write.mode("overwrite").parquet(tmp)
-    fs.delete(spark, old)
-    fs.rename(spark, wpath, old)
-    fs.rename(spark, tmp, wpath)
-    fs.delete(spark, old)
+    fs.replace_dir(spark, wpath, kept.coalesce(1).write)
     _write_retention(spark, path, cutoff)
     after = spark.read.parquet(wpath)
     return {

@@ -844,68 +844,16 @@ def write_signature_index(
     )
 
 
-def _sig_index_swap(
-    spark, path: str, transform, *, tag_prefix: str
-) -> dict:
-    """Snapshot → transform → rename-in → delete for the band-partitioned
-    signature index — `operators/sketches._swap_in`'s protocol adapted
-    to a PARTITIONED store (merged files must land back inside their
-    ``band=N`` directories; files renamed into the root would collide
-    with partition discovery). Safe under a concurrent appender and a
-    crash at any step for the same reason as the sketch stores: between
-    rename-in and delete the store holds both the transformed rows and
-    the originals, and bucket membership reads through ``distinct`` —
-    set union is idempotent, so the overlap is absorbed; files appended
-    after the snapshot are never deleted. Returns
-    {'files_before', 'files_after', 'rows'}."""
-    import uuid
-
+def _sig_index_fold(spark, path: str, transform) -> dict:
+    """``fs.fold_in`` over the band-partitioned index, plus its row
+    count. A transform may empty the store (retiring every indexed
+    doc): a parquet read of the file-less store would raise "unable to
+    infer schema", so an empty listing reports rows=0 without reading."""
     from aqi_featurestore_spark.sources import fs
 
-    snapshot = [p for p, _s in fs.list_data_files(spark, path)]
-    if not snapshot:
-        return {"files_before": 0, "files_after": 0, "rows": 0}
-    # basePath keeps the band partition column on a file-list read
-    snap_df = (
-        spark.read.option("basePath", path).parquet(*snapshot).distinct()
-    )
-    out = transform(snap_df)
-    tmp = f"{path.rstrip('/')}.swap-{uuid.uuid4().hex[:8]}"
-    fs.delete(spark, tmp)
-    (
-        out.repartition("band")
-        .write.mode("overwrite")
-        .partitionBy("band")
-        .parquet(tmp)
-    )
-    tag = uuid.uuid4().hex[:8]
-    for i, (f_, _s) in enumerate(fs.list_data_files(spark, tmp)):
-        # .../tmp/band=N/part-*.parquet -> .../path/band=N/compact-...
-        band_dir = f_.rsplit("/", 2)[1]
-        dst = f"{path.rstrip('/')}/{band_dir}/{tag_prefix}-{tag}-{i}.parquet"
-        if not fs.rename(spark, f_, dst):
-            # a silently failed rename here + the deletes below would
-            # LOSE the transformed rows (round-10 ADVICE) — abort with
-            # the snapshot intact; tmp is left for the re-run to clear
-            raise IOError(f"_sig_index_swap: rename {f_} -> {dst} failed")
-    fs.delete(spark, tmp)
-    for f_ in snapshot:
-        fs.delete(spark, f_)
-    # a transform may legitimately empty the store (e.g. retiring every
-    # indexed doc): the partitioned write emits no data files, all
-    # snapshot files were deleted, and a parquet read of the bare store
-    # would raise "unable to infer schema" (round-10 ADVICE) — report
-    # rows=0 from the listing instead of reading
-    rows = (
-        spark.read.parquet(path).count()
-        if fs.list_data_files(spark, path)
-        else 0
-    )
-    return {
-        "files_before": len(snapshot),
-        "files_after": len(fs.list_data_files(spark, path)),
-        "rows": rows,
-    }
+    stats = fs.fold_in(spark, path, transform, partition_by="band")
+    stats["rows"] = spark.read.parquet(path).count() if stats["files_after"] else 0
+    return stats
 
 
 def compact_signature_index(spark, path: str) -> dict:
@@ -914,13 +862,11 @@ def compact_signature_index(spark, path: str) -> dict:
     round-9 verdict ask #5's retention half. Bucket membership is a
     SET, so the fold is lossless by construction: candidates, and
     therefore admissions, are bit-identical before and after
-    (pytest-pinned), and the swap is concurrent-append/crash safe (see
-    :func:`_sig_index_swap`). Run it whenever probe-side read
+    (pytest-pinned), and the fold is concurrent-append/crash safe (see
+    :func:`fs.fold_in`). Run it whenever probe-side read
     amplification matters — the same cadence discipline as the
     HLL/zone/CMS store compactions."""
-    return _sig_index_swap(
-        spark, path, lambda df: df, tag_prefix="compact"
-    )
+    return _sig_index_fold(spark, path, lambda df: df)
 
 
 def retire_from_signature_index(
@@ -935,7 +881,7 @@ def retire_from_signature_index(
     probe + a verify join row per colliding batch — retirement is what
     keeps probe cost proportional to the LIVE corpus.
 
-    Shape: one anti-join rewrite through the snapshot/rename-in swap
+    Shape: one anti-join rewrite through ``fs.fold_in``
     (crash/concurrent-append safe; a retired doc's rows appended after
     the snapshot would survive, so retire AFTER the corpus retirement
     is visible). Retired ids broadcast — retirement batches are small
@@ -945,7 +891,7 @@ def retire_from_signature_index(
     def _drop(df):
         return df.join(F.broadcast(ids), id_col, "left_anti")
 
-    return _sig_index_swap(spark, path, _drop, tag_prefix="retire")
+    return _sig_index_fold(spark, path, _drop)
 
 
 def lsh_candidates_from_index(

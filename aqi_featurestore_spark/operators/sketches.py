@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aqi_featurestore_spark.functions import portable_hash as _ph
+from aqi_featurestore_spark.sources import fs
 
 # Mirrors of the plans/corpus_stats.py HLL constants (literals; lock-step
 # is pinned by the estimate-equality test, not by imports — the plans
@@ -146,14 +147,14 @@ def compact_sketch_store(
     (the round-8 retention discipline applied to the store this module
     introduces, so it does not regrow the unbounded-append problem those
     vacuums closed). MAX-merge is lossless, so estimates are
-    bit-identical before and after; see :func:`_swap_in` for why the
-    swap is safe under a concurrent streaming appender. Returns
+    bit-identical before and after; see :func:`fs.fold_in` for why the
+    fold is safe under a concurrent streaming appender. Returns
     {'files_before', 'files_after', 'groups'}."""
 
     def _merge(df: DataFrame) -> DataFrame:
         return df.groupBy(*group_cols, "idx").agg(F.max("m").alias("m"))
 
-    stats = _swap_in(spark, path, _merge)
+    stats = fs.fold_in(spark, path, _merge)
     stats["groups"] = (
         spark.read.parquet(path).select(*group_cols).distinct().count()
     )
@@ -240,49 +241,6 @@ def kmv_estimate(sketch: DataFrame, group_cols: list[str]) -> DataFrame:
     )
 
 
-def _swap_in(spark: SparkSession, path: str, merge_fn) -> dict:
-    """Compact the partial log via snapshot → merge → append → delete,
-    all through the Hadoop-FS helpers (works on any scheme the store's
-    parquet I/O accepts — HDFS/object stores, not just local POSIX):
-
-    1. snapshot the store's data-file listing;
-    2. merge ONLY the snapshotted files (``merge_fn`` is the store's
-       read-time merge);
-    3. APPEND the merged base into the store dir (written to a tmp dir,
-       then each data file renamed in — never a whole-directory swap);
-    4. delete exactly the snapshotted files.
-
-    Safe under a concurrent streaming appender AND under a crash at any
-    step, because both sketch merges (register-wise MAX, bottom-K of
-    the value union) are IDEMPOTENT: between 3 and 4 the store holds
-    the merged base plus the original partials and reads identically;
-    a partial appended after the snapshot is never listed in step 4, so
-    it survives untouched and folds in at read time. The directory
-    rename-swap this replaces could silently delete a mid-compaction
-    append and left no store dir at all between its two renames."""
-    import uuid
-
-    from aqi_featurestore_spark.sources import fs
-
-    snapshot = [p for p, _s in fs.list_data_files(spark, path)]
-    if not snapshot:
-        return {"files_before": 0, "files_after": 0}
-    merged = merge_fn(spark.read.parquet(*snapshot))
-    tmp = f"{path.rstrip('/')}.compact-{uuid.uuid4().hex[:8]}"
-    fs.delete(spark, tmp)
-    merged.repartition(1).write.mode("overwrite").parquet(tmp)
-    tag = uuid.uuid4().hex[:8]
-    for i, (f_, _s) in enumerate(fs.list_data_files(spark, tmp)):
-        fs.rename(
-            spark, f_, f"{path.rstrip('/')}/compact-{tag}-{i}.parquet"
-        )
-    fs.delete(spark, tmp)
-    for f_ in snapshot:
-        fs.delete(spark, f_)
-    files_after = len(fs.list_data_files(spark, path))
-    return {"files_before": len(snapshot), "files_after": files_after}
-
-
 # -- Zone-stats partials (MIN/MAX merge: idempotent, like HLL) --------------
 
 
@@ -342,8 +300,8 @@ def compact_zone_store(
     spark: SparkSession, path: str, zone_cols: list[str], stat_cols: list[str]
 ) -> dict:
     """Fold the zone partial log (lossless: merge-of-merged == merged);
-    :func:`_swap_in`'s snapshot protocol makes it concurrent-append and
-    crash safe."""
+    :func:`fs.fold_in`'s snapshot protocol makes it concurrent-append
+    and crash safe."""
 
     def _merge(df: DataFrame) -> DataFrame:
         aggs = []
@@ -352,7 +310,7 @@ def compact_zone_store(
             aggs.append(F.max(f"max_{c}").alias(f"max_{c}"))
         return df.groupBy(*zone_cols).agg(*aggs)
 
-    return _swap_in(spark, path, _merge)
+    return fs.fold_in(spark, path, _merge)
 
 
 # -- CMS partials (SUM-merge: the versioned/epoch-dedup contract) -----------
@@ -426,8 +384,6 @@ def write_cms_partial(cells: DataFrame, path: str, epoch: int) -> None:
 
 def _cms_base(spark: SparkSession, path: str):
     """(base cells at the highest fold_epoch, watermark) or (None, None)."""
-    from aqi_featurestore_spark.sources import fs
-
     bpath = f"{path.rstrip('/')}/base"
     if not fs.exists(spark, bpath):
         return None, None
@@ -443,8 +399,6 @@ def read_merged_cms(
     the base watermark. Dedup keeps the epoch column in the key, so
     identical cell counts from DIFFERENT epochs still sum while a
     replayed epoch collapses — the non-idempotent-merge bookkeeping."""
-    from aqi_featurestore_spark.sources import fs
-
     base, wm = _cms_base(spark, path)
     frames = []
     if base is not None:
@@ -520,7 +474,7 @@ def compact_cms_store(
 ) -> dict:
     """Fold partial epochs into a new base snapshot whose ``fold_epoch``
     watermark records what was folded — append-then-delete like
-    :func:`_swap_in`, so readers are correct at every intermediate
+    :func:`fs.fold_in`, so readers are correct at every intermediate
     state: two bases -> highest wins; undeleted folded partials -> the
     `epoch > watermark` filter drops them. After compaction a REPLAY of
     a folded epoch is likewise dropped instead of double-counted —
@@ -537,13 +491,11 @@ def compact_cms_store(
     contract exists to prevent. Streaming epoch ids are monotone, so a
     partial appended after the snapshot has ``epoch > new_wm``: it is
     neither folded nor deleted here, reads correctly alongside the new
-    base, and folds on the next compaction (mirrors ``_swap_in``'s
+    base, and folds on the next compaction (mirrors ``fs.fold_in``'s
     file-snapshot discipline, in epoch space).
 
     ``_pre_fold_hook``: test-only fault/interleave injection point,
     called between the epoch snapshot and the fold write."""
-    from aqi_featurestore_spark.sources import fs
-
     ppath = f"{path.rstrip('/')}/partials"
     base, wm = _cms_base(spark, path)
     if not fs.list_data_files(spark, ppath):
@@ -596,7 +548,7 @@ def compact_kmv_store(
 ) -> dict:
     """Fold the KMV partial log into one bottom-K base — sketches are
     bit-identical before and after (merge-of-merged == merged); the
-    :func:`_swap_in` protocol makes it safe under concurrent appends."""
+    :func:`fs.fold_in` protocol makes it safe under concurrent appends."""
     from pyspark.sql import Window
 
     def _merge(df: DataFrame) -> DataFrame:
@@ -608,4 +560,4 @@ def compact_kmv_store(
             .select(*group_cols, "h")
         )
 
-    return _swap_in(spark, path, _merge)
+    return fs.fold_in(spark, path, _merge)

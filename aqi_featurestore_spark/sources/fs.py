@@ -1,4 +1,5 @@
-"""Driver-side filesystem metadata ops via the Hadoop FileSystem API.
+"""Driver-side filesystem metadata ops via the Hadoop FileSystem API,
+and the one store-rewrite protocol every parquet store uses.
 
 The engine's stores do a handful of driver-side metadata operations
 (existence probes before dedup gates, tmp-dir cleanup after snapshot
@@ -8,11 +9,23 @@ swaps). `os.path` only understands the local filesystem; on `s3a://` or
 an error. Going through Hadoop's FileSystem — the same abstraction the
 executors' parquet I/O uses — makes these probes correct on every scheme
 Spark itself can read.
+
+Every store rewrite goes through one of two helpers here, and no other
+module renames on the Hadoop FS:
+
+- :func:`replace_dir` swaps a whole directory (compaction, vacuum,
+  the online snapshot upsert);
+- :func:`fold_in` rewrites a set-semantic append log file by file
+  (sketch stores, the signature index, the impact posting log).
+
+Both check every rename and never delete the only copy of a row.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import uuid
+
+from pyspark.sql import DataFrameWriter, SparkSession
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -43,8 +56,9 @@ def delete(spark: SparkSession, path: str) -> None:
 
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
-    """Directory rename. Atomic on HDFS/POSIX; on object stores it is a
-    copy+delete — callers must treat the swap window as non-atomic."""
+    """File or directory rename; False on failure. Atomic on HDFS/POSIX;
+    on object stores it is a copy+delete. Only :func:`replace_dir` and
+    :func:`fold_in` call it."""
     fs, jsrc = _fs_and_path(spark, src)
     jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
     return bool(fs.rename(jsrc, jdst))
@@ -84,8 +98,6 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
     and SnapshotManifests.retention_floor retries when it can see a
     rewrite in flight). Concurrent writers of the SAME path remain a
     single-writer contract (see SnapshotManifests)."""
-    import uuid
-
     fs, jpath = _fs_and_path(spark, path)
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     write_text(spark, tmp, text)
@@ -115,6 +127,77 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
         fs.delete(jpath, False)
     if not fs.rename(jtmp, jpath):
         raise IOError(f"write_text_atomic: rename {tmp} -> {path} failed")
+
+
+def replace_dir(spark: SparkSession, path: str, writer: DataFrameWriter) -> None:
+    """Replace the parquet directory ``path`` with what ``writer`` writes.
+
+    The rewrite lands in ``{path}.tmp`` (a leftover ``.tmp``/``.old``
+    of a killed run is cleared first), then ``path -> {path}.old`` (only
+    if ``path`` exists) and ``.tmp -> path``, then ``.old`` is deleted.
+    Writing elsewhere first is what lets ``writer``'s plan read ``path``
+    itself (an upsert, a compaction). A failed second rename rolls the
+    old store back and raises ``IOError``, so the store is never left
+    missing. The swap is atomic on HDFS/POSIX; on object stores a rename
+    is copy+delete with a visible window — run rewrites in the
+    maintenance path, not concurrently with appends."""
+    tmp, old = f"{path}.tmp", f"{path}.old"
+    delete(spark, tmp)
+    delete(spark, old)
+    writer.mode("overwrite").parquet(tmp)
+    had = exists(spark, path)
+    if had and not rename(spark, path, old):
+        raise IOError(f"replace_dir: rename {path} -> {old} failed")
+    if not rename(spark, tmp, path):
+        if had:
+            rename(spark, old, path)
+        raise IOError(f"replace_dir: rename {tmp} -> {path} failed")
+    delete(spark, old)
+
+
+def fold_in(
+    spark: SparkSession, path: str, transform, *, partition_by: str | None = None
+) -> dict:
+    """Rewrite the append log at ``path`` through ``transform`` without a
+    directory swap: snapshot the data-file listing, read exactly those
+    files as a row set, write ``transform``'s result to a tmp dir, rename
+    each file into the store (into its ``partition_by=V`` dir when the
+    store is partitioned — files renamed into the root would collide
+    with partition discovery), then delete exactly the snapshotted files.
+
+    The store must read as a set (idempotent merges: sketch MAX/bottom-K,
+    bucket membership, per-epoch distinct postings). Then it is safe
+    under a concurrent appender and a crash at any step: between
+    rename-in and delete the store holds both the transformed rows and
+    the originals and reads identically, and a file appended after the
+    snapshot is never deleted. A failed rename raises ``IOError`` before
+    any delete, with the snapshot intact (the tmp dir is left behind).
+
+    Returns ``{"files_before", "files_after"}``."""
+    root = path.rstrip("/")
+    snapshot = [p for p, _s in list_data_files(spark, root)]
+    if not snapshot:
+        return {"files_before": 0, "files_after": 0}
+    # basePath keeps the partition column on a file-list read
+    out = transform(spark.read.option("basePath", root).parquet(*snapshot).distinct())
+    stamp = uuid.uuid4().hex[:8]
+    tmp = f"{root}.swap-{stamp}"
+    if partition_by is None:
+        out.repartition(1).write.parquet(tmp)
+    else:
+        out.repartition(partition_by).write.partitionBy(partition_by).parquet(tmp)
+    for i, (f_, _s) in enumerate(list_data_files(spark, tmp)):
+        part_dir = f"{f_.rsplit('/', 2)[1]}/" if partition_by else ""
+        dst = f"{root}/{part_dir}fold-{stamp}-{i}.parquet"
+        if not rename(spark, f_, dst):
+            raise IOError(f"fold_in: rename {f_} -> {dst} failed")
+    delete(spark, tmp)
+    for f_ in snapshot:
+        delete(spark, f_)
+    return {
+        "files_before": len(snapshot),
+        "files_after": len(list_data_files(spark, root)),
+    }
 
 
 def read_text(spark: SparkSession, path: str) -> str:

@@ -402,10 +402,10 @@ class OfflineStore:
           the target count, and ONE ``repartition(year, month, day,
           salt)`` shuffle rewrites everything — no per-partition loop,
           no driver data movement;
-        - the rewrite lands in ``<path>.compact.tmp`` and is swapped in
-          by directory rename. The swap is atomic on HDFS/POSIX; on
-          object stores there is a visible window — run compaction in
-          the maintenance path, not concurrently with appends.
+        - the rewrite is swapped in by :func:`fs.replace_dir` (atomic
+          on HDFS/POSIX; on object stores there is a visible window —
+          run compaction in the maintenance path, not concurrently
+          with appends).
 
         Returns ``{"files_before", "files_after", "bytes"}``."""
         listing = fs.list_data_files(self.spark, self.path)
@@ -435,25 +435,18 @@ class OfflineStore:
             "__salt",
             F.pmod(F.xxhash64(*self.keys, self.ts), F.coalesce("__n_files", F.lit(1))),
         )
-        tmp = f"{self.path}.compact.tmp"
-        old = f"{self.path}.compact.old"
-        fs.delete(self.spark, tmp)
         total_files = sum(n for *_, n in plan_rows)
-        (
+        fs.replace_dir(
+            self.spark,
+            self.path,
             # range-partition on (partition dirs, salt) with exactly the
             # target task count: each (dir, salt) combo lands in its own
             # task (hash repartition would collide combos into shared
             # tasks and silently under-split large partitions)
             salted.repartitionByRange(total_files, "year", "month", "day", "__salt")
             .drop("__n_files", "__salt")
-            .write.partitionBy("year", "month", "day")
-            .mode("overwrite")
-            .parquet(tmp)
+            .write.partitionBy("year", "month", "day"),
         )
-        fs.delete(self.spark, old)
-        fs.rename(self.spark, self.path, old)
-        fs.rename(self.spark, tmp, self.path)
-        fs.delete(self.spark, old)
         # compaction rewrites every file: prior versions' manifests now
         # reference deleted paths, so the retention floor advances to the
         # new version (below-floor as-of reads raise; E199 contract)

@@ -146,20 +146,13 @@ class FeatureStore:
             _online_columns(view, df), keys, ts=view.timestamp_field
         )
         p = self._online_path(view_name)
-        if os.path.exists(p):
+        if fs.exists(self.spark, p):
             current = _online_columns(view, self.spark.read.parquet(p))
             merged = upsert_snapshot(current, updates, keys, ts=view.timestamp_field)
         else:
             merged = updates
-        # Two-step rewrite: the merged plan reads `p`, so it must be
-        # materialized elsewhere before `p` is overwritten. The tmp dir is
-        # removed after the final write lands (it is also the recovery
-        # copy if a crash interrupts the overwrite of `p` — rerunning the
-        # upsert rebuilds `p` from offline history + updates).
-        tmp = f"{p}.tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        self.spark.read.parquet(tmp).write.mode("overwrite").parquet(p)
-        fs.delete(self.spark, tmp)
+        # the merged plan reads `p`: replace_dir writes it elsewhere first
+        fs.replace_dir(self.spark, p, merged.write)
 
     def materialize(self, view_name: str) -> None:
         """Feast ``materialize``: rebuild the online snapshot from offline
@@ -183,7 +176,7 @@ class FeatureStore:
         yield NULLs, rows staler than the view TTL are masked."""
         view = self.registry.get_feature_view(view_name)
         p = self._online_path(view_name)
-        if os.path.exists(p):
+        if fs.exists(self.spark, p):
             snapshot = self.spark.read.parquet(p)
         else:
             cols = ", ".join(

@@ -59,21 +59,17 @@ def run_online_refresh_stream(
         updates = latest_per_key(
             feat, ["entity_id"], ts="feature_timestamp", tie_break=["event_id"]
         )
-        if os.path.exists(snapshot_path):
-            current = batch.sparkSession.read.parquet(snapshot_path)
+        session = batch.sparkSession
+        if fs.exists(session, snapshot_path):
+            current = session.read.parquet(snapshot_path)
             merged = upsert_snapshot(
                 current, updates, ["entity_id"], ts="feature_timestamp"
             )
         else:
             merged = updates
-        # Snapshot is entity-cardinality-bounded: rewrite is cheap and
-        # atomic-enough via temp + swap for the local case; on a cluster,
-        # swap for a Delta MERGE or partition-overwrite.
-        tmp = f"{snapshot_path}.tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = batch.sparkSession.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(snapshot_path)
-        fs.delete(batch.sparkSession, tmp)
+        # Snapshot is entity-cardinality-bounded, so a whole rewrite per
+        # micro-batch is cheap; on a cluster, swap for a Delta MERGE.
+        fs.replace_dir(session, snapshot_path, merged.write)
 
     stream = stream_events(
         spark, source_dir, schema, dedup_keys=["event_id"]

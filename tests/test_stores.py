@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from datetime import date, datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
 from aqi_featurestore_spark.registry import FeatureView, Registry
@@ -148,7 +149,8 @@ def test_registry_views_and_gated_lineage(spark, tmp_path):
     assert reg.feature_metadata().count() == 1
 
 
-def test_online_refresh_stream(spark, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_online_refresh_stream(spark, tmp_path, as_uri):
     src = tmp_path / "stream_src"
     src.mkdir()
     rows1 = [
@@ -159,7 +161,10 @@ def test_online_refresh_stream(spark, tmp_path):
     schema = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
     spark.createDataFrame(rows1, schema).write.mode("append").parquet(str(src))
 
+    # a file:// URI must probe the existing snapshot like a plain path
     snap_path = str(tmp_path / "online_snapshot")
+    if as_uri:
+        snap_path = (tmp_path / "online_snapshot").as_uri()
     ckpt = str(tmp_path / "ckpt")
     run_online_refresh_stream(spark, str(src), spark.createDataFrame([], schema).schema,
                               snap_path, ckpt)

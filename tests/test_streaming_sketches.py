@@ -552,7 +552,7 @@ def test_compaction_preserves_a_concurrent_append(spark, docs, tmp_path):
     inside the merge callback, i.e. mid-compaction) must survive the
     swap and fold in at read time. The old directory rename-swap
     silently deleted it."""
-    from aqi_featurestore_spark.operators.sketches import _swap_in
+    from aqi_featurestore_spark.sources.fs import fold_in
 
     early = docs.where(F.col("doc_id") % 2 == 0)
     late = docs.where(F.col("doc_id") % 2 == 1)
@@ -564,7 +564,7 @@ def test_compaction_preserves_a_concurrent_append(spark, docs, tmp_path):
         write_sketch_partial(_direct_registers(late), store)
         return df.groupBy("source", "idx").agg(F.max("m").alias("m"))
 
-    stats = _swap_in(spark, store, racing_merge)
+    stats = fold_in(spark, store, racing_merge)
     assert stats["files_before"] >= 1
     merged = read_merged_registers(spark, store, ["source"])
     assert _reg_set(merged) == _reg_set(_direct_registers(docs))
