@@ -619,7 +619,7 @@ def vacuum_ann_index(
         base.select(*rows.columns)
     )
     _fs.replace_dir(
-        spark, ipath, kept.repartition("list_id").write.partitionBy("list_id")
+        spark, ipath, kept.repartition("list_id"), partition_by=("list_id",)
     )
     spark.createDataFrame([(int(cutoff),)], "min_as_of long").coalesce(
         1

@@ -61,7 +61,7 @@ def compact_corpus_store(
     total = sum(sz for _p, sz in listing)
     n_files = max(1, -(-total // target_file_bytes))
     fs.replace_dir(
-        spark, corpus_path, spark.read.parquet(corpus_path).repartition(n_files).write
+        spark, corpus_path, spark.read.parquet(corpus_path).repartition(n_files)
     )
     m = SnapshotManifests(spark, corpus_path)
     v = m.record("compact")
@@ -129,7 +129,7 @@ def vacuum_corpus(
     fs.replace_dir(
         spark,
         corpus_path,
-        retained.repartition(max(1, -(-total // (128 << 20)))).write,
+        retained.repartition(max(1, -(-total // (128 << 20)))),
     )
     m = SnapshotManifests(spark, corpus_path)
     v = m.record("vacuum")

@@ -346,7 +346,7 @@ def vacuum_model_registry(
     kept = weights.where(F.col("version") > cutoff).unionByName(
         base.select(*weights.columns)
     )
-    fs.replace_dir(spark, wpath, kept.coalesce(1).write)
+    fs.replace_dir(spark, wpath, kept.coalesce(1))
     _write_retention(spark, path, cutoff)
     after = spark.read.parquet(wpath)
     return {

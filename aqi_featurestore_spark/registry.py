@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from aqi_featurestore_spark import schemas
 from aqi_featurestore_spark.operators.dedup import append_if_absent
+from aqi_featurestore_spark.sources import fs
 
 
 @dataclass(frozen=True)
@@ -130,7 +131,7 @@ class Registry:
 
     def _read_table(self, table: str, schema) -> DataFrame:
         p = self._table_path(table)
-        if os.path.exists(p):
+        if fs.exists(self.spark, p):
             return self.spark.read.schema(schema).parquet(p)
         return self.spark.createDataFrame([], schema)
 

@@ -19,13 +19,27 @@ module renames on the Hadoop FS:
   (sketch stores, the signature index, the impact posting log).
 
 Both check every rename and never delete the only copy of a row.
+
+Every writer of a feature-store directory records the Spark schema of
+what it wrote (:func:`record_schema`, ``_schema.json`` inside the data
+directory; Spark's file index and :func:`list_data_files` skip
+``_``-prefixed names), and every read of it goes through
+:func:`reader` or :func:`read_dir`, which pass that schema to
+``spark.read.schema`` — so no read runs a parquet schema-inference job.
+A directory without the file (written before the record existed, or by
+hand) is read by inference. Reads never change the store: only writers
+call :func:`restore_swap` to finish a swap killed between its renames.
 """
 
 from __future__ import annotations
 
+import json
 import uuid
 
-from pyspark.sql import DataFrameWriter, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
+from pyspark.sql.types import StructType
+
+SCHEMA_FILE = "_schema.json"
 
 
 def _fs_and_path(spark: SparkSession, path: str):
@@ -57,8 +71,8 @@ def delete(spark: SparkSession, path: str) -> None:
 
 def rename(spark: SparkSession, src: str, dst: str) -> bool:
     """File or directory rename; False on failure. Atomic on HDFS/POSIX;
-    on object stores it is a copy+delete. Only :func:`replace_dir` and
-    :func:`fold_in` call it."""
+    on object stores it is a copy+delete. Only :func:`replace_dir`,
+    :func:`restore_swap` and :func:`fold_in` call it."""
     fs, jsrc = _fs_and_path(spark, src)
     jdst = spark._jvm.org.apache.hadoop.fs.Path(dst)
     return bool(fs.rename(jsrc, jdst))
@@ -129,22 +143,81 @@ def write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
         raise IOError(f"write_text_atomic: rename {tmp} -> {path} failed")
 
 
-def replace_dir(spark: SparkSession, path: str, writer: DataFrameWriter) -> None:
-    """Replace the parquet directory ``path`` with what ``writer`` writes.
+def restore_swap(spark: SparkSession, path: str) -> None:
+    """Finish a :func:`replace_dir` killed between its two renames: the
+    store then sits at ``{path}.old`` and ``path`` is missing. Writers
+    call it before they probe ``path``; readers never do, since a
+    reader that ran between a live swap's two renames would move the
+    old store back under the writer's second rename."""
+    old = f"{path}.old"
+    if exists(spark, path) or not exists(spark, old):
+        return
+    if not rename(spark, old, path):
+        raise IOError(f"restore: rename {old} -> {path} failed")
 
-    The rewrite lands in ``{path}.tmp`` (a leftover ``.tmp``/``.old``
-    of a killed run is cleared first), then ``path -> {path}.old`` (only
-    if ``path`` exists) and ``.tmp -> path``, then ``.old`` is deleted.
-    Writing elsewhere first is what lets ``writer``'s plan read ``path``
-    itself (an upsert, a compaction). A failed second rename rolls the
-    old store back and raises ``IOError``, so the store is never left
-    missing. The swap is atomic on HDFS/POSIX; on object stores a rename
-    is copy+delete with a visible window — run rewrites in the
-    maintenance path, not concurrently with appends."""
+
+def record_schema(
+    spark: SparkSession, path: str, df: DataFrame, partition_by=()
+) -> None:
+    """Record in ``{path}/_schema.json`` the schema a read of ``path``
+    returns once ``df`` is written there partitioned by
+    ``partition_by``: the data columns, then the partition columns.
+    Written atomically, so a concurrent reader never sees it torn."""
+    cols = [f for f in df.schema if f.name not in partition_by]
+    cols += [df.schema[c] for c in partition_by]
+    write_text_atomic(spark, f"{path}/{SCHEMA_FILE}", StructType(cols).json())
+
+
+def recorded_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema :func:`record_schema` stored for ``path``, or None."""
+    p = f"{path}/{SCHEMA_FILE}"
+    if not exists(spark, p):
+        return None
+    return StructType.fromJson(json.loads(read_text(spark, p)))
+
+
+def reader(spark: SparkSession, path: str) -> DataFrameReader:
+    """``spark.read`` for the parquet directory ``path``, carrying its
+    recorded schema when there is one: building the read then launches
+    no job. Without a record, Spark infers the schema as usual."""
+    schema = recorded_schema(spark, path)
+    return spark.read if schema is None else spark.read.schema(schema)
+
+
+def read_dir(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet directory ``path`` read with its recorded schema, as
+    :func:`reader` does, or None when it does not exist. Changes nothing
+    on the store."""
+    schema = recorded_schema(spark, path)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    return spark.read.parquet(path) if exists(spark, path) else None
+
+
+def replace_dir(
+    spark: SparkSession, path: str, df: DataFrame, *, partition_by=()
+) -> None:
+    """Replace the parquet directory ``path`` with ``df``, partitioned
+    by the columns ``partition_by``, and record its schema.
+
+    The rewrite and its ``_schema.json`` land in ``{path}.tmp``, then
+    ``path -> {path}.old`` (only if ``path`` exists) and ``.tmp ->
+    path``, then ``.old`` is deleted. A killed run's leftovers are
+    handled first: a store left at ``.old`` with no ``path`` is renamed
+    back, and any remaining ``.tmp``/``.old`` is cleared. Writing
+    elsewhere first is what lets ``df``'s plan read ``path`` itself (an
+    upsert, a compaction). A failed second rename rolls the old store
+    back and raises ``IOError``, so the store is never left missing.
+    The swap is atomic on HDFS/POSIX; on object stores a rename is
+    copy+delete with a visible window — run rewrites in the maintenance
+    path, not concurrently with appends."""
     tmp, old = f"{path}.tmp", f"{path}.old"
+    restore_swap(spark, path)
     delete(spark, tmp)
     delete(spark, old)
+    writer = df.write.partitionBy(*partition_by) if partition_by else df.write
     writer.mode("overwrite").parquet(tmp)
+    record_schema(spark, tmp, df, partition_by)
     had = exists(spark, path)
     if had and not rename(spark, path, old):
         raise IOError(f"replace_dir: rename {path} -> {old} failed")
@@ -171,10 +244,17 @@ def fold_in(
     rename-in and delete the store holds both the transformed rows and
     the originals and reads identically, and a file appended after the
     snapshot is never deleted. A failed rename raises ``IOError`` before
-    any delete, with the snapshot intact (the tmp dir is left behind).
+    any delete, with the snapshot intact (the tmp dir is left behind;
+    the next fold deletes it, as it deletes every ``{path}.swap-*`` dir
+    of an earlier run — the single-writer contract).
 
     Returns ``{"files_before", "files_after"}``."""
     root = path.rstrip("/")
+    parent, _, name = root.rpartition("/")
+    parent = parent or "."
+    for n in child_names(spark, parent):
+        if n.startswith(f"{name}.swap-"):
+            delete(spark, f"{parent}/{n}")
     snapshot = [p for p, _s in list_data_files(spark, root)]
     if not snapshot:
         return {"files_before": 0, "files_after": 0}

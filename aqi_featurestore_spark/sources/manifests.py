@@ -147,10 +147,13 @@ class SnapshotManifests:
 
     def read_as_of(self, as_of: int) -> DataFrame:
         """Scan exactly the files of version ``as_of`` (``basePath``
-        keeps any partition columns) — the bit-identical replay."""
+        keeps any partition columns) — the bit-identical replay — with
+        the directory's recorded schema (``fs.reader``)."""
         files = [p for p, _sz in self.manifest(as_of)["files"]]
         if not files:
             raise ValueError(f"read_as_of({as_of}): version is empty")
         return (
-            self.spark.read.option("basePath", self.data_path).parquet(*files)
+            fs.reader(self.spark, self.data_path)
+            .option("basePath", self.data_path)
+            .parquet(*files)
         )

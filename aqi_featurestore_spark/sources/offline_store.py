@@ -13,6 +13,15 @@ Reference behavior being rebuilt (SURVEY.md §2.1/§2.9):
 - ST6 fix: the reference double-appends on re-run; ``append`` here gates
   with a left-anti join on (entity, feature_timestamp) against only the
   partitions the new batch touches (not the whole store).
+- Schema: the first append records the batch's Spark schema, partition
+  columns included, as ``{path}/_schema.json`` (``fs.record_schema``);
+  ``compact`` re-records it with its rewrite. Every read (current,
+  ``as_of``, the ``where_*`` pruned reads, the per-file stats scan)
+  passes it to ``spark.read.schema`` through ``fs.reader``, so building
+  a read runs no schema-inference job, and a later batch whose columns
+  or types differ is refused before any file is written. A store
+  without the file (written before the record existed) is read by
+  inference.
 
 At cluster scale the same code runs against object-store paths; local
 tests point it at a tmp dir.
@@ -28,6 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aqi_featurestore_spark.sources import fs
+
+_PARTS = ("year", "month", "day")
 
 
 class OfflineStore:
@@ -132,7 +143,7 @@ class OfflineStore:
         elif as_of is not None:
             df = self._read_version(as_of)
         else:
-            df = self.spark.read.parquet(self.path)
+            df = fs.reader(self.spark, self.path).parquet(self.path)
         if since is not None:
             df = df.where(
                 F.make_date("year", "month", "day") >= F.lit(since.isoformat()).cast("date")
@@ -175,7 +186,8 @@ class OfflineStore:
             aggs.append(F.min(c).alias(f"min_{c}"))
             aggs.append(F.max(c).alias(f"max_{c}"))
         rows = (
-            self.spark.read.option("basePath", self.path)
+            fs.reader(self.spark, self.path)
+            .option("basePath", self.path)
             .parquet(*files)
             .groupBy(F.input_file_name().alias("__f"))
             .agg(*aggs)
@@ -279,10 +291,11 @@ class OfflineStore:
                 )
             return df
 
+        read = fs.reader(self.spark, self.path)
         v = as_of if as_of is not None else self.version()
         if v == 0:
             # no manifests (pre-discipline store): no stats, no pruning
-            return _residual(self.spark.read.parquet(self.path))
+            return _residual(read.parquet(self.path))
         kept, _skipped = self.prune_plan(preds, as_of=v)
         if as_of is None:
             # round-10 ADVICE: a CURRENT read must also see data files
@@ -301,17 +314,14 @@ class OfflineStore:
             ]
         if not kept:
             # every file provably empty under the predicate: schema-only
-            return _residual(
-                self.spark.read.parquet(self.path).where(F.lit(False))
-            )
-        df = self.spark.read.option("basePath", self.path).parquet(*kept)
-        return _residual(df)
+            return _residual(read.parquet(self.path).where(F.lit(False)))
+        return _residual(read.option("basePath", self.path).parquet(*kept))
 
     # -- write --------------------------------------------------------------
 
     def _with_partition_cols(self, df: DataFrame) -> DataFrame:
         d = F.to_date(self.ts)
-        missing = {c for c in ("year", "month", "day")} - set(df.columns)
+        missing = set(_PARTS) - set(df.columns)
         cols = {}
         if "year" in missing:
             cols["year"] = F.year(d)
@@ -321,14 +331,40 @@ class OfflineStore:
             cols["day"] = F.dayofmonth(d)
         return df.withColumns(cols) if cols else df
 
+    def _check_schema(self, batch: DataFrame, recorded) -> None:
+        """Refuse a batch whose column names or types (nullability
+        aside) differ from the recorded schema: every read takes that
+        schema as given, so such rows would be misread, not rejected."""
+        want = {f.name: f.dataType.simpleString() for f in recorded}
+        got = {f.name: f.dataType.simpleString() for f in batch.schema}
+        bad = [
+            f"{c} ({got.get(c, 'missing')}, recorded {want.get(c, 'absent')})"
+            for c in sorted(want.keys() | got.keys())
+            if want.get(c) != got.get(c)
+        ]
+        if bad:
+            raise ValueError(
+                f"append to {self.path!r}: columns differ from the schema "
+                f"recorded at its first write: {', '.join(bad)}"
+            )
+
     def append(self, batch: DataFrame, *, dedup: bool = True) -> None:
         """Append feature rows; with ``dedup`` (default) drops rows whose
         (keys, ts) already exist — making re-runs idempotent. The existing
         side is pruned to the date range of the incoming batch, so the
-        anti-join never scans the whole store."""
+        anti-join never scans the whole store.
+
+        The first append into an empty store records the batch's schema
+        (partition columns included); later batches must match it
+        (``ValueError`` before any file is written)."""
         batch = self._with_partition_cols(batch)
+        fs.restore_swap(self.spark, self.path)
+        recorded = fs.recorded_schema(self.spark, self.path)
+        if recorded is not None:
+            self._check_schema(batch, recorded)
+        had = self.exists()
         batch = batch.dropDuplicates([*self.keys, self.ts])
-        if dedup and self.exists():
+        if dedup and had:
             lo, hi = (
                 batch.agg(
                     F.min(F.make_date("year", "month", "day")),
@@ -343,11 +379,9 @@ class OfflineStore:
                 on=[*self.keys, self.ts],
                 how="left_anti",
             )
-        (
-            batch.write.partitionBy("year", "month", "day")
-            .mode("append")
-            .parquet(self.path)
-        )
+        batch.write.partitionBy(*_PARTS).mode("append").parquet(self.path)
+        if recorded is None and not had:
+            fs.record_schema(self.spark, self.path, batch, _PARTS)
         self._record_version("append")
 
     # -- maintenance --------------------------------------------------------
@@ -443,9 +477,10 @@ class OfflineStore:
             # target task count: each (dir, salt) combo lands in its own
             # task (hash repartition would collide combos into shared
             # tasks and silently under-split large partitions)
-            salted.repartitionByRange(total_files, "year", "month", "day", "__salt")
-            .drop("__n_files", "__salt")
-            .write.partitionBy("year", "month", "day"),
+            salted.repartitionByRange(total_files, *_PARTS, "__salt").drop(
+                "__n_files", "__salt"
+            ),
+            partition_by=_PARTS,
         )
         # compaction rewrites every file: prior versions' manifests now
         # reference deleted paths, so the retention floor advances to the

@@ -14,7 +14,11 @@ drives implicitly through its Redis refresh DAG). This facade wires those
 onto the engine's operators: offline history in the Hive-partitioned
 ``OfflineStore``, online state as a latest-per-key snapshot parquet, PIT
 joins for history, broadcast lookups for serving. Everything stays a
-DataFrame until the caller materializes.
+DataFrame until the caller materializes: every store write records the
+schema of what it wrote (``_schema.json`` in the data directory, see
+``sources/fs``), and every read passes it to ``spark.read.schema``, so
+building a lookup, an offline or ``as_of`` read or a historical pull
+runs no Spark job.
 """
 
 from __future__ import annotations
@@ -146,13 +150,16 @@ class FeatureStore:
             _online_columns(view, df), keys, ts=view.timestamp_field
         )
         p = self._online_path(view_name)
-        if fs.exists(self.spark, p):
-            current = _online_columns(view, self.spark.read.parquet(p))
-            merged = upsert_snapshot(current, updates, keys, ts=view.timestamp_field)
-        else:
+        fs.restore_swap(self.spark, p)
+        current = fs.read_dir(self.spark, p)
+        if current is None:
             merged = updates
+        else:
+            merged = upsert_snapshot(
+                _online_columns(view, current), updates, keys, ts=view.timestamp_field
+            )
         # the merged plan reads `p`: replace_dir writes it elsewhere first
-        fs.replace_dir(self.spark, p, merged.write)
+        fs.replace_dir(self.spark, p, merged)
 
     def materialize(self, view_name: str) -> None:
         """Feast ``materialize``: rebuild the online snapshot from offline
@@ -161,8 +168,8 @@ class FeatureStore:
         snap = latest_per_key(
             self.read_offline(view_name), list(view.entities), ts=view.timestamp_field
         )
-        _online_columns(view, snap).write.mode("overwrite").parquet(
-            self._online_path(view_name)
+        fs.replace_dir(
+            self.spark, self._online_path(view_name), _online_columns(view, snap)
         )
 
     def get_online_features(
@@ -175,10 +182,8 @@ class FeatureStore:
         """S15/J2: serve current features for entity keys; unknown keys
         yield NULLs, rows staler than the view TTL are masked."""
         view = self.registry.get_feature_view(view_name)
-        p = self._online_path(view_name)
-        if fs.exists(self.spark, p):
-            snapshot = self.spark.read.parquet(p)
-        else:
+        snapshot = fs.read_dir(self.spark, self._online_path(view_name))
+        if snapshot is None:
             cols = ", ".join(
                 [
                     *[f"`{k}` string" for k in view.entities],

@@ -60,16 +60,17 @@ def run_online_refresh_stream(
             feat, ["entity_id"], ts="feature_timestamp", tie_break=["event_id"]
         )
         session = batch.sparkSession
-        if fs.exists(session, snapshot_path):
-            current = session.read.parquet(snapshot_path)
+        fs.restore_swap(session, snapshot_path)
+        current = fs.read_dir(session, snapshot_path)
+        if current is None:
+            merged = updates
+        else:
             merged = upsert_snapshot(
                 current, updates, ["entity_id"], ts="feature_timestamp"
             )
-        else:
-            merged = updates
         # Snapshot is entity-cardinality-bounded, so a whole rewrite per
         # micro-batch is cheap; on a cluster, swap for a Delta MERGE.
-        fs.replace_dir(session, snapshot_path, merged.write)
+        fs.replace_dir(session, snapshot_path, merged)
 
     stream = stream_events(
         spark, source_dir, schema, dedup_keys=["event_id"]

@@ -5,10 +5,12 @@ no module but `sources/fs` renames on the Hadoop FS."""
 from __future__ import annotations
 
 import ast
-from datetime import datetime
+import os
+from datetime import datetime, timedelta
 from pathlib import Path
 
 import pytest
+from pyspark.sql import functions as F
 
 from aqi_featurestore_spark.sources import fs
 
@@ -73,7 +75,7 @@ def test_failed_swap_rename_keeps_the_store(spark, tmp_path, monkeypatch, target
             return spark.read.parquet(path)
 
         def rewrite():
-            fs.replace_dir(spark, path, new.write)
+            fs.replace_dir(spark, path, new)
 
         after_rewrite = [("c", 3)]
     before = _rows(read())
@@ -115,6 +117,67 @@ def test_failed_fold_in_rename_keeps_the_sketch_store(spark, tmp_path, monkeypat
     stats = compact_sketch_store(spark, path, ["source"])
     assert stats["files_after"] == 1
     assert _rows(read_merged_registers(spark, path, ["source"])) == before
+    # the failed run's swap dir is cleared by the next fold
+    assert [n for n in os.listdir(tmp_path) if n.startswith("hll.swap-")] == []
+
+
+def test_swap_killed_between_renames_keeps_the_snapshot(spark, tmp_path):
+    """A run killed after ``path -> .old`` and before ``.tmp -> path``
+    leaves the store at ``.old``: the next upsert restores it and merges
+    into it, and the half-written ``.tmp`` is discarded."""
+    from aqi_featurestore_spark.registry import FeatureView
+    from aqi_featurestore_spark.store import FeatureStore
+
+    store = FeatureStore(spark, str(tmp_path / "fs"))
+    store.apply(
+        FeatureView("v", ("entity_id",), timedelta(days=7), (("aqi", "double"),), "v")
+    )
+    schema = "entity_id string, feature_timestamp timestamp, aqi double"
+    at = datetime(2024, 2, 1, 10)
+    store.write_to_online_store(
+        "v", spark.createDataFrame([("a", at, 1.0), ("b", at, 2.0)], schema)
+    )
+    p = store._online_path("v")
+    os.rename(p, f"{p}.old")
+    _plant(spark, p, "tmp")
+
+    store.write_to_online_store("v", spark.createDataFrame([("c", at, 3.0)], schema))
+    keys = spark.createDataFrame([("a",), ("b",), ("c",)], "entity_id string")
+    served = store.get_online_features("v", keys, as_of=F.lit(at)).collect()
+    assert {r.entity_id: r.aqi for r in served} == {"a": 1.0, "b": 2.0, "c": 3.0}
+    assert not fs.exists(spark, f"{p}.tmp")
+    assert not fs.exists(spark, f"{p}.old")
+
+
+def test_read_during_a_swap_renames_nothing(spark, tmp_path, monkeypatch):
+    """A read that runs after a live swap's ``path -> .old`` and before
+    its ``.tmp -> path`` leaves both dirs where they are: moving
+    ``.old`` back would put ``path`` in the way of the writer's second
+    rename."""
+    from aqi_featurestore_spark.registry import FeatureView
+    from aqi_featurestore_spark.store import FeatureStore
+
+    store = FeatureStore(spark, str(tmp_path / "fs"))
+    store.apply(
+        FeatureView("v", ("entity_id",), timedelta(days=7), (("aqi", "double"),), "v")
+    )
+    schema = "entity_id string, feature_timestamp timestamp, aqi double"
+    at = datetime(2024, 2, 1, 10)
+    store.write_to_online_store(
+        "v", spark.createDataFrame([("a", at, 1.0)], schema)
+    )
+    p = store._online_path("v")
+    os.rename(p, f"{p}.old")
+    _plant(spark, p, "tmp")
+
+    calls = _fail_rename(monkeypatch, 99)
+    keys = spark.createDataFrame([("a",)], "entity_id string")
+    served = store.get_online_features("v", keys, as_of=F.lit(at)).collect()
+    assert [(r.entity_id, r.aqi) for r in served] == [("a", None)]
+    assert fs.read_dir(spark, p) is None
+    assert calls == []
+    assert not fs.exists(spark, p)
+    assert fs.exists(spark, f"{p}.old") and fs.exists(spark, f"{p}.tmp")
 
 
 def _hadoop_fs_renames(tree: ast.AST) -> list[int]:

@@ -149,6 +149,18 @@ def test_registry_views_and_gated_lineage(spark, tmp_path):
     assert reg.feature_metadata().count() == 1
 
 
+def test_lineage_gate_on_a_file_uri_root(spark, tmp_path):
+    # a file:// root must find the lineage already on disk, as a plain
+    # path does in test_registry_views_and_gated_lineage
+    reg = Registry(spark, (tmp_path / "registry").as_uri())
+    assert reg.record_lineage("pm2_5", "v1", "openweather", "pipeline.py", "2024-01-01") == 1
+    assert reg.record_lineage("pm2_5", "v1", "other", "x.py", "2024-02-02") == 0
+    assert reg.record_lineage("pm2_5", "v2", "openweather", "pipeline.py", "2024-01-02") == 1
+    assert reg.lineage().count() == 2
+    assert reg.record_feature_metadata("aqi", "v1", "piecewise(pm2_5)", "EPA AQI", "2024") == 1
+    assert reg.record_feature_metadata("aqi", "v1", "again", "dup", "2025") == 0
+
+
 @pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
 def test_online_refresh_stream(spark, tmp_path, as_uri):
     src = tmp_path / "stream_src"
