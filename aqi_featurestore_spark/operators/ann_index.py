@@ -46,6 +46,13 @@ overwrite semantics the feature store serves entities with
 feature_repo/materialize.py-equivalent, has no ANN; this extends that
 serving pattern to vectors).
 
+Retention (:func:`vacuum_ann_index`): the model registry's protocol.
+The keep-window vacuum is ``operators/snapshot.vacuum_versions``, and
+the time-travel floor is the atomic ``{path}/floor.json`` marker
+``SnapshotManifests`` keeps (``sources/manifests.read_floor`` /
+``write_floor``), written BEFORE the compacted index swaps in; an
+``as_of`` pin below it raises.
+
 100 TB shape: build is one corpus pass (codes never shuffle — the
 write partitions by the already-computed ``list_id``); the served
 index is ~(8B id + 4B cell + S code bytes) per row — 3 orders smaller
@@ -73,6 +80,8 @@ from aqi_featurestore_spark.operators.similarity import (
     fit_coarse,
     pq_fit_books,
 )
+from aqi_featurestore_spark.operators.snapshot import latest_as_of, vacuum_versions
+from aqi_featurestore_spark.sources.manifests import check_floor, read_floor
 
 
 @dataclass
@@ -365,11 +374,7 @@ def current_index(index: DataFrame, *, as_of: int | None = None) -> DataFrame:
     so a serving incident replays against the exact snapshot a query
     saw. NOTE: pure-DataFrame op; the vacuum floor guard lives in
     :func:`read_ann_index`, which knows the index path."""
-    from aqi_featurestore_spark.operators.snapshot import latest_per_key
-
-    if as_of is not None:
-        index = index.where(F.col("version") <= int(as_of))
-    return latest_per_key(index, ["n_id"], ts="version")
+    return latest_as_of(index, ["n_id"], as_of=as_of)
 
 
 def encode_with_model(
@@ -490,14 +495,10 @@ def write_ann_index(
 
 def index_retention_floor(spark: SparkSession, path: str) -> int | None:
     """The vacuum watermark: the lowest version ``read_ann_index(...,
-    as_of=...)`` can still resolve exactly. ``None`` when the index has
-    never been vacuumed."""
-    from aqi_featurestore_spark.sources import fs as _fs
-
-    if not _fs.exists(spark, f"{path}/retention"):
-        return None
-    rows = spark.read.parquet(f"{path}/retention").collect()
-    return max(int(r["min_as_of"]) for r in rows) if rows else None
+    as_of=...)`` can still resolve exactly, kept in ``{path}/floor.json``
+    (``sources/manifests.read_floor``; no Spark job). ``None`` when the
+    index has never been vacuumed."""
+    return read_floor(spark, path) or None
 
 
 def read_ann_index(
@@ -515,13 +516,7 @@ def read_ann_index(
     serving incident replays against the exact snapshot a query saw);
     a pin below the vacuum retention floor RAISES — that history was
     compacted and resolving it would silently return the base snapshot."""
-    if as_of is not None:
-        floor = index_retention_floor(spark, path)
-        if floor is not None and int(as_of) < floor:
-            raise ValueError(
-                f"read_ann_index: as_of={as_of} is below the retention floor "
-                f"{floor} at {path!r} — vacuumed history cannot be replayed"
-            )
+    check_floor(spark, path, as_of, "read_ann_index")
     index = spark.read.parquet(f"{path}/index")
     if as_of is not None:
         index = index.where(F.col("version") <= int(as_of))
@@ -569,14 +564,19 @@ def vacuum_ann_index(
       floor collapse to the latest-per-``n_id`` base snapshot AS OF the
       floor — so ``current_index`` and every in-window pin resolve
       unchanged while superseded rows disappear;
-    - the time-travel floor lands in a ``retention`` marker table;
-      ``as_of`` pins below it RAISE instead of silently resolving wrong;
+    - the time-travel floor lands in the atomic ``{path}/floor.json``
+      marker (``sources/manifests.write_floor``) BEFORE the compacted
+      index swaps in; ``as_of`` pins below it RAISE instead of silently
+      resolving wrong;
     - ``protect`` lists versions an external audit still pins — a
       vacuum whose floor would drop one refuses;
     - the rewrite re-partitions by ``list_id`` (one task per list → one
       file per list partition), merging the one-file-per-refresh
       fragments; it swaps in through ``fs.replace_dir`` (atomic on
       HDFS/POSIX; on object stores run in the maintenance window).
+
+    The body is ``operators/snapshot.vacuum_versions``, the one
+    keep-window vacuum the model registry runs too.
 
     100 TB shape: ONE shuffle keyed by ``n_id`` for the base-snapshot
     resolution over the below-floor slice, then a write partitioned by
@@ -587,47 +587,13 @@ def vacuum_ann_index(
 
     Returns ``{"files_before", "files_after", "rows_before",
     "rows_after", "min_as_of"}``."""
-    from aqi_featurestore_spark.operators.snapshot import latest_per_key
-    from aqi_featurestore_spark.sources import fs as _fs
-
-    if keep_versions < 1:
-        raise ValueError("vacuum_ann_index: keep_versions must be >= 1")
-    ipath = f"{path}/index"
-    rows = spark.read.parquet(ipath)
-    versions = sorted(
-        int(r["version"]) for r in rows.select("version").distinct().collect()
+    return vacuum_versions(
+        spark,
+        f"{path}/index",
+        path,
+        keys=["n_id"],
+        keep_versions=keep_versions,
+        protect=protect,
+        partition_by=("list_id",),
+        caller="vacuum_ann_index",
     )
-    files_before = len(_fs.list_data_files(spark, ipath))
-    rows_before = rows.count()
-    old_floor = index_retention_floor(spark, path) or (
-        versions[0] if versions else 0
-    )
-    cutoff = (
-        versions[-keep_versions] if len(versions) > keep_versions else versions[0]
-    )
-    cutoff = max(cutoff, old_floor)
-    bad = [v for v in protect if v < cutoff]
-    if bad:
-        raise ValueError(
-            f"vacuum_ann_index: protected versions {bad} fall below the keep "
-            f"window floor {cutoff} — raise keep_versions or drop the pin"
-        )
-    base = latest_per_key(
-        rows.where(F.col("version") <= cutoff), ["n_id"], ts="version"
-    )
-    kept = rows.where(F.col("version") > cutoff).unionByName(
-        base.select(*rows.columns)
-    )
-    _fs.replace_dir(
-        spark, ipath, kept.repartition("list_id"), partition_by=("list_id",)
-    )
-    spark.createDataFrame([(int(cutoff),)], "min_as_of long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(f"{path}/retention")
-    return {
-        "files_before": files_before,
-        "files_after": len(_fs.list_data_files(spark, ipath)),
-        "rows_before": rows_before,
-        "rows_after": spark.read.parquet(ipath).count(),
-        "min_as_of": cutoff,
-    }

@@ -39,10 +39,14 @@ Round-8 hardening (round-7 ADVICE + verdict asks #1/#2/#7):
 - **Retention** (:func:`vacuum_model_registry`): the append-log grows
   one superseded row-set per refresh forever; vacuum compacts history
   below a keep window into a base snapshot (latest-per-term as of the
-  cutoff) and records the time-travel floor in a ``retention`` marker
-  table. ``current_model`` / any ``version >= floor`` read is
-  bit-identical before and after (pytest-pinned); a ``version <
-  floor`` read raises instead of silently resolving wrong.
+  cutoff). It is the one keep-window vacuum the ANN index runs too
+  (``operators/snapshot.vacuum_versions``), and the time-travel floor
+  is the atomic ``{path}/floor.json`` marker ``SnapshotManifests``
+  keeps (``sources/manifests.read_floor``/``write_floor``), written
+  BEFORE the compacted table swaps in. ``current_model`` / any
+  ``version >= floor`` read is bit-identical before and after
+  (pytest-pinned); a ``version < floor`` read raises instead of
+  silently resolving wrong.
 
 Reference parity: the reference trains offline in an sklearn notebook
 (reference ml/train.py) and has no model registry; this extends the
@@ -65,6 +69,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from aqi_featurestore_spark.operators.snapshot import latest_as_of, vacuum_versions
+from aqi_featurestore_spark.sources.manifests import check_floor, read_floor
 
 #: meta-table schema (one row per published version)
 _META_SCHEMA = (
@@ -99,10 +106,6 @@ def _meta_path(path: str) -> str:
     return f"{path}/meta"
 
 
-def _retention_path(path: str) -> str:
-    return f"{path}/retention"
-
-
 def _read_weights(spark: SparkSession, path: str) -> DataFrame:
     """Weights rows ``(term_id, w_micro, version, dim)``."""
     return spark.read.parquet(_weights_path(path))
@@ -110,20 +113,10 @@ def _read_weights(spark: SparkSession, path: str) -> DataFrame:
 
 def retention_floor(spark: SparkSession, path: str) -> int | None:
     """The vacuum watermark: the lowest version ``read_model`` /
-    ``current_model(as_of=...)`` can still resolve exactly. ``None``
-    when the registry has never been vacuumed."""
-    from aqi_featurestore_spark.sources import fs
-
-    if not fs.exists(spark, _retention_path(path)):
-        return None
-    rows = spark.read.parquet(_retention_path(path)).collect()
-    return max(int(r["min_as_of"]) for r in rows) if rows else None
-
-
-def _write_retention(spark: SparkSession, path: str, min_as_of: int) -> None:
-    spark.createDataFrame(
-        [(int(min_as_of),)], "min_as_of long"
-    ).coalesce(1).write.mode("overwrite").parquet(_retention_path(path))
+    ``current_model(as_of=...)`` can still resolve exactly, kept in
+    ``{path}/floor.json`` (``sources/manifests.read_floor``; no Spark
+    job). ``None`` when the registry has never been vacuumed."""
+    return read_floor(spark, path) or None
 
 
 def write_model(
@@ -146,13 +139,8 @@ def write_model(
     self-contained). ``meta`` (optional) lands one provenance row in
     the ``meta`` table."""
     spark = model_df.sparkSession
-    floor = retention_floor(spark, path)
-    if floor is not None and int(version) < floor:
-        raise ValueError(
-            f"write_model: version {version} is below the registry's "
-            f"retention floor {floor} at {path!r} — history there was "
-            "vacuumed; appending under it would resolve nondeterministically"
-        )
+    # appending under the floor would resolve nondeterministically
+    check_floor(spark, path, version, "write_model")
     model_df.select(
         F.col("term_id").cast("int").alias("term_id"),
         F.col("w_micro").cast("long").alias("w_micro"),
@@ -185,11 +173,7 @@ def current_model(models: DataFrame, *, as_of: int | None = None) -> DataFrame:
     ``version <= as_of`` — the versioned-PIT discipline (J1) applied to
     models. NOTE: pure-DataFrame op; the vacuum floor guard lives in
     :func:`read_model`, which knows the registry path."""
-    from aqi_featurestore_spark.operators.snapshot import latest_per_key
-
-    if as_of is not None:
-        models = models.where(F.col("version") <= int(as_of))
-    return latest_per_key(models, ["term_id"], ts="version")
+    return latest_as_of(models, ["term_id"], as_of=as_of)
 
 
 def read_model(
@@ -209,13 +193,7 @@ def read_model(
       v2 would otherwise mix v2 weights, v2's bias as a mid weight,
       and stale v1 tail weights);
     - the resolved term set must be exactly 0..dim."""
-    floor = retention_floor(spark, path)
-    if version is not None and floor is not None and int(version) < floor:
-        raise ValueError(
-            f"read_model: version={version} is below the retention floor "
-            f"{floor} at {path!r} — vacuumed history cannot be replayed "
-            "(re-publish or raise keep_versions before vacuuming)"
-        )
+    check_floor(spark, path, version, "read_model")
     df = _read_weights(spark, path)
     rows = current_model(df, as_of=version).collect()
     if not rows:
@@ -307,7 +285,7 @@ def vacuum_model_registry(
     the latest-per-term base snapshot AS OF the floor, so ``current``
     and every in-window pin resolve unchanged while superseded rows and
     their one-file-per-append parquet fragments disappear. Reads below
-    the floor raise (the ``retention`` marker records it).
+    the floor raise (``{path}/floor.json`` records it, before the swap).
 
     Refuses when unsafe: ``protect`` lists versions an external audit
     still pins — a vacuum whose floor would drop one raises instead of
@@ -316,43 +294,12 @@ def vacuum_model_registry(
     Returns ``{"files_before", "files_after", "rows_before",
     "rows_after", "min_as_of"}``. Driver-side rewrite of a model-sized
     table (dim+1 rows x versions) — never corpus-sized."""
-    from aqi_featurestore_spark.operators.snapshot import latest_per_key
-    from aqi_featurestore_spark.sources import fs
-
-    if keep_versions < 1:
-        raise ValueError("vacuum_model_registry: keep_versions must be >= 1")
-    wpath = _weights_path(path)
-    weights = spark.read.parquet(wpath)
-    versions = sorted(
-        int(r["version"]) for r in weights.select("version").distinct().collect()
+    return vacuum_versions(
+        spark,
+        _weights_path(path),
+        path,
+        keys=["term_id"],
+        keep_versions=keep_versions,
+        protect=protect,
+        caller="vacuum_model_registry",
     )
-    files_before = len(fs.list_data_files(spark, wpath))
-    rows_before = weights.count()
-    old_floor = retention_floor(spark, path) or (versions[0] if versions else 0)
-    cutoff = (
-        versions[-keep_versions] if len(versions) > keep_versions else versions[0]
-    )
-    cutoff = max(cutoff, old_floor)
-    bad = [v for v in protect if v < cutoff]
-    if bad:
-        raise ValueError(
-            f"vacuum_model_registry: protected versions {bad} fall below "
-            f"the keep window floor {cutoff} — raise keep_versions "
-            f"(>= {len([v for v in versions if v >= min(bad)])}) or drop the pin"
-        )
-    base = latest_per_key(
-        weights.where(F.col("version") <= cutoff), ["term_id"], ts="version"
-    )
-    kept = weights.where(F.col("version") > cutoff).unionByName(
-        base.select(*weights.columns)
-    )
-    fs.replace_dir(spark, wpath, kept.coalesce(1))
-    _write_retention(spark, path, cutoff)
-    after = spark.read.parquet(wpath)
-    return {
-        "files_before": files_before,
-        "files_after": len(fs.list_data_files(spark, wpath)),
-        "rows_before": rows_before,
-        "rows_after": after.count(),
-        "min_as_of": cutoff,
-    }

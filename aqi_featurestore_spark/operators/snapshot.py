@@ -14,13 +14,17 @@ table, and lookups broadcast it.
 ``latest_per_key`` uses ``max_by`` (hash agg, map-side partial combine)
 rather than window+row_number — no full sort of the 100 TB history, and
 AQE splits skewed entities.
+
+The two version-column append logs (the model registry, the ANN index)
+resolve through the same operator: ``latest_as_of`` is their as-of
+view, and ``vacuum_versions`` their one keep-window vacuum.
 """
 
 from __future__ import annotations
 
 from datetime import timedelta
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -49,6 +53,84 @@ def latest_per_key(
         .agg(F.max_by(payload, _ordering(ts, tie_break)).alias("__latest"))
         .select(*keys, *[F.col(f"__latest.{c}").alias(c) for c in payload_cols])
     )
+
+
+def latest_as_of(
+    df: DataFrame, keys: list[str], *, as_of: int | None = None
+) -> DataFrame:
+    """The as-of resolver of a version-column append log (the model
+    registry's weights, the ANN index rows): the highest ``version`` row
+    per key among the rows with ``version <= as_of`` (all rows when
+    ``as_of`` is None). Pure DataFrame op; the retention-floor guard
+    lives with the store's reader, which knows the store path."""
+    if as_of is not None:
+        df = df.where(F.col("version") <= int(as_of))
+    return latest_per_key(df, keys, ts="version")
+
+
+def vacuum_versions(
+    spark: SparkSession,
+    data_path: str,
+    meta: str,
+    *,
+    keys: list[str],
+    keep_versions: int,
+    protect: tuple[int, ...] = (),
+    partition_by: tuple[str, ...] = (),
+    caller: str,
+) -> dict:
+    """Keep-window vacuum of the version-column append log at
+    ``data_path`` whose retention floor is ``{meta}/floor.json``
+    (``sources/manifests.read_floor``). ``caller`` prefixes the errors.
+
+    Keep contract: the ``keep_versions`` highest versions stay
+    replayable EXACTLY (``latest_as_of(..., as_of=v)`` for v >= the new
+    floor is bit-identical before/after); rows at or below the floor
+    collapse to the latest-per-key base snapshot AS OF the floor, so the
+    current view and every in-window pin resolve unchanged while
+    superseded rows and one-file-per-append fragments disappear. The
+    floor never moves down. ``protect`` lists versions an external audit
+    still pins; a vacuum whose floor would drop one raises instead.
+
+    The advanced floor is written BEFORE the ``fs.replace_dir`` swap: a
+    run killed between the two leaves the full history under a floor
+    that already refuses below-floor pins, never compacted rows under
+    the old floor (where such a pin would resolve against the base
+    snapshot). A table with ``partition_by`` columns is rewritten one
+    task per partition value; without, into one file.
+
+    Returns ``{"files_before", "files_after", "rows_before",
+    "rows_after", "min_as_of"}``."""
+    from aqi_featurestore_spark.sources import fs
+    from aqi_featurestore_spark.sources.manifests import read_floor, write_floor
+
+    if keep_versions < 1:
+        raise ValueError(f"{caller}: keep_versions must be >= 1")
+    rows = spark.read.parquet(data_path)
+    versions = sorted(r.version for r in rows.select("version").distinct().collect())
+    files_before = len(fs.list_data_files(spark, data_path))
+    rows_before = rows.count()
+    # the keep window's lowest version, never below the recorded floor
+    cutoff = max(versions[-min(keep_versions, len(versions))], read_floor(spark, meta))
+    bad = [v for v in protect if v < cutoff]
+    if bad:
+        raise ValueError(
+            f"{caller}: protected versions {bad} fall below the keep window "
+            f"floor {cutoff} — raise keep_versions "
+            f"(>= {len([v for v in versions if v >= min(bad)])}) or drop the pin"
+        )
+    base = latest_as_of(rows, keys, as_of=cutoff).select(*rows.columns)
+    kept = rows.where(F.col("version") > cutoff).unionByName(base)
+    out = kept.repartition(*partition_by) if partition_by else kept.coalesce(1)
+    write_floor(spark, meta, cutoff)
+    fs.replace_dir(spark, data_path, out, partition_by=partition_by)
+    return {
+        "files_before": files_before,
+        "files_after": len(fs.list_data_files(spark, data_path)),
+        "rows_before": rows_before,
+        "rows_after": spark.read.parquet(data_path).count(),
+        "min_as_of": cutoff,
+    }
 
 
 def upsert_snapshot(

@@ -55,25 +55,23 @@ class Registry:
         import json
 
         p = self._views_path()
-        if not os.path.exists(p):
+        if not fs.exists(self.spark, p):
             return
-        with open(p) as f:
-            for v in json.load(f):
-                view = FeatureView(
-                    name=v["name"],
-                    entities=tuple(v["entities"]),
-                    ttl=timedelta(seconds=v["ttl_seconds"]),
-                    features=tuple((n, t) for n, t in v["features"]),
-                    source=v["source"],
-                    timestamp_field=v["timestamp_field"],
-                    tags=tuple((k, t) for k, t in v["tags"]),
-                )
-                self._views[view.name] = view
+        for v in json.loads(fs.read_text(self.spark, p)):
+            view = FeatureView(
+                name=v["name"],
+                entities=tuple(v["entities"]),
+                ttl=timedelta(seconds=v["ttl_seconds"]),
+                features=tuple((n, t) for n, t in v["features"]),
+                source=v["source"],
+                timestamp_field=v["timestamp_field"],
+                tags=tuple((k, t) for k, t in v["tags"]),
+            )
+            self._views[view.name] = view
 
     def _save_views(self) -> None:
         import json
 
-        os.makedirs(self.path, exist_ok=True)
         payload = [
             {
                 "name": v.name,
@@ -86,10 +84,10 @@ class Registry:
             }
             for v in self._views.values()
         ]
-        tmp = f"{self._views_path()}.tmp"
-        with open(tmp, "w") as f:
-            json.dump(payload, f, indent=1)
-        os.replace(tmp, self._views_path())  # atomic, crash-safe
+        # tmp + rename through the Hadoop FS: crash-safe on every scheme
+        fs.write_text_atomic(
+            self.spark, self._views_path(), json.dumps(payload, indent=1)
+        )
 
     def apply(self, view: FeatureView) -> None:
         """Register (or re-register) a view; persisted immediately so a new

@@ -18,6 +18,11 @@ Contract (proved for the feature store in round 9, reused verbatim):
   rename), so a crash mid-write never leaves torn JSON that poisons
   every later read — the round-9 ADVICE fix.
 
+The floor marker is the one retention floor of every versioned store:
+:func:`read_floor` / :func:`write_floor` keep it for these manifests
+and for the model registry and the ANN index (their vacuums,
+``operators/snapshot.vacuum_versions``), keyed by a meta directory.
+
 Single-writer contract: ``record()`` assigns ``version() + 1`` from a
 listing, which is NOT safe under concurrent writers — two simultaneous
 appends could claim the same version and one manifest would shadow the
@@ -40,6 +45,60 @@ import json
 from pyspark.sql import DataFrame, SparkSession
 
 from aqi_featurestore_spark.sources import fs
+
+
+def read_floor(spark: SparkSession, meta: str) -> int:
+    """The retention floor recorded in ``{meta}/floor.json``: the lowest
+    version a versioned store can still replay; 0 when none is recorded.
+
+    A missing marker normally means "no compact/retire/vacuum ever ran".
+    On stores whose overwrites cannot rename-over-existing (see
+    ``fs.write_text_atomic``'s fallback) a floor REWRITE has a brief
+    missing-destination window; defaulting to 0 inside it would
+    transiently admit an as-of pin below the real floor (round-10
+    ADVICE). The retry triggers only when a ``floor.json.tmp-*`` sibling
+    is visible — evidence of a rewrite in flight — so the common
+    never-compacted store pays one directory listing, no sleep. No
+    Spark job runs."""
+    import time
+
+    marker = f"{meta}/floor.json"
+    for _ in range(5):
+        if fs.exists(spark, marker):
+            return int(json.loads(fs.read_text(spark, marker))["floor"])
+        if not any(
+            n.startswith("floor.json.tmp-") for n in fs.child_names(spark, meta)
+        ):
+            return 0
+        time.sleep(0.05)
+    return 0
+
+
+def write_floor(spark: SparkSession, meta: str, version: int) -> None:
+    """Record ``version`` as the retention floor in ``{meta}/floor.json``
+    (tmp + rename: a reader or a crash never sees it torn)."""
+    fs.write_text_atomic(
+        spark, f"{meta}/floor.json", json.dumps({"floor": int(version)})
+    )
+
+
+def check_floor(
+    spark: SparkSession, meta: str, version: int | None, caller: str
+) -> None:
+    """Raise when a pin at ``version`` falls below the floor of
+    ``{meta}/floor.json``: that history was compacted or dropped, and
+    resolving it would silently return a wrong snapshot. ``None`` (the
+    current view) is never below it."""
+    if version is None:
+        return
+    floor = read_floor(spark, meta)
+    if int(version) < floor:
+        raise ValueError(
+            f"{caller}: version {version} is below the retention floor "
+            f"{floor} at {meta!r} — a compact/retire/vacuum rewrote or "
+            f"dropped that history; keep a longer maintenance window "
+            f"(keep_versions) or archive the derived dataset"
+        )
 
 
 class SnapshotManifests:
@@ -69,30 +128,8 @@ class SnapshotManifests:
         return max(vs, default=0)
 
     def retention_floor(self) -> int:
-        """Lowest replayable version; as-of pins below it raise.
-
-        A missing marker normally means "no compact/retire ever ran" —
-        floor 0. On stores whose overwrites cannot rename-over-existing
-        (see ``fs.write_text_atomic``'s fallback) a floor REWRITE has a
-        brief missing-destination window; defaulting to 0 inside it
-        would transiently admit an as-of pin below the real floor
-        (round-10 ADVICE). The retry triggers only when a
-        ``floor.json.tmp-*`` sibling is visible — evidence of a rewrite
-        in flight — so the common never-compacted store pays one
-        directory listing, no sleep."""
-        import time
-
-        marker = f"{self.meta}/floor.json"
-        for _ in range(5):
-            if fs.exists(self.spark, marker):
-                return int(json.loads(fs.read_text(self.spark, marker))["floor"])
-            if not any(
-                n.startswith("floor.json.tmp-")
-                for n in fs.child_names(self.spark, self.meta)
-            ):
-                return 0
-            time.sleep(0.05)
-        return 0
+        """Lowest replayable version; as-of pins below it raise."""
+        return read_floor(self.spark, self.meta)
 
     def record(
         self,
@@ -121,22 +158,11 @@ class SnapshotManifests:
         return v
 
     def set_floor(self, version: int) -> None:
-        fs.write_text_atomic(
-            self.spark,
-            f"{self.meta}/floor.json",
-            json.dumps({"floor": version}),
-        )
+        write_floor(self.spark, self.meta, version)
 
     def manifest(self, as_of: int) -> dict:
         """Load one version's manifest, with the E199 raise paths."""
-        floor = self.retention_floor()
-        if as_of < floor:
-            raise ValueError(
-                f"as_of={as_of}: below the retention floor {floor} — a "
-                f"compact/retire/vacuum rewrote or dropped this version's "
-                f"files; keep a longer maintenance window or archive the "
-                f"derived dataset (the vacuum_ann_index keep contract)"
-            )
+        check_floor(self.spark, self.meta, as_of, "as_of read")
         mpath = self._manifest_path(as_of)
         if not fs.exists(self.spark, mpath):
             raise ValueError(

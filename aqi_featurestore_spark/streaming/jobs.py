@@ -3,14 +3,25 @@ windowed aggregates."""
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aqi_featurestore_spark.operators.snapshot import latest_per_key, upsert_snapshot
 from aqi_featurestore_spark.pipeline import derive_features
 from aqi_featurestore_spark.sources import fs
+
+
+def _drain(stream: DataFrame, fn, checkpoint_dir: str) -> None:
+    """Run ``fn(batch, epoch_id)`` (``foreachBatch``) over everything
+    ``stream`` has now, checkpointed at ``checkpoint_dir``
+    (Trigger.AvailableNow), and return when it is done."""
+    (
+        stream.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def stream_events(
@@ -75,13 +86,7 @@ def run_online_refresh_stream(
     stream = stream_events(
         spark, source_dir, schema, dedup_keys=["event_id"]
     )
-    q = (
-        stream.writeStream.foreachBatch(upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream, upsert, checkpoint_dir)
 
 
 def aqi_alerts(
@@ -268,15 +273,8 @@ def run_dedup_ingest_stream(
         novel.write.mode("append").parquet(corpus_path)
         SnapshotManifests(ss, corpus_path).record("admit")
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(gate)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(source_dir)
+    _drain(stream, gate, checkpoint_dir)
 
 
 def run_sessionization_stream(
@@ -538,15 +536,8 @@ def run_ann_lookup_stream(
             .parquet(out_path)
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(serve)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(source_dir)
+    _drain(stream, serve, checkpoint_dir)
 
 
 def run_index_refresh_stream(
@@ -600,7 +591,6 @@ def run_index_refresh_stream(
     drift is a measured-recall decision (ann_recall_methods) and a new
     index path, not a silent in-place swap."""
     import json
-    import os
 
     from aqi_featurestore_spark.operators.ann_index import (
         encode_with_model,
@@ -611,18 +601,15 @@ def run_index_refresh_stream(
     index, model = read_ann_index(spark, index_path)
     if base_version is None:
         marker = f"{checkpoint_dir.rstrip('/')}.base_version.json"
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                base_version = int(json.load(fh)["base_version"])
+        if fs.exists(spark, marker):
+            base_version = int(json.loads(fs.read_text(spark, marker))["base_version"])
         else:
             base_version = int(
                 index.agg(F.max("version").alias("v")).first()["v"] or 0
             )
-            os.makedirs(os.path.dirname(marker) or ".", exist_ok=True)
-            tmp = f"{marker}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"base_version": base_version}, fh)
-            os.replace(tmp, marker)
+            fs.write_text_atomic(
+                spark, marker, json.dumps({"base_version": base_version})
+            )
 
     def refresh(batch: DataFrame, epoch_id: int) -> None:
         if batch.isEmpty():
@@ -635,15 +622,8 @@ def run_index_refresh_stream(
         )
         write_ann_index(rows, model, index_path, mode="refresh")
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(source_dir)
+    _drain(stream, refresh, checkpoint_dir)
 
 
 def run_quality_filter_stream(
@@ -756,15 +736,8 @@ def run_quality_filter_stream_registry(
             .parquet(sink_dir)
         )
 
-    q = (
-        spark.readStream.schema(schema)
-        .parquet(source_dir)
-        .writeStream.foreachBatch(score)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(source_dir)
+    _drain(stream, score, checkpoint_dir)
 
 
 def run_sketch_refresh_stream(
@@ -837,16 +810,12 @@ def run_sketch_refresh_stream(
             return
         write_sketch_partial(build(toks, [group_col], "token"), store_path)
 
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    _drain(stream, refresh, checkpoint_dir)
 
 
 def run_impact_index_stream(
@@ -896,16 +865,12 @@ def run_impact_index_stream(
             batch, store_path, int(epoch_id), id_col=id_col, text_col=text_col
         )
 
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    _drain(stream, refresh, checkpoint_dir)
     if refresh_after:
         refresh_impact_weights(spark, store_path)
 
@@ -942,13 +907,9 @@ def run_zone_stats_stream(
             zone_minmax(batch, zone_cols, stat_cols), store_path
         )
 
-    q = (
+    stream = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination()
+    _drain(stream, refresh, checkpoint_dir)

@@ -149,10 +149,26 @@ def test_registry_views_and_gated_lineage(spark, tmp_path):
     assert reg.feature_metadata().count() == 1
 
 
-def test_lineage_gate_on_a_file_uri_root(spark, tmp_path):
-    # a file:// root must find the lineage already on disk, as a plain
-    # path does in test_registry_views_and_gated_lineage
-    reg = Registry(spark, (tmp_path / "registry").as_uri())
+def test_lineage_gate_on_a_file_uri_root(spark, tmp_path, monkeypatch):
+    # a file:// root must find the views and the lineage already on
+    # disk, as a plain path does in test_registry_views_and_gated_lineage
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    root = (tmp_path / "registry").as_uri()
+    view = FeatureView(
+        name="aqi_info_v1",
+        entities=("entity_id",),
+        ttl=timedelta(days=7),
+        features=(("aqi", "double"),),
+        source="offline/aqi",
+    )
+    Registry(spark, root).apply(view)
+    assert Registry(spark, root).list_feature_views() == [view]
+    # the catalog lands under the root, not in a relative `file:` dir
+    assert (tmp_path / "registry" / "feature_views.json").exists()
+    assert list(cwd.iterdir()) == []
+    reg = Registry(spark, root)
     assert reg.record_lineage("pm2_5", "v1", "openweather", "pipeline.py", "2024-01-01") == 1
     assert reg.record_lineage("pm2_5", "v1", "other", "x.py", "2024-02-02") == 0
     assert reg.record_lineage("pm2_5", "v2", "openweather", "pipeline.py", "2024-01-02") == 1

@@ -161,14 +161,19 @@ def test_quality_filter_stream_equals_batch(spark, emb, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_refresh_stream_fresh_checkpoint_derives_base(spark, emb, tmp_path):
+@pytest.mark.parametrize("as_uri", [False, True], ids=["path", "file_uri"])
+def test_refresh_stream_fresh_checkpoint_derives_base(
+    spark, emb, tmp_path, monkeypatch, as_uri
+):
     """Round-7 ADVICE: a second stream run with a FRESH checkpoint must
     not collide on (n_id, version) with the first run's rows — the base
     version derives from the persisted index's max at job start, so a
     re-embedded id lands at a strictly higher version and current_index
     resolves the NEW codes deterministically. Mid-stream vacuum
     (round-7 verdict ask #1): compacting between the two runs leaves
-    current_index unchanged and the next refresh still appends fine."""
+    current_index unchanged and the next refresh still appends fine.
+    The base-version marker beside a ``file://`` checkpoint lands there,
+    not in a relative ``file:`` directory."""
     from aqi_featurestore_spark.operators.ann_index import (
         current_index,
         read_ann_index,
@@ -183,15 +188,22 @@ def test_refresh_stream_fresh_checkpoint_derives_base(spark, emb, tmp_path):
     )
     path = str(tmp_path / "annidx")
     write_ann_index(index, model, path)
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+
+    def ckpt(name):
+        return (tmp_path / name).as_uri() if as_uri else str(tmp_path / name)
 
     # run 1: stream the <100 ids in (fresh checkpoint, derived base=1)
     first = emb.where(F.col("vec_id") < 100).select("vec_id", "embedding")
     src1 = str(tmp_path / "s1")
     first.repartition(2).write.parquet(src1)
     run_index_refresh_stream(
-        spark, src1, "vec_id long, embedding array<float>", path,
-        str(tmp_path / "ck1"),
+        spark, src1, "vec_id long, embedding array<float>", path, ckpt("ck1")
     )
+    assert (tmp_path / "ck1.base_version.json").exists()
+    assert list(cwd.iterdir()) == []
     rindex, _ = read_ann_index(spark, path)
     v_after_1 = rindex.agg(F.max("version")).first()[0]
     assert v_after_1 >= 2
@@ -213,8 +225,7 @@ def test_refresh_stream_fresh_checkpoint_derives_base(spark, emb, tmp_path):
     src2 = str(tmp_path / "s2")
     shifted.repartition(2).write.parquet(src2)
     run_index_refresh_stream(
-        spark, src2, "vec_id long, embedding array<float>", path,
-        str(tmp_path / "ck2"),
+        spark, src2, "vec_id long, embedding array<float>", path, ckpt("ck2")
     )
     rindex3, rmodel3 = read_ann_index(spark, path)
     assert rindex3.agg(F.max("version")).first()[0] > v_after_1
