@@ -31,12 +31,17 @@ Three pieces:
   encode drops it (similarity._pq_sub_frame), and the re-rank drops a
   zero-norm candidate.
 
-Persistence (:func:`write_ann_index` / :func:`read_ann_index`):
-the index parquet is PARTITIONED BY ``list_id``, so a single-query
-online probe — whose cells :func:`probe_cells` computes driver-side in
-microseconds from the model — pushes a literal ``list_id IN (...)``
-filter and reads only ``n_probe`` of ``n_lists`` partitions
-(partition pruning, visible as PartitionFilters in the scan).
+Persistence (:func:`write_ann_index` / :func:`read_ann_index`): the
+index rows append through ``sources/fs.append`` and the two model
+tables are written once through ``fs.replace_dir``; each records its
+schema, and every read passes it back (``fs.reader``), so loading an
+index runs no schema-inference job — only the two model-table
+collects. The index parquet is PARTITIONED BY ``list_id``, so a
+single-query online probe — whose cells :func:`probe_cells` computes
+driver-side in microseconds from the model — pushes a literal
+``list_id IN (...)`` filter and reads only ``n_probe`` of ``n_lists``
+partitions (partition pruning, visible as PartitionFilters in the
+scan).
 Refreshes append rows with a higher ``version``; readers resolve
 current codes with the snapshot family's latest-per-key
 (operators/snapshot.py:31), so re-encoded documents supersede stale
@@ -81,6 +86,7 @@ from aqi_featurestore_spark.operators.similarity import (
     pq_fit_books,
 )
 from aqi_featurestore_spark.operators.snapshot import latest_as_of, vacuum_versions
+from aqi_featurestore_spark.sources import fs
 from aqi_featurestore_spark.sources.manifests import check_floor, read_floor
 
 
@@ -439,14 +445,12 @@ def write_ann_index(
     create-mode guard documents. A refit (centroid drift, measured
     recall decay) is a NEW index path + full re-encode, never an
     in-place model swap."""
-    from aqi_featurestore_spark.sources import fs as _fs
-
     spark = index.sparkSession
     if mode not in ("create", "refresh"):
         raise ValueError(f"unknown write_ann_index mode {mode!r}")
     if mode == "refresh":
         if not (
-            _fs.exists(spark, f"{path}/coarse") and _fs.exists(spark, f"{path}/books")
+            fs.exists(spark, f"{path}/coarse") and fs.exists(spark, f"{path}/books")
         ):
             raise ValueError(
                 f"write_ann_index(mode='refresh'): no persisted model tables at "
@@ -462,7 +466,7 @@ def write_ann_index(
                 "read_ann_index(path)'s model; a refit belongs at a new path."
             )
     if mode == "create":
-        if _fs.exists(spark, f"{path}/coarse") or _fs.exists(spark, f"{path}/books"):
+        if fs.exists(spark, f"{path}/coarse") or fs.exists(spark, f"{path}/books"):
             raise ValueError(
                 f"write_ann_index(mode='create'): model tables already exist at "
                 f"{path!r}. Refreshes must reuse the persisted model "
@@ -475,22 +479,24 @@ def write_ann_index(
             if model.coarse == "kmeans"
             else [[float(int(x)) for x in row] for row in model.cent_q]
         )
-        spark.createDataFrame(
+        coarse = spark.createDataFrame(
             [
                 (i, [float(x) for x in row], model.coarse)
                 for i, row in enumerate(cent_rows)
             ],
             "list_id int, cent array<double>, mode string",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/coarse")
-        spark.createDataFrame(
+        )
+        books = spark.createDataFrame(
             [
                 (s, c, [float(x) for x in model.books[s][c]], model.n_probe, model.dim)
                 for s in range(model.n_subspaces)
                 for c in range(len(model.books[s]))
             ],
             "s int, c int, centroid array<double>, n_probe int, dim int",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/books")
-    index.write.mode("append").partitionBy("list_id").parquet(f"{path}/index")
+        )
+        fs.replace_dir(spark, f"{path}/coarse", coarse.coalesce(1))
+        fs.replace_dir(spark, f"{path}/books", books.coalesce(1))
+    fs.append(spark, f"{path}/index", index, partition_by=("list_id",))
 
 
 def index_retention_floor(spark: SparkSession, path: str) -> int | None:
@@ -517,14 +523,18 @@ def read_ann_index(
     a pin below the vacuum retention floor RAISES — that history was
     compacted and resolving it would silently return the base snapshot."""
     check_floor(spark, path, as_of, "read_ann_index")
-    index = spark.read.parquet(f"{path}/index")
+
+    def table(name: str) -> DataFrame:
+        return fs.reader(spark, f"{path}/{name}").parquet(f"{path}/{name}")
+
+    index = table("index")
     if as_of is not None:
         index = index.where(F.col("version") <= int(as_of))
-    crows = spark.read.parquet(f"{path}/coarse").collect()
+    crows = table("coarse").collect()
     mode = crows[0]["mode"]
     cent = {r["list_id"]: list(r["cent"]) for r in crows}
     cent_sorted = [cent[i] for i in sorted(cent)]
-    book_rows = spark.read.parquet(f"{path}/books").collect()
+    book_rows = table("books").collect()
     n_sub = max(r["s"] for r in book_rows) + 1
     books: list[list[list[float]]] = [[] for _ in range(n_sub)]
     for s in range(n_sub):

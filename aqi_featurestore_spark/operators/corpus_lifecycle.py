@@ -60,9 +60,8 @@ def compact_corpus_store(
         return {"files_before": 0, "files_after": 0, "bytes": 0, "version": None}
     total = sum(sz for _p, sz in listing)
     n_files = max(1, -(-total // target_file_bytes))
-    fs.replace_dir(
-        spark, corpus_path, spark.read.parquet(corpus_path).repartition(n_files)
-    )
+    corpus = fs.reader(spark, corpus_path).parquet(corpus_path)
+    fs.replace_dir(spark, corpus_path, corpus.repartition(n_files))
     m = SnapshotManifests(spark, corpus_path)
     v = m.record("compact")
     m.set_floor(v)
@@ -120,7 +119,7 @@ def vacuum_corpus(
         .distinct()
         .localCheckpoint()
     )
-    corpus = spark.read.parquet(corpus_path)
+    corpus = fs.reader(spark, corpus_path).parquet(corpus_path)
     n_before = corpus.count()
     retained = corpus.join(F.broadcast(ids), id_col, "left_anti")
     # the rewrite touches every row anyway — right-size the file count
@@ -134,7 +133,7 @@ def vacuum_corpus(
     m = SnapshotManifests(spark, corpus_path)
     v = m.record("vacuum")
     m.set_floor(v)
-    n_after = spark.read.parquet(corpus_path).count()
+    n_after = fs.reader(spark, corpus_path).parquet(corpus_path).count()
     out = {
         "n_retired_corpus": n_before - n_after,
         "corpus_version": v,

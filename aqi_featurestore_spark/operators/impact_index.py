@@ -53,10 +53,17 @@ leaves the old marker serving the old fold and the orphaned new
 directory invisible; a RETRY writes another fresh directory — it can
 never append a second copy into a committed one, so retries are
 idempotent by construction (the defect the round-10 ADVICE found in
-the append-into-``fold_epoch=N`` layout). The marker lives in the fold
-watermark, not the data files, because a legitimate snapshot can be
-EMPTY (every token over the df cap) and empty parquet dirs carry no
-schema to infer.
+the append-into-``fold_epoch=N`` layout). The marker, not the data
+rows, carries the fold watermark, because a legitimate snapshot can be
+EMPTY (every token over the df cap).
+
+Store I/O is ``sources/fs``'s: the partial logs and each fresh fold
+directory are written through ``fs.append`` (a fold needs no swap: its
+fresh name and the marker already make a publish safe to crash and
+retry), and both record their schema, so every read (``fs.reader`` /
+``fs.read_dir``) is built without a schema-inference job, and an empty
+fold or a partial log whose every epoch was compacted or retired away
+reads as an empty frame.
 
 Lifecycle (round-10 verdict ask #1 — the E227 signature-index
 discipline applied here):
@@ -89,9 +96,12 @@ joins whose fanout the df cap bounds
 from __future__ import annotations
 
 import json
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from aqi_featurestore_spark.sources import fs
 
 #: posting-list band: tokens with df above the cap carry ~no idf signal
 #: and dominate join fanout — the E86 insight, shared with the plans'
@@ -101,10 +111,6 @@ DF_CAP = 100
 #: weights are integer micro-units (round(tf * idf * 1e6)) summed as
 #: int64 at serve time — cross-engine exact, no float accumulation.
 W_MICRO = 1e6
-
-_POSTINGS_SCHEMA = "doc_id long, token string, tf long"
-_WEIGHTS_SCHEMA = "doc_id long, token string, w long"
-
 
 def impact_postings(
     docs: DataFrame, *, id_col: str = "doc_id", text_col: str = "text"
@@ -137,28 +143,20 @@ def write_impact_partial(
     byte-identical rows (postings are a groupBy result, unique per
     (doc_id, token) within an epoch; the meta row is one deterministic
     count), so the reader's epoch-keyed distinct absorbs it."""
+    root, e = path.rstrip("/"), F.lit(int(epoch))
     p = impact_postings(docs, id_col=id_col, text_col=text_col)
-    (
-        p.withColumn("epoch", F.lit(int(epoch)))
-        .write.mode("append")
-        .partitionBy("epoch")
-        .parquet(f"{path.rstrip('/')}/postings")
+    spark = docs.sparkSession
+    fs.append(
+        spark, f"{root}/postings", p.withColumn("epoch", e), partition_by=("epoch",)
     )
-    (
-        docs.agg(F.count("*").cast("long").alias("n_docs"))
-        .withColumn("epoch", F.lit(int(epoch)))
-        .write.mode("append")
-        .partitionBy("epoch")
-        .parquet(f"{path.rstrip('/')}/meta")
-    )
+    n = docs.agg(F.count("*").cast("long").alias("n_docs")).withColumn("epoch", e)
+    fs.append(spark, f"{root}/meta", n, partition_by=("epoch",))
 
 
 # -- the fresh-dir + marker publish protocol ---------------------------------
 
 
 def _read_marker(spark: SparkSession, path: str, name: str) -> dict | None:
-    from aqi_featurestore_spark.sources import fs
-
     marker = f"{path.rstrip('/')}/{name}"
     if not fs.exists(spark, marker):
         return None
@@ -178,13 +176,9 @@ def _publish(
     garbage-collect every unreferenced sibling (previous folds AND
     orphans of crashed attempts). See the module docstring for why this
     makes both crashes and retries safe."""
-    import uuid
-
-    from aqi_featurestore_spark.sources import fs
-
     root = path.rstrip("/")
     rel = f"{family}/fold-{payload['fold_epoch']}-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(f"{root}/{rel}")
+    fs.append(spark, f"{root}/{rel}", df)
     fs.write_text_atomic(
         spark, f"{root}/{marker_name}", json.dumps({**payload, "dir": rel})
     )
@@ -195,19 +189,11 @@ def _publish(
     return rel
 
 
-def _marker_frame(
-    spark: SparkSession, path: str, marker: dict, family: str, schema: str
-):
-    """The data frame a marker publishes (empty-schema frame when the
-    fold is legitimately empty). Pre-round-11 markers carry no ``dir``
-    — they point at the old ``{family}/fold_epoch=W`` layout."""
-    from aqi_featurestore_spark.sources import fs
-
-    rel = marker.get("dir", f"{family}/fold_epoch={marker['fold_epoch']}")
-    fold_dir = f"{path.rstrip('/')}/{rel}"
-    if fs.list_data_files(spark, fold_dir):
-        return spark.read.parquet(fold_dir)
-    return None
+def _marker_frame(spark: SparkSession, path: str, marker: dict) -> DataFrame:
+    """The fold a marker publishes, read with its recorded schema (an
+    empty fold reads as an empty frame)."""
+    fold_dir = f"{path.rstrip('/')}/{marker['dir']}"
+    return fs.reader(spark, fold_dir).parquet(fold_dir)
 
 
 def _weights_fold(spark: SparkSession, path: str):
@@ -215,10 +201,7 @@ def _weights_fold(spark: SparkSession, path: str):
     m = _read_marker(spark, path, "weights.fold.json")
     if m is None:
         return None, None
-    w = _marker_frame(spark, path, m, "weights", _WEIGHTS_SCHEMA)
-    if w is None:
-        w = spark.createDataFrame([], _WEIGHTS_SCHEMA)
-    return int(m["fold_epoch"]), w
+    return int(m["fold_epoch"]), _marker_frame(spark, path, m)
 
 
 def _base_fold(spark: SparkSession, path: str):
@@ -227,10 +210,7 @@ def _base_fold(spark: SparkSession, path: str):
     m = _read_marker(spark, path, "postings_base.fold.json")
     if m is None:
         return None, None, 0
-    b = _marker_frame(spark, path, m, "postings_base", _POSTINGS_SCHEMA)
-    if b is None:
-        b = spark.createDataFrame([], _POSTINGS_SCHEMA)
-    return b, int(m["fold_epoch"]), int(m["n_docs"])
+    return _marker_frame(spark, path, m), int(m["fold_epoch"]), int(m["n_docs"])
 
 
 def _retired_total(spark: SparkSession, path: str) -> int:
@@ -240,12 +220,10 @@ def _retired_total(spark: SparkSession, path: str) -> int:
 
 def _partial_epochs(spark: SparkSession, path: str, table: str, above):
     """Distinct epoch set of a partial log strictly above ``above``."""
-    from aqi_featurestore_spark.sources import fs
-
-    tpath = f"{path.rstrip('/')}/{table}"
-    if not fs.list_data_files(spark, tpath):
+    parts = fs.read_dir(spark, f"{path.rstrip('/')}/{table}")
+    if parts is None:  # no partial was ever written
         return set()
-    parts = spark.read.parquet(tpath).select("epoch").distinct()
+    parts = parts.select("epoch").distinct()
     if above is not None:
         parts = parts.where(F.col("epoch") > above)
     return {int(r["epoch"]) for r in parts.collect()}
@@ -279,14 +257,15 @@ def _fold_inputs(spark: SparkSession, path: str):
     frames = [] if base is None else [base]
     n = base_n
     if complete:
+        root = path.rstrip("/")
         frames.append(
-            spark.read.parquet(f"{path.rstrip('/')}/postings")
+            fs.reader(spark, f"{root}/postings").parquet(f"{root}/postings")
             .where(F.col("epoch").isin(complete))  # snapshotted epoch set
             .distinct()  # epoch-keyed dedup: replayed epochs collapse
             .drop("epoch")
         )
         meta = (
-            spark.read.parquet(f"{path.rstrip('/')}/meta")
+            fs.reader(spark, f"{root}/meta").parquet(f"{root}/meta")
             .where(F.col("epoch").isin(complete))
             .distinct()
         )
@@ -328,16 +307,13 @@ def refresh_impact_weights(
             f"the streaming retry)"
         )
     if not force and cur_wm is not None and new_wm <= cur_wm:
-        n_docs = cur.get("n_docs")
-        if n_docs is None:  # pre-round-11 marker: derive from the fold
-            n_docs = n
         n_weights = None
         if count_weights:
             _wm, w_cur = _weights_fold(spark, path)
             n_weights = w_cur.count()
         return {
             "fold_epoch": cur_wm,
-            "n_docs": int(n_docs),
+            "n_docs": int(cur["n_docs"]),
             "n_weights": n_weights,
         }
     nf = spark.createDataFrame([(n,)], "n long")
@@ -425,8 +401,6 @@ def compact_impact_store(spark: SparkSession, path: str) -> dict:
     Returns {'fold_epoch', 'n_epochs_folded', 'files_before',
     'files_after'} (watermark None and zero folds when nothing is
     published or pending)."""
-    from aqi_featurestore_spark.sources import fs
-
     root = path.rstrip("/")
     wm, _w = _weights_fold(spark, path)
     files_before = len(fs.list_data_files(spark, root))
@@ -449,7 +423,7 @@ def compact_impact_store(spark: SparkSession, path: str) -> dict:
         return out
     new_wm = fold[-1]
     posts = (
-        spark.read.parquet(f"{root}/postings")
+        fs.reader(spark, f"{root}/postings").parquet(f"{root}/postings")
         .where(F.col("epoch").isin(fold))
         .distinct()
         .drop("epoch")
@@ -457,7 +431,7 @@ def compact_impact_store(spark: SparkSession, path: str) -> dict:
     if base is not None:
         posts = base.unionByName(posts)
     meta = (
-        spark.read.parquet(f"{root}/meta")
+        fs.reader(spark, f"{root}/meta").parquet(f"{root}/meta")
         .where(F.col("epoch").isin(fold))
         .distinct()
     )
@@ -513,19 +487,11 @@ def retire_from_impact_index(
     absorb rows the rewrite removed).
 
     Returns {'n_retired', 'fold_epoch', 'n_weights'}."""
-    from aqi_featurestore_spark.sources import fs
-
     root = path.rstrip("/")
     ids = retired_ids.select(F.col(id_col).alias("doc_id")).distinct()
     base, base_wm, base_n = _base_fold(spark, path)
-    have_partials = bool(fs.list_data_files(spark, f"{root}/postings"))
-    frames = []
-    if base is not None:
-        frames.append(base.select("doc_id"))
-    if have_partials:
-        frames.append(
-            spark.read.parquet(f"{root}/postings").select("doc_id")
-        )
+    partials = fs.read_dir(spark, f"{root}/postings")
+    frames = [df.select("doc_id") for df in (base, partials) if df is not None]
     n_hit = 0
     if frames:
         present = frames[0]
@@ -553,7 +519,7 @@ def retire_from_impact_index(
             base.join(F.broadcast(ids), "doc_id", "left_anti"),
             {"fold_epoch": int(base_wm), "n_docs": int(base_n)},
         )
-    if have_partials:
+    if partials is not None:
         fs.fold_in(
             spark,
             f"{root}/postings",

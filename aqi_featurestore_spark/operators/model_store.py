@@ -55,10 +55,13 @@ curation pipeline trains a quality classifier once per refresh and
 scores billions of documents against the frozen weights).
 
 100 TB shape: the model table is dim+1 rows per version — thousands of
-bytes. Writes are single-file appends; reads collect the resolved
-rows; scoring against the registry is the same zero-exchange
-broadcast-literal map `quality_classifier_select` runs. Vacuum is a
-driver-side rewrite of a model-sized table (never corpus-sized).
+bytes. Writes are single-file appends through ``sources/fs.append``,
+which records each table's schema on its first write; reads pass that
+schema (``fs.reader`` / ``fs.read_dir``), so no read runs a
+schema-inference job, and collect the resolved rows; scoring against
+the registry is the same zero-exchange broadcast-literal map
+`quality_classifier_select` runs. Vacuum is a driver-side rewrite of a
+model-sized table (never corpus-sized).
 Exactness: weights are BIGINT micro-units end to end, so a round-trip
 is bit-lossless by construction (pinned in tests/test_model_store.py).
 """
@@ -71,6 +74,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aqi_featurestore_spark.operators.snapshot import latest_as_of, vacuum_versions
+from aqi_featurestore_spark.sources import fs
 from aqi_featurestore_spark.sources.manifests import check_floor, read_floor
 
 #: meta-table schema (one row per published version)
@@ -107,8 +111,10 @@ def _meta_path(path: str) -> str:
 
 
 def _read_weights(spark: SparkSession, path: str) -> DataFrame:
-    """Weights rows ``(term_id, w_micro, version, dim)``."""
-    return spark.read.parquet(_weights_path(path))
+    """Weights rows ``(term_id, w_micro, version, dim)``, read with the
+    recorded schema (no inference job)."""
+    p = _weights_path(path)
+    return fs.reader(spark, p).parquet(p)
 
 
 def retention_floor(spark: SparkSession, path: str) -> int | None:
@@ -141,14 +147,15 @@ def write_model(
     spark = model_df.sparkSession
     # appending under the floor would resolve nondeterministically
     check_floor(spark, path, version, "write_model")
-    model_df.select(
+    weights = model_df.select(
         F.col("term_id").cast("int").alias("term_id"),
         F.col("w_micro").cast("long").alias("w_micro"),
         F.lit(int(version)).cast("long").alias("version"),
         F.lit(int(dim)).cast("int").alias("dim"),
-    ).coalesce(1).write.mode("append").parquet(_weights_path(path))
+    ).coalesce(1)
+    fs.append(spark, _weights_path(path), weights)
     if meta is not None:
-        spark.createDataFrame(
+        row = spark.createDataFrame(
             [
                 (
                     int(version),
@@ -162,7 +169,8 @@ def write_model(
                 )
             ],
             _META_SCHEMA,
-        ).coalesce(1).write.mode("append").parquet(_meta_path(path))
+        ).coalesce(1)
+        fs.append(spark, _meta_path(path), row)
 
 
 def current_model(models: DataFrame, *, as_of: int | None = None) -> DataFrame:
@@ -227,14 +235,11 @@ def list_models(spark: SparkSession, path: str) -> DataFrame:
     provenance (the listing never hides a version that exists). Meta
     rows SURVIVE vacuum (provenance is audit data, dim+1 bytes per
     version; only weight history compacts), so the listing stays
-    complete after retention kicks in."""
-    from aqi_featurestore_spark.sources import fs
-
-    meta = (
-        spark.read.parquet(_meta_path(path))
-        if fs.exists(spark, _meta_path(path))
-        else spark.createDataFrame([], _META_SCHEMA)
-    )
+    complete after retention kicks in. Both tables are read with their
+    recorded schemas, so building the listing launches no job."""
+    meta = fs.read_dir(spark, _meta_path(path))
+    if meta is None:  # no version was published with ``meta``
+        meta = spark.createDataFrame([], _META_SCHEMA)
     weights = _read_weights(spark, path)
     versions = weights.select("version", "dim").distinct()
     # left join from the weights-derived version list: a meta row with

@@ -30,6 +30,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 
 from aqi_featurestore_spark.functions import portable_hash as ph
 from aqi_featurestore_spark.functions.text import word_shingles
+from aqi_featurestore_spark.sources import fs
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -836,23 +837,20 @@ def write_signature_index(
         sigs, id_col=id_col, bands=bands,
         rows_per_band=num_hashes // bands,
     )
-    (
-        bb.select(id_col, "band", "bucket")
-        .write.mode("append")
-        .partitionBy("band")
-        .parquet(path)
+    fs.append(
+        docs.sparkSession,
+        path,
+        bb.select(id_col, "band", "bucket"),
+        partition_by=("band",),
     )
 
 
 def _sig_index_fold(spark, path: str, transform) -> dict:
     """``fs.fold_in`` over the band-partitioned index, plus its row
     count. A transform may empty the store (retiring every indexed
-    doc): a parquet read of the file-less store would raise "unable to
-    infer schema", so an empty listing reports rows=0 without reading."""
-    from aqi_featurestore_spark.sources import fs
-
+    doc); the recorded schema reads it as 0 rows."""
     stats = fs.fold_in(spark, path, transform, partition_by="band")
-    stats["rows"] = spark.read.parquet(path).count() if stats["files_after"] else 0
+    stats["rows"] = fs.reader(spark, path).parquet(path).count()
     return stats
 
 
@@ -908,7 +906,8 @@ def lsh_candidates_from_index(
     ``(d1=new_id, d2=corpus_id)``. The corpus side is a parquet read of
     fixed-width bucket rows — never re-shingled, never re-hashed; only
     the batch is sketched. Duplicate index rows from replayed appends
-    are absorbed by the distinct."""
+    are absorbed by the distinct. The index is read with its recorded
+    schema, so an index emptied by retirement yields no candidates."""
     spark = new_docs.sparkSession
     sigs = minhash_signatures(
         _spread(new_docs),
@@ -919,7 +918,7 @@ def lsh_candidates_from_index(
         sigs, id_col=id_col, bands=bands,
         rows_per_band=num_hashes // bands,
     ).alias("a")
-    idx = spark.read.parquet(index_path).distinct().alias("b")
+    idx = fs.reader(spark, index_path).parquet(index_path).distinct().alias("b")
     return (
         a.join(
             idx,

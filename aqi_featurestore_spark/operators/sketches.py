@@ -25,6 +25,14 @@ value per key (Redis overwrite, airflow/dags/load.py:141 behavior
 note); a register store keeps one current MAX per (group, idx) — the
 same latest-state discipline, reached through an idempotent merge
 instead of an overwrite.
+
+Store I/O is ``sources/fs``'s: every partial (HLL, KMV, zone, CMS) and
+the CMS base append through ``fs.append``, which records each store's
+schema on its first write and refuses a batch that differs from it;
+the compactions rewrite through ``fs.fold_in``; every read passes the
+recorded schema (``fs.reader`` / ``fs.read_dir``), so building a merge
+runs no schema-inference job, and a partial log whose epochs were all
+folded reads as an empty frame.
 """
 
 from __future__ import annotations
@@ -79,8 +87,9 @@ def hll_registers(
 def write_sketch_partial(regs: DataFrame, path: str) -> None:
     """APPEND a partial register file. Partials never overwrite —
     the store is a log of register files; the merge is read-time
-    (or fold into a base via :func:`compact_sketch_store`)."""
-    regs.write.mode("append").parquet(path)
+    (or fold into a base via :func:`compact_sketch_store`). The HLL,
+    KMV and zone partial logs all append here."""
+    fs.append(regs.sparkSession, path, regs)
 
 
 def read_merged_registers(
@@ -90,7 +99,7 @@ def read_merged_registers(
     bit-for-bit, to registers built directly over the union of every
     batch's tokens (the `hll_merge_rollup` theorem)."""
     return (
-        spark.read.parquet(path)
+        fs.reader(spark, path).parquet(path)
         .groupBy(*group_cols, "idx")
         .agg(F.max("m").alias("m"))
     )
@@ -156,7 +165,7 @@ def compact_sketch_store(
 
     stats = fs.fold_in(spark, path, _merge)
     stats["groups"] = (
-        spark.read.parquet(path).select(*group_cols).distinct().count()
+        fs.reader(spark, path).parquet(path).select(*group_cols).distinct().count()
     )
     return stats
 
@@ -199,7 +208,7 @@ def read_merged_kmv(
     bottom-min(K,·) of its batch)."""
     from pyspark.sql import Window
 
-    vals = spark.read.parquet(path).distinct()
+    vals = fs.reader(spark, path).parquet(path).distinct()
     w = Window.partitionBy(*group_cols).orderBy("h")
     return (
         vals.withColumn("rn", F.row_number().over(w))
@@ -270,7 +279,7 @@ def read_merged_zone(
 ) -> DataFrame:
     """Merge persisted zone partials: min-of-mins / max-of-maxes —
     equal to one direct pass over the union of every batch's rows."""
-    df = spark.read.parquet(path)
+    df = fs.reader(spark, path).parquet(path)
     aggs = []
     for c in stat_cols:
         aggs.append(F.min(f"min_{c}").alias(f"min_{c}"))
@@ -374,21 +383,21 @@ def write_cms_partial(cells: DataFrame, path: str, epoch: int) -> None:
     rows of a re-delivered epoch are byte-identical to the first
     delivery (cells is a groupBy result, unique per (group, j, col)
     within an epoch), so the reader's per-epoch distinct absorbs them."""
-    (
-        cells.withColumn("epoch", F.lit(int(epoch)))
-        .write.mode("append")
-        .partitionBy("epoch")
-        .parquet(f"{path.rstrip('/')}/partials")
+    fs.append(
+        cells.sparkSession,
+        f"{path.rstrip('/')}/partials",
+        cells.withColumn("epoch", F.lit(int(epoch))),
+        partition_by=("epoch",),
     )
 
 
 def _cms_base(spark: SparkSession, path: str):
-    """(base cells at the highest fold_epoch, watermark) or (None, None)."""
-    bpath = f"{path.rstrip('/')}/base"
-    if not fs.exists(spark, bpath):
+    """(base cells at the highest fold_epoch, watermark) or (None, None)
+    before the first compaction."""
+    base = fs.read_dir(spark, f"{path.rstrip('/')}/base")
+    wm = None if base is None else base.agg(F.max("fold_epoch")).first()[0]
+    if wm is None:
         return None, None
-    base = spark.read.parquet(bpath)
-    wm = base.agg(F.max("fold_epoch").alias("w")).collect()[0]["w"]
     return base.where(F.col("fold_epoch") == wm).drop("fold_epoch"), int(wm)
 
 
@@ -400,13 +409,9 @@ def read_merged_cms(
     identical cell counts from DIFFERENT epochs still sum while a
     replayed epoch collapses — the non-idempotent-merge bookkeeping."""
     base, wm = _cms_base(spark, path)
-    frames = []
-    if base is not None:
-        frames.append(base)
-    ppath = f"{path.rstrip('/')}/partials"
-    # a fully folded store leaves the partials dir empty of data files
-    if fs.list_data_files(spark, ppath):
-        parts = spark.read.parquet(ppath)
+    frames = [] if base is None else [base]
+    parts = fs.read_dir(spark, f"{path.rstrip('/')}/partials")
+    if parts is not None:
         if wm is not None:
             parts = parts.where(F.col("epoch") > wm)
         frames.append(parts.distinct().drop("epoch"))
@@ -496,16 +501,17 @@ def compact_cms_store(
 
     ``_pre_fold_hook``: test-only fault/interleave injection point,
     called between the epoch snapshot and the fold write."""
-    ppath = f"{path.rstrip('/')}/partials"
+    root = path.rstrip("/")
+    ppath = f"{root}/partials"
     base, wm = _cms_base(spark, path)
-    if not fs.list_data_files(spark, ppath):
-        return {"folded_through": wm, "files_after": len(fs.list_data_files(spark, path))}
-    parts = spark.read.parquet(ppath)
-    if wm is not None:
-        parts = parts.where(F.col("epoch") > wm)
-    epochs = sorted(
-        int(r["epoch"]) for r in parts.select("epoch").distinct().collect()
-    )
+    parts = fs.read_dir(spark, ppath)
+    epochs = []
+    if parts is not None:  # partials were written
+        if wm is not None:
+            parts = parts.where(F.col("epoch") > wm)
+        epochs = sorted(
+            int(r["epoch"]) for r in parts.select("epoch").distinct().collect()
+        )
     if not epochs:
         return {"folded_through": wm, "files_after": len(fs.list_data_files(spark, path))}
     new_wm = epochs[-1]
@@ -513,27 +519,23 @@ def compact_cms_store(
     if _pre_fold_hook is not None:
         _pre_fold_hook()
     snap = (
-        spark.read.parquet(ppath)
+        fs.reader(spark, ppath).parquet(ppath)
         .where(F.col("epoch").isin(epochs))
         .distinct()
         .drop("epoch")
     )
-    frames = [snap] if base is None else [base, snap]
-    merged = frames[0]
-    for f_ in frames[1:]:
-        merged = merged.unionByName(f_)
+    merged = snap if base is None else base.unionByName(snap)
     merged = merged.groupBy(*group_cols, "j", "col").agg(
         F.sum("c").cast("long").alias("c")
     )
-    (
-        merged.withColumn("fold_epoch", F.lit(new_wm))
-        .repartition(1)
-        .write.mode("append")
-        .partitionBy("fold_epoch")
-        .parquet(f"{path.rstrip('/')}/base")
+    fs.append(
+        spark,
+        f"{root}/base",
+        merged.withColumn("fold_epoch", F.lit(new_wm)).repartition(1),
+        partition_by=("fold_epoch",),
     )
     if wm is not None:
-        fs.delete(spark, f"{path.rstrip('/')}/base/fold_epoch={wm}")
+        fs.delete(spark, f"{root}/base/fold_epoch={wm}")
     for e in epochs:
         fs.delete(spark, f"{ppath}/epoch={e}")
     return {

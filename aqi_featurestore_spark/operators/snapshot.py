@@ -106,7 +106,7 @@ def vacuum_versions(
 
     if keep_versions < 1:
         raise ValueError(f"{caller}: keep_versions must be >= 1")
-    rows = spark.read.parquet(data_path)
+    rows = fs.reader(spark, data_path).parquet(data_path)
     versions = sorted(r.version for r in rows.select("version").distinct().collect())
     files_before = len(fs.list_data_files(spark, data_path))
     rows_before = rows.count()
@@ -128,7 +128,7 @@ def vacuum_versions(
         "files_before": files_before,
         "files_after": len(fs.list_data_files(spark, data_path)),
         "rows_before": rows_before,
-        "rows_after": spark.read.parquet(data_path).count(),
+        "rows_after": fs.reader(spark, data_path).parquet(data_path).count(),
         "min_as_of": cutoff,
     }
 

@@ -128,10 +128,8 @@ class Registry:
         return os.path.join(self.path, table)
 
     def _read_table(self, table: str, schema) -> DataFrame:
-        p = self._table_path(table)
-        if fs.exists(self.spark, p):
-            return self.spark.read.schema(schema).parquet(p)
-        return self.spark.createDataFrame([], schema)
+        df = fs.read_dir(self.spark, self._table_path(table))
+        return self.spark.createDataFrame([], schema) if df is None else df
 
     def _gated_append(self, table: str, schema, rows: list, keys: list[str]) -> int:
         new = self.spark.createDataFrame(rows, schema)
@@ -144,7 +142,7 @@ class Registry:
         # hint-based strategy choice for the pattern at scale.
         n = to_add.count()
         if n:
-            to_add.write.mode("append").parquet(self._table_path(table))
+            fs.append(self.spark, self._table_path(table), to_add)
         return n
 
     def record_lineage(

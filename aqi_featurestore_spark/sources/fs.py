@@ -10,22 +10,28 @@ an error. Going through Hadoop's FileSystem — the same abstraction the
 executors' parquet I/O uses — makes these probes correct on every scheme
 Spark itself can read.
 
-Every store rewrite goes through one of two helpers here, and no other
-module renames on the Hadoop FS:
+Every parquet store directory in the package is written and read
+through this module, which alone decides how a store table is laid out
+and typed:
 
+- :func:`append` adds a batch to a store (a log, a partial, a
+  versioned table, a fresh publish directory), checking it against the
+  recorded schema (:func:`check_append`);
 - :func:`replace_dir` swaps a whole directory (compaction, vacuum,
-  the online snapshot upsert);
+  the online snapshot upsert, a new ANN index's model tables);
 - :func:`fold_in` rewrites a set-semantic append log file by file
   (sketch stores, the signature index, the impact posting log).
 
-Both check every rename and never delete the only copy of a row.
+The two rewrites check every rename and never delete the only copy of
+a row; no other module renames on the Hadoop FS.
 
-Every writer of a feature-store directory records the Spark schema of
-what it wrote (:func:`record_schema`, ``_schema.json`` inside the data
-directory; Spark's file index and :func:`list_data_files` skip
-``_``-prefixed names), and every read of it goes through
-:func:`reader` or :func:`read_dir`, which pass that schema to
-``spark.read.schema`` — so no read runs a parquet schema-inference job.
+Every write into a store directory records the Spark schema of what
+it wrote (``_schema.json`` inside the data directory; Spark's file
+index and :func:`list_data_files` skip ``_``-prefixed names), and
+every read of it goes through :func:`reader` or :func:`read_dir`,
+which pass that schema to ``spark.read.schema`` — so no read runs a
+parquet schema-inference job, and a store whose every file was folded
+or retired away reads as an empty frame instead of failing to infer.
 A directory without the file (written before the record existed, or by
 hand) is read by inference. Reads never change the store: only writers
 call :func:`restore_swap` to finish a swap killed between its renames.
@@ -156,7 +162,7 @@ def restore_swap(spark: SparkSession, path: str) -> None:
         raise IOError(f"restore: rename {old} -> {path} failed")
 
 
-def record_schema(
+def _record_schema(
     spark: SparkSession, path: str, df: DataFrame, partition_by=()
 ) -> None:
     """Record in ``{path}/_schema.json`` the schema a read of ``path``
@@ -169,7 +175,7 @@ def record_schema(
 
 
 def recorded_schema(spark: SparkSession, path: str) -> StructType | None:
-    """The schema :func:`record_schema` stored for ``path``, or None."""
+    """The schema recorded for ``path`` by its first write, or None."""
     p = f"{path}/{SCHEMA_FILE}"
     if not exists(spark, p):
         return None
@@ -192,6 +198,51 @@ def read_dir(spark: SparkSession, path: str) -> DataFrame | None:
     if schema is not None:
         return spark.read.schema(schema).parquet(path)
     return spark.read.parquet(path) if exists(spark, path) else None
+
+
+def check_append(
+    spark: SparkSession, path: str, df: DataFrame
+) -> StructType | None:
+    """Ready the parquet store ``path`` for an append of ``df`` and
+    return its recorded schema (None without a record). Finishes a swap
+    killed between its renames (:func:`restore_swap`), then refuses a
+    batch whose column names or types differ from the record
+    (nullability is not compared) with ``ValueError``: every read takes
+    the recorded schema as given, so such rows would be misread, not
+    rejected. Touches no data, so a caller that probes the store before
+    it appends (the offline store's dedup) runs it first."""
+    restore_swap(spark, path)
+    recorded = recorded_schema(spark, path)
+    if recorded is not None:
+        want = {f.name: f.dataType.simpleString() for f in recorded}
+        got = {f.name: f.dataType.simpleString() for f in df.schema}
+        bad = [
+            f"{c} ({got.get(c, 'missing')}, recorded {want.get(c, 'absent')})"
+            for c in sorted(want.keys() | got.keys())
+            if want.get(c) != got.get(c)
+        ]
+        if bad:
+            raise ValueError(
+                f"append to {path!r}: columns differ from the schema "
+                f"recorded at its first write: {', '.join(bad)}"
+            )
+    return recorded
+
+
+def append(
+    spark: SparkSession, path: str, df: DataFrame, *, partition_by=()
+) -> None:
+    """Append ``df`` to the parquet store ``path``, partitioned by the
+    columns ``partition_by``, after :func:`check_append` (so a refused
+    batch writes no file). The first write into a store without data
+    files records its schema, before the data lands: a run killed in
+    between leaves a store that reads as empty, never one whose files
+    carry no record. A store whose files were written without a record
+    stays read by inference."""
+    if check_append(spark, path, df) is None and not list_data_files(spark, path):
+        _record_schema(spark, path, df, partition_by)
+    writer = df.write.partitionBy(*partition_by) if partition_by else df.write
+    writer.mode("append").parquet(path)
 
 
 def replace_dir(
@@ -217,7 +268,7 @@ def replace_dir(
     delete(spark, old)
     writer = df.write.partitionBy(*partition_by) if partition_by else df.write
     writer.mode("overwrite").parquet(tmp)
-    record_schema(spark, tmp, df, partition_by)
+    _record_schema(spark, tmp, df, partition_by)
     had = exists(spark, path)
     if had and not rename(spark, path, old):
         raise IOError(f"replace_dir: rename {path} -> {old} failed")
@@ -259,7 +310,8 @@ def fold_in(
     if not snapshot:
         return {"files_before": 0, "files_after": 0}
     # basePath keeps the partition column on a file-list read
-    out = transform(spark.read.option("basePath", root).parquet(*snapshot).distinct())
+    rows = reader(spark, root).option("basePath", root).parquet(*snapshot)
+    out = transform(rows.distinct())
     stamp = uuid.uuid4().hex[:8]
     tmp = f"{root}.swap-{stamp}"
     if partition_by is None:

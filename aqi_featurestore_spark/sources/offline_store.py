@@ -14,7 +14,7 @@ Reference behavior being rebuilt (SURVEY.md §2.1/§2.9):
   with a left-anti join on (entity, feature_timestamp) against only the
   partitions the new batch touches (not the whole store).
 - Schema: the first append records the batch's Spark schema, partition
-  columns included, as ``{path}/_schema.json`` (``fs.record_schema``);
+  columns included, as ``{path}/_schema.json`` (``fs.append``);
   ``compact`` re-records it with its rewrite. Every read (current,
   ``as_of``, the ``where_*`` pruned reads, the per-file stats scan)
   passes it to ``spark.read.schema`` through ``fs.reader``, so building
@@ -331,37 +331,19 @@ class OfflineStore:
             cols["day"] = F.dayofmonth(d)
         return df.withColumns(cols) if cols else df
 
-    def _check_schema(self, batch: DataFrame, recorded) -> None:
-        """Refuse a batch whose column names or types (nullability
-        aside) differ from the recorded schema: every read takes that
-        schema as given, so such rows would be misread, not rejected."""
-        want = {f.name: f.dataType.simpleString() for f in recorded}
-        got = {f.name: f.dataType.simpleString() for f in batch.schema}
-        bad = [
-            f"{c} ({got.get(c, 'missing')}, recorded {want.get(c, 'absent')})"
-            for c in sorted(want.keys() | got.keys())
-            if want.get(c) != got.get(c)
-        ]
-        if bad:
-            raise ValueError(
-                f"append to {self.path!r}: columns differ from the schema "
-                f"recorded at its first write: {', '.join(bad)}"
-            )
-
     def append(self, batch: DataFrame, *, dedup: bool = True) -> None:
         """Append feature rows; with ``dedup`` (default) drops rows whose
         (keys, ts) already exist — making re-runs idempotent. The existing
         side is pruned to the date range of the incoming batch, so the
         anti-join never scans the whole store.
 
-        The first append into an empty store records the batch's schema
-        (partition columns included); later batches must match it
-        (``ValueError`` before any file is written)."""
+        The batch goes through :func:`fs.append`: the first append into
+        a new store records the batch's schema (partition columns
+        included); later batches must match it (``ValueError`` from
+        :func:`fs.check_append`, run before the dedup probe reads the
+        store, so a refused batch launches no job and writes no file)."""
         batch = self._with_partition_cols(batch)
-        fs.restore_swap(self.spark, self.path)
-        recorded = fs.recorded_schema(self.spark, self.path)
-        if recorded is not None:
-            self._check_schema(batch, recorded)
+        fs.check_append(self.spark, self.path, batch)
         had = self.exists()
         batch = batch.dropDuplicates([*self.keys, self.ts])
         if dedup and had:
@@ -379,9 +361,7 @@ class OfflineStore:
                 on=[*self.keys, self.ts],
                 how="left_anti",
             )
-        batch.write.partitionBy(*_PARTS).mode("append").parquet(self.path)
-        if recorded is None and not had:
-            fs.record_schema(self.spark, self.path, batch, _PARTS)
+        fs.append(self.spark, self.path, batch, partition_by=_PARTS)
         self._record_version("append")
 
     # -- maintenance --------------------------------------------------------

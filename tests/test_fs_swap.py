@@ -212,3 +212,54 @@ def test_only_sources_fs_renames_on_the_hadoop_fs():
         if lines:
             offenders[str(py.relative_to(PACKAGE))] = lines
     assert offenders == {}
+
+
+def _chain(node: ast.AST) -> list[str]:
+    """Attribute names of a call chain, outermost first:
+    ``spark.read.option(...).parquet(p)`` -> parquet, option, read."""
+    names = []
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names
+
+
+def _store_io_bypasses(tree: ast.AST) -> list[int]:
+    lines = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            chain = _chain(node.func)
+            is_append = (
+                chain[:1] == ["mode"]
+                and [getattr(a, "value", None) for a in node.args] == ["append"]
+                and "write" in chain
+            )
+            if (chain[:1] == ["parquet"] and "read" in chain) or is_append:
+                lines.append(node.lineno)
+        name = getattr(node, "attr", getattr(node, "id", None))
+        if name in ("record_schema", "_record_schema"):
+            lines.append(node.lineno)
+    return sorted(set(lines))
+
+
+def test_only_sources_fs_reads_and_appends_store_tables():
+    """Every parquet store is appended through `fs.append` and read
+    through `fs.reader` / `fs.read_dir` with the schema recorded when it
+    was written. A direct `spark.read...parquet` or
+    `.write.mode("append")` elsewhere runs a schema-inference job, skips
+    the append guard, or leaves a store without a record. Streaming
+    sources/sinks (`readStream`/`writeStream`) and the overwrite sinks
+    of the streaming jobs are not stores; `sources/testdata.py` reads
+    declared read-only inputs."""
+    exempt = {PACKAGE / "sources" / "fs.py", PACKAGE / "sources" / "testdata.py"}
+    offenders = {}
+    for py in sorted(PACKAGE.rglob("*.py")):
+        if py in exempt:
+            continue
+        lines = _store_io_bypasses(ast.parse(py.read_text(), str(py)))
+        if lines:
+            offenders[str(py.relative_to(PACKAGE))] = lines
+    assert offenders == {}

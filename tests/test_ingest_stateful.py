@@ -378,6 +378,58 @@ def test_dedup_ingest_bootstraps_index_over_preexisting_corpus(
     assert stored == direct
 
 
+def test_dedup_ingest_bootstrap_killed_mid_write_reruns(
+    spark, tmp_path, monkeypatch
+):
+    """A gate killed inside the bootstrap's index write, after the
+    index's schema record and before its data landed, leaves an index
+    directory without data files. The replayed batch must bootstrap
+    again and still reject the near-dup of a pre-existing doc: an index
+    that merely exists would probe as no candidates and admit it."""
+    from aqi_featurestore_spark.operators import near_dedup
+    from aqi_featurestore_spark.sources import fs
+    from aqi_featurestore_spark.streaming.jobs import run_dedup_ingest_stream
+
+    src = tmp_path / "docs_src"
+    src.mkdir()
+    corpus, ckpt = str(tmp_path / "corpus"), str(tmp_path / "ckpt")
+    index = str(tmp_path / "sig_index")
+    schema = spark.createDataFrame([], _DOC_SCHEMA).schema
+    spark.createDataFrame(
+        [(1, _BASE), (3, _OTHER)], _DOC_SCHEMA
+    ).write.mode("append").parquet(corpus)
+    spark.createDataFrame([(10, _BASE), (11, _NOVEL)], _DOC_SCHEMA).write.mode(
+        "append"
+    ).parquet(str(src))
+
+    class KilledAfterRecord:
+        """``sources/fs`` whose append dies once its record is written."""
+
+        def __getattr__(self, name):
+            return getattr(fs, name)
+
+        def append(self, spark, path, df, *, partition_by=()):
+            fs._record_schema(spark, path, df, partition_by)
+            raise RuntimeError("injected kill inside the bootstrap write")
+
+    monkeypatch.setattr(near_dedup, "fs", KilledAfterRecord())
+    with pytest.raises(Exception):
+        run_dedup_ingest_stream(
+            spark, str(src), schema, corpus, ckpt,
+            threshold=0.5, signature_index_path=index,
+        )
+    monkeypatch.undo()
+    assert fs.exists(spark, index) and not fs.list_data_files(spark, index)
+    # replay (same checkpoint): the bootstrap re-runs, 10 is rejected
+    run_dedup_ingest_stream(
+        spark, str(src), schema, corpus, ckpt,
+        threshold=0.5, signature_index_path=index,
+    )
+    assert sorted(
+        r["doc_id"] for r in spark.read.parquet(corpus).collect()
+    ) == [1, 3, 11]
+
+
 def test_dedup_ingest_corpus_is_snapshot_versioned(spark, tmp_path):
     """Round-9 verdict ask #4: each admitted batch records a corpus
     version; `corpus as of batch N` replays bit-identically after later
